@@ -65,10 +65,17 @@ object GraftSession {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.sql.warehouse.dir", "/root/repo/target/warehouse")
+    .config("spark.sql.warehouse.dir", targetDir("warehouse"))
     // Streaming checkpoints for the bounded readStream verification path.
-    .config("spark.sql.streaming.checkpointLocation",
-      "/root/repo/target/checkpoints")
+    .config("spark.sql.streaming.checkpointLocation", targetDir("checkpoints"))
+
+  /** `target/<rel>` under the process working directory, absolute: where
+    * the engine keeps its warehouse, streaming checkpoints and generated
+    * corpora. Run from the repository root, that is the build's own
+    * `target/`.
+    */
+  def targetDir(rel: String): String =
+    java.nio.file.Paths.get("target", rel).toAbsolutePath.toString
 
   /** Target bytes of input per shuffle partition — Spark's own
     * `files.maxPartitionBytes` default (128 MB), so shuffle width tracks
@@ -186,13 +193,6 @@ object GraftSession {
       }
     }
   }
-
-  /** Back-compat shim (pre-r15 name): the extensions-injected installer
-    * makes explicit registration unnecessary on any graft-configured
-    * session; kept so older call sites keep compiling.
-    */
-  def registerPostReorderRules(s: SparkSession): Unit =
-    ensurePostReorderRules(s)
 
   /** Assert the session IS the complete engine. The post-reorder rules
     * are live state and always repairable — so repair them (idempotent)

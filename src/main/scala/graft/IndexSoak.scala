@@ -32,7 +32,7 @@ object IndexSoak {
       if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmrf))
       f.delete(); ()
     }
-    rmrf(new java.io.File("/root/repo/target/warehouse/graft_idx_soak.db"))
+    rmrf(new java.io.File(GraftSession.targetDir("warehouse/graft_idx_soak.db")))
     spark.sql("CREATE DATABASE IF NOT EXISTS graft_idx_soak")
     spark.catalog.setCurrentDatabase("graft_idx_soak")
 

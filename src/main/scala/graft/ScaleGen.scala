@@ -36,7 +36,7 @@ object ScaleGen {
 
   def main(args: Array[String]): Unit = {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val out = if (args.length > 1) args(1) else "/root/repo/target/sf1"
+    val out = if (args.length > 1) args(1) else GraftSession.targetDir("sf1")
     val replicas = if (args.length > 2) args(2).toInt else 10
     val mode = if (args.length > 3) args(3) else "uniform"
     require(Set("uniform", "zipf")(mode), s"unknown mode $mode")

@@ -20,9 +20,9 @@ object SearchSoak {
     spark.sparkContext.setLogLevel("WARN")
     val docs = graft.catalog.Tables.load(spark, dir, "documents")
       .select("doc_id", "text")
-    // Always under the repo's target dir — never beside a read-only corpus.
-    val idxPath = "/root/repo/target/trigram_index_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
+    // Always under target/ — never beside a read-only corpus.
+    val idxPath = GraftSession.targetDir(
+      "trigram_index_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
 
     val tb = System.nanoTime()
     Search.writeTrigramIndex(docs, idxPath)

@@ -48,7 +48,7 @@ object SkewSoak {
         // carry Zipf heads.
         .config("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
     ).getOrCreate()
-    GraftSession.registerPostReorderRules(spark)
+    GraftSession.ensurePostReorderRules(spark)
     spark.sparkContext.setLogLevel("WARN")
 
     val results = names.map { n =>

@@ -1,12 +1,21 @@
 package graft.catalog
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 
 /** Table catalog over the driver-generated parquet data (TESTDATA.md).
   *
   * Mirrors the reference catalog (`/root/reference/qpmodel/Catalog.cs:69-161`:
   * `TableDef` with ordinal-ordered columns) — here a table is simply a parquet
   * directory registered as a temp view; the schema travels with the file.
+  *
+  * Like a `TableDef`, registration is metadata only: each schema is read
+  * from the parquet footers on the driver (`FooterSchema.read`) and handed
+  * to the reader, so registering the catalog submits no Spark job (left
+  * to itself, `spark.read.parquet` infers every schema in a job of its
+  * own).
   *
   * Scale note: on a real cluster these would be catalog tables (ideally
   * bucketed on their join keys — orders/lineitem by orderkey) so repeated
@@ -52,15 +61,19 @@ object Tables {
   }
 
   // Track the LAST-registered dir per session (weakly, so sessions can be
-  // collected): re-registering the same dir re-reads 10 parquet footers
-  // per query — pure overhead in a 50-query verify/bench loop — but a
-  // different dir must re-register, else the views silently keep serving
-  // the previous dir's data.
+  // collected): re-registering the same dir re-lists 10 tables and
+  // re-reads their footers on the driver per query — pure overhead in a
+  // 50-query verify/bench loop — but a different dir must re-register,
+  // else the views silently keep serving the previous dir's data.
   private val registered =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, String]())
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    load(spark, dir, name, spark.sessionState.newHadoopConf())
+
+  private def load(spark: SparkSession, dir: String, name: String,
+                   conf: Configuration): DataFrame = {
     // events.ts is TIMESTAMP(NANOS) parquet, which Spark rejects natively;
     // nanosAsLong makes it arrive as LongType nanos, floor-converted here
     // to the engine's microsecond timestamps (same truncation DuckDB
@@ -69,14 +82,13 @@ object Tables {
     // conf must be live BEFORE the footer read below.
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if (broadcastable(name)) {
-      // Qualify exactly as Spark's file index does (fs + working dir), so
-      // rule-side equality against LogicalRelation rootPaths is exact.
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      replicatedRootPaths.add(fs.makeQualified(p))
-    }
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val file = s"$dir/$name.parquet"
+    val path = new Path(file)
+    // Qualify exactly as Spark's file index does (fs + working dir), so
+    // rule-side equality against LogicalRelation rootPaths is exact.
+    if (broadcastable(name))
+      replicatedRootPaths.add(path.getFileSystem(conf).makeQualified(path))
+    val raw = spark.read.schema(FooterSchema.read(spark, path, conf)).parquet(file)
     if (name == "events") normalizeTs(raw) else raw
   }
 
@@ -103,7 +115,8 @@ object Tables {
   }
 
   /** Register every table as a temp view (idempotent while the session
-    * stays on one dir; switching dirs re-registers).
+    * stays on one dir; switching dirs re-registers). Submits no Spark
+    * job; all tables share one Hadoop configuration.
     *
     * The dir-record and the view registration happen under one lock so a
     * concurrent caller can never observe a recorded dir whose views are
@@ -111,7 +124,10 @@ object Tables {
     */
   def registerAll(spark: SparkSession, dir: String): Unit =
     registered.synchronized {
-      if (registered.put(spark, dir) != dir)
-        names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
+      if (registered.put(spark, dir) != dir) {
+        val conf = spark.sessionState.newHadoopConf()
+        names.foreach(n =>
+          load(spark, dir, n, conf).createOrReplaceTempView(n))
+      }
     }
 }

@@ -313,7 +313,8 @@ case class VecSub(left: Expression, right: Expression)
   * three dot accumulators are exact integer sums, so the division inputs
   * are bit-identical; NaN cannot arise. The composable form is an
   * interpreted lambda that re-evaluates dot(qe, qe) per centroid; this
-  * computes it once and stays compiled.
+  * computes it once and stays compiled. An empty `cents` has no best
+  * centroid: the result is NULL, as `array_max` of an empty array is.
   */
 case class CoarseAssignBest(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -333,6 +334,7 @@ case class CoarseAssignBest(left: Expression, right: Expression)
   override def dataType: DataType = StructType(Seq(
     StructField("cs", DoubleType, nullable = false),
     StructField("cid", IntegerType, nullable = false)))
+  override def nullable: Boolean = true
   override def prettyName: String = "coarse_assign"
 
   override def nullSafeEval(a: Any, b: Any): Any =
@@ -340,7 +342,8 @@ case class CoarseAssignBest(left: Expression, right: Expression)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (x, y) =>
-      s"${ev.value} = graft.functions.VecKernels.coarseAssign($x, $y);")
+      s"""${ev.value} = graft.functions.VecKernels.coarseAssign($x, $y);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CoarseAssignBest =
@@ -360,9 +363,10 @@ case class CoarseAssignBest(left: Expression, right: Expression)
   *     c.cid AS cid))).cid)
   *
   * with the identical left-to-right IEEE d2 accumulation. subDim is each
-  * codeword's own length. The lambda form is THE per-corpus-row inner
-  * loop of every PQ encode (m × ks × subDim interpreted ops/row);
-  * this keeps it compiled. Requires `qe` to cover every subspace slice
+  * codeword's own length, so every codeword of `cb` must have the same
+  * length: subspace j starts at j × that length. The lambda form is THE
+  * per-corpus-row inner loop of every PQ encode (m × ks × subDim
+  * interpreted ops/row); this keeps it compiled. Requires `qe` to cover every subspace slice
   * (fails loudly otherwise — the lambda form would silently null-pad).
   */
 case class PqEncodeCodes(left: Expression, right: Expression)
@@ -462,7 +466,9 @@ object VecKernels {
     if (qq * bb == 0.0) 0.0 else ab / (math.sqrt(qq) * math.sqrt(bb))
   }
 
+  /** Best centroid as (cs, cid), or null when `cents` is empty. */
   def coarseAssign(qe: ArrayData, cents: ArrayData): org.apache.spark.sql.catalyst.InternalRow = {
+    if (cents.numElements() == 0) return null
     var qq = 0.0
     var i = 0
     while (i < qe.numElements()) {

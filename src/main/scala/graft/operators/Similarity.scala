@@ -274,9 +274,12 @@ object Similarity {
     * (IVF variants) keeps it for free instead of joining the encoded
     * frame back to itself to recover it (each such join was a full
     * corpus-sized shuffle+sort pair at scale).
+    *
+    * The subspace width is each codeword's own length, so the codebook
+    * must have uniform-length codewords (every builder here emits
+    * `subDim`-long ones).
     */
-  private def pqEncode(qc: DataFrame, cb: DataFrame, subDim: Int): DataFrame = {
-    val _ = subDim // carried by each codeword's own length
+  private def pqEncode(qc: DataFrame, cb: DataFrame): DataFrame = {
     // Native PqEncodeCodes (optimization r16): the nested
     // transform/array_min/aggregate/zip_with lambda chain — m × ks ×
     // subDim interpreted ops per corpus row, THE encode hot loop — as
@@ -319,7 +322,7 @@ object Similarity {
     */
   private def pqAdc(qc: DataFrame, queries: DataFrame, cb: DataFrame,
                     k: Int, m: Int, subDim: Int): DataFrame = {
-    val scored = pqEncode(qc, cb, subDim)
+    val scored = pqEncode(qc, cb)
       .crossJoin(broadcast(pqLut(queries, cb, subDim)))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("adc_dot", adcDot(m))
@@ -370,7 +373,7 @@ object Similarity {
           x => x.getField("cid"))).as("p_cid"))
     // Fine: global PQ codebook; ADC only inside probed lists.
     val cb = pqCodebook(qc, m, ks, subDim)
-    val scored = pqEncode(lists, cb, subDim)
+    val scored = pqEncode(lists, cb)
       .join(broadcast(probes.join(pqLut(queries, cb, subDim), "q_id")),
         col("cid") === col("p_cid") && col("vec_id") =!= col("q_id"))
       .withColumn("adc_dot", adcDot(m))
@@ -455,7 +458,7 @@ object Similarity {
       .select(col("q_id"),
         explode(slice(array_sort(col("__s")), 1, nprobe)).as("p"))
       .select(col("q_id"), col("p.cid").as("p_cid"), col("p.qd").as("q_ce_dot"))
-    val scored = pqEncode(resid.select("vec_id", "cid", "qe"), cb, subDim)
+    val scored = pqEncode(resid.select("vec_id", "cid", "qe"), cb)
       .join(broadcast(probes.join(pqLut(queries, cb, subDim), "q_id")),
         col("cid") === col("p_cid") && col("vec_id") =!= col("q_id"))
       .withColumn("adc_dot", col("q_ce_dot") + adcDot(m))

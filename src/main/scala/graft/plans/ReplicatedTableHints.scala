@@ -24,7 +24,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * also keeps the rule active for config-only users
   * (`spark.sql.extensions` alone) and for `newSession()` clones, which
   * do not inherit `experimental.extraOptimizations` (where the
-  * post-reorder rules live — see GraftSession.registerPostReorderRules
+  * post-reorder rules live — see GraftSession.ensurePostReorderRules
   * for the placement contrast). Idempotent: a side with an existing
   * hint is left untouched.
   */

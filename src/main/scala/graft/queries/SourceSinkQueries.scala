@@ -48,7 +48,8 @@ object SourceSinkQueries {
     */
   val copyCsv: QueryDef = QueryDef("copy_csv_roundtrip",
     (s, dir) => {
-      val out = s"/root/repo/target/copy_csv/${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val out = graft.GraftSession.targetDir(
+        s"copy_csv/${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
       Tables.load(s, dir, "supplier")
         .write.mode("overwrite").option("sep", "|").csv(out)
       val schema = StructType(Seq(

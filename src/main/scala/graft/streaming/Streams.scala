@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
@@ -42,13 +43,14 @@ object Streams {
   private def tableStream(spark: SparkSession, dir: String,
                           name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val schema = spark.read.parquet(path).schema
+    val hPath = new org.apache.hadoop.fs.Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    // The catalog's footer read: the schema without an inference job.
+    val schema = FooterSchema.read(spark, hPath, conf)
     // Resolve through the Hadoop filesystem, not java.io.File — on a
     // non-local URI (hdfs://, s3a://) File.isDirectory is always false,
     // which would silently take the glob branch and match zero files.
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val isDir = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-      .getFileStatus(hPath).isDirectory
+    val isDir = hPath.getFileSystem(conf).getFileStatus(hPath).isDirectory
     if (isDir)
       spark.readStream.schema(schema).parquet(path)
     else

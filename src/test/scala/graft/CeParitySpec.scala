@@ -49,7 +49,7 @@ class CeParitySpec extends AnyFunSuite {
       if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmrf))
       f.delete(); ()
     }
-    rmrf(new java.io.File("/root/repo/target/warehouse/graft_ce.db"))
+    rmrf(new java.io.File(GraftSession.targetDir("warehouse/graft_ce.db")))
     s.sql("CREATE DATABASE IF NOT EXISTS graft_ce")
     s.catalog.setCurrentDatabase("graft_ce")
     val ddl = Files.readString(

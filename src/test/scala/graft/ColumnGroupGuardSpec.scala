@@ -26,7 +26,7 @@ import graft.catalog.ExtendedStats
   */
 class ColumnGroupGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val sfDir = "/root/testdata/sf0.01"
+  private val sfDir = TestSpark.sf001Dir
   private var spark: SparkSession = _
   private val cols = Seq("l_partkey", "l_suppkey")
   private val tables =

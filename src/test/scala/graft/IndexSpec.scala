@@ -32,7 +32,7 @@ class IndexSpec extends AnyFunSuite {
       if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmrf))
       f.delete(); ()
     }
-    rmrf(new java.io.File(s"/root/repo/target/warehouse/$db.db"))
+    rmrf(new java.io.File(GraftSession.targetDir(s"warehouse/$db.db")))
     s.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     s.catalog.setCurrentDatabase(db)
   }

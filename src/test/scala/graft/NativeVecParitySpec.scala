@@ -120,6 +120,31 @@ class NativeVecParitySpec extends AnyFunSuite {
     }
   }
 
+  test("CoarseAssignBest on an empty centroid array is NULL, interpreted " +
+    "and codegen, like the lambda form") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{InterpretedMutableProjection, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateMutableProjection
+    import org.apache.spark.sql.types._
+    val centsT = ArrayType(StructType(Seq(
+      StructField("cid", IntegerType), StructField("ce", ArrayType(DoubleType)))))
+    val e = graft.functions.CoarseAssignBest(
+      Literal.create(Seq(1.0, 2.0), ArrayType(DoubleType)),
+      Literal.create(Seq.empty, centsT))
+    assert(e.nullable)
+    assert(e.eval(InternalRow.empty) == null)
+    assert(new InterpretedMutableProjection(Seq(e))(InternalRow.empty).isNullAt(0))
+    assert(GenerateMutableProjection.generate(Seq(e))(InternalRow.empty).isNullAt(0))
+    // Through a projection over a non-foldable column, as operators use it.
+    val r = spark.range(1).selectExpr("array(cast(id + 1 AS double)) AS qe",
+        "filter(array(named_struct('cid', cast(id AS int), 'ce', " +
+          "array(1D))), c -> false) AS cents")
+      .select(vec.coarseAssignBest(col("qe"), col("cents")).as("nat"),
+        expr(hofAssign).as("hof"))
+      .collect().head
+    assert(r.isNullAt(0) && r.isNullAt(1))
+  }
+
   test("PqEncodeCodes == transform/array_min/aggregate/zip_with lambda, with ties") {
     val subDim = 4
     val m = 3

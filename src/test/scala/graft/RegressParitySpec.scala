@@ -200,7 +200,7 @@ class RegressParitySpec extends AnyFunSuite {
     }
     // in-memory catalog forgets tables across JVMs; managed locations
     // persist — clear so CREATE TABLE can re-land
-    rmrf(new java.io.File("/root/repo/target/warehouse/graft_tpchd.db"))
+    rmrf(new java.io.File(GraftSession.targetDir("warehouse/graft_tpchd.db")))
     s.sql("CREATE DATABASE IF NOT EXISTS graft_tpchd")
     s.catalog.setCurrentDatabase("graft_tpchd")
     val ddl = Files.readString(

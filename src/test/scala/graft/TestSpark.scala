@@ -21,6 +21,10 @@ object TestSpark {
 
   val sfDir = "/root/testdata/sf0.001"
 
+  /** The sf0.01 corpus beside [[sfDir]] — the plan-golden gate scale. */
+  val sf001Dir: String =
+    new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01").getPath
+
   /** Micro-table fixtures from FIXTURES.md §1 (reference
     * `Catalog.createBuildInTestTables`, Catalog.cs:259-310: tables a/b/c/d
     * with rows (0,1,2,3),(1,2,3,4),(2,3,4,5); r carries NULLs for

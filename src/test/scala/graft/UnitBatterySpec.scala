@@ -95,7 +95,7 @@ class UnitBatterySpec extends AnyFunSuite {
       if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmrf))
       f.delete(); ()
     }
-    rmrf(new java.io.File("/root/repo/target/warehouse/graft_unit.db"))
+    rmrf(new java.io.File(GraftSession.targetDir("warehouse/graft_unit.db")))
     s.sql("CREATE DATABASE IF NOT EXISTS graft_unit")
     s.catalog.setCurrentDatabase("graft_unit")
     UnitMiner.loadMicroTables(s)
@@ -153,7 +153,7 @@ class UnitBatterySpec extends AnyFunSuite {
       if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmrf))
       f.delete(); ()
     }
-    rmrf(new java.io.File("/root/repo/target/warehouse/graft_unit_neg.db"))
+    rmrf(new java.io.File(GraftSession.targetDir("warehouse/graft_unit_neg.db")))
     s.sql("CREATE DATABASE IF NOT EXISTS graft_unit_neg")
     s.catalog.setCurrentDatabase("graft_unit_neg")
     UnitMiner.loadMicroTables(s)
@@ -188,7 +188,7 @@ class UnitBatterySpec extends AnyFunSuite {
       if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmrf))
       f.delete(); ()
     }
-    rmrf(new java.io.File("/root/repo/target/warehouse/graft_unit_str.db"))
+    rmrf(new java.io.File(GraftSession.targetDir("warehouse/graft_unit_str.db")))
     s.sql("CREATE DATABASE IF NOT EXISTS graft_unit_str")
     s.catalog.setCurrentDatabase("graft_unit_str")
     val results = UnitMiner.replayAll(s, events)
