@@ -116,26 +116,50 @@ object Bench {
     best
   }
 
+  // Locale.ROOT: Bench's and Run's lines are parsed as JSON; f"%.3f"
+  // under a comma-decimal default locale would emit 2,640 and corrupt
+  // them.
+  private[graft] def s3(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** Untimed hygiene between queries, shared by Bench and [[Run]]. */
+  def cleanup(spark: SparkSession): Unit = {
+    // localCheckpoint() persists at the RDD level, which clearCache()
+    // (CacheManager-only) never touches — without this, every
+    // checkpointing headliner's blocks accumulate across the whole
+    // sequence and later queries measure the query PLUS the residue's
+    // memory pressure (r12: graph_triangles 2.97 s standalone vs ~4.4 s
+    // mid-sequence). Safe between queries: each build() constructs fresh
+    // frames, so no later query can reference an earlier query's
+    // checkpointed RDD.
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    // Shuffle files and broadcast blocks are freed by ContextCleaner
+    // only when the driver GCs their references — left alone, a
+    // single-JVM sequence carries every earlier query's shuffle dirs
+    // and broadcasts until the JVM happens to collect. Forcing the
+    // collection between queries is untimed and makes each query
+    // start from the same storage state (measured r13: together with
+    // the unpersist, graph_triangles mid-sequence 4.5 s -> ~3.2 s).
+    System.gc()
+    // Defensive: queries are expected to own their materializations
+    // (the LSH helpers localCheckpoint instead of cache since r7), but
+    // any future cache() slipping into a query would otherwise have
+    // later passes served from the CacheManager's plan match,
+    // flattering min-of-3 into a cache-read benchmark. Drop all cached
+    // plans so every pass pays full recompute.
+    spark.catalog.clearCache()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.build(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus))
+    val cpus = GraftSession.cpus()
+    val spark = GraftSession.local(cpus)
     // The bench must time the COMPLETE engine — fail loudly if a future
     // edit bypasses GraftSession.build and drops the post-reorder rules.
     GraftSession.requireComplete(spark)
-    spark.sparkContext.setLogLevel("WARN")
 
-    // SPARK_GRAFT_BENCH_ONLY: comma-separated name substrings — local
-    // A/B iteration only (isolating one family to attribute a
-    // mid-sequence delta); the driver never sets it, so its artifact
-    // always carries the full set.
-    val onlyFilter = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').toSeq)
     val defs = Queries.all.filter(_.bench)
-      .filter(d => onlyFilter.forall(_.exists(d.name.contains)))
     val times = scala.collection.mutable.LinkedHashMap[String, Double]()
     val passes = scala.collection.mutable.LinkedHashMap[
       String, scala.collection.mutable.ArrayBuffer[Double]]()
@@ -162,32 +186,8 @@ object Bench {
                 .take(200).replaceAll("[\"\\\\\n\r\t]", " ")
         }
         }
-        // Per-query hygiene: localCheckpoint() persists at the RDD level,
-        // which clearCache() (CacheManager-only) never touches — without
-        // this, every checkpointing headliner's blocks accumulate across
-        // the whole sequence and later queries measure the query PLUS the
-        // residue's memory pressure (r12: graph_triangles 2.97 s
-        // standalone vs ~4.4 s mid-sequence). Safe between queries: each
-        // build() constructs fresh frames, so no later query can reference
-        // an earlier query's checkpointed RDD.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        // Shuffle files and broadcast blocks are freed by ContextCleaner
-        // only when the driver GCs their references — left alone, a
-        // single-JVM sequence carries every earlier query's shuffle dirs
-        // and broadcasts until the JVM happens to collect. Forcing the
-        // collection between queries is untimed and makes each query
-        // start from the same storage state (measured r13: together with
-        // the unpersist, graph_triangles mid-sequence 4.5 s -> ~3.2 s).
-        System.gc()
+        cleanup(spark)
       }
-      // Defensive: queries are expected to own their materializations
-      // (the LSH helpers localCheckpoint instead of cache since r7), but
-      // any future cache() slipping into a query would otherwise have
-      // later passes served from the CacheManager's plan match,
-      // flattering min-of-3 into a cache-read benchmark. Drop all cached
-      // plans between passes so every pass pays full recompute.
-      spark.catalog.clearCache()
     }
     // Warmup pass: JIT + whole-stage-codegen compilation + parquet footer
     // cache dominate a cold first query (~8s vs ~1s steady-state); the
@@ -202,18 +202,14 @@ object Bench {
     // Host-speed probes bracket the timed passes (r9 showed per-core
     // throughput can halve MID-session): cal_probe_s before, end after.
     val probeStart = calProbe()
-    val probePar = calProbePar(cpus.toInt)
-    val probeMem = calProbeMem(math.min(16, cpus.toInt))
+    val probePar = calProbePar(cpus)
+    val probeMem = calProbeMem(math.min(16, cpus))
     val c0 = System.nanoTime()
     once(record = false)
     val coldTotal = (System.nanoTime() - c0) / 1e9
     (1 to 3).foreach(_ => once(record = true))
     val probeEnd = calProbe()
     errors.keys.foreach { k => times.remove(k); passes.remove(k) }
-    // Locale.ROOT: the driver json.loads this line; f"%.3f" under a
-    // comma-decimal default locale would emit 2,640 and corrupt it.
-    def s3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = times.map { case (k, v) => "\"" + k + "\":" + s3(v) }
       .mkString("{", ",", "}")
     val ps = passes.map { case (k, vs) =>
@@ -230,8 +226,7 @@ object Bench {
     // handles (~3 KB for 31 queries). Optimization r16: the line stays
     // COMPACT (min-of-warm-passes per query + errors + probes) and the
     // full per-pass detail moves, unabridged and in the previous
-    // format, to the `detail` sidecar file — no number is dropped, and
-    // bench_compose/bench_trend read the sidecar.
+    // format, to the `detail` sidecar file — no number is dropped.
     val detailPath = java.nio.file.Paths.get("target", "bench_detail.json")
     java.nio.file.Files.createDirectories(detailPath.getParent)
     java.nio.file.Files.write(detailPath,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Multi-JVM execution check: run the headline + LSH/CC query families
   * under an arbitrary master (notably `local-cluster[2,8,4096]` — two
@@ -28,13 +28,25 @@ import org.apache.spark.sql.SparkSession
   *       > /tmp/cluster.txt
   *     diff <(grep CLUSTERCHK /tmp/local.txt) <(grep CLUSTERCHK /tmp/cluster.txt)
   *
-  * Fingerprint = (row count, XOR of per-row xxhash64, exact DECIMAL sum
-  * of the same hashes) over `to_json(struct(*))` rows — order-insensitive
-  * (all three are commutative) and duplicate-sensitive (count + sum catch
-  * what XOR's self-cancellation would miss), with no driver-side
-  * collect beyond the 3-number aggregate.
+  * The per-query fingerprint is [[fingerprint]], with no driver-side
+  * collect beyond its 3-number aggregate.
   */
 object ClusterCheck {
+
+  /** Order-insensitive result fingerprint, `n=<count> xor=<xor>
+    * sum=<sum>`: row count, XOR of per-row xxhash64 and exact DECIMAL sum
+    * of the same hashes over `to_json(struct(*))` rows — order-insensitive
+    * (all three are commutative), duplicate-sensitive (count + sum catch
+    * what XOR's self-cancellation would miss) and overflow-free
+    * (DECIMAL(38,0)). Equal results give equal strings.
+    */
+  def fingerprint(df: DataFrame): String = {
+    val row = df.selectExpr("xxhash64(to_json(struct(*))) AS h")
+      .selectExpr("count(*) AS n", "bit_xor(h) AS hx",
+        "sum(CAST(h AS DECIMAL(38,0))) AS hs")
+      .collect()(0)
+    s"n=${row.get(0)} xor=${row.get(1)} sum=${row.get(2)}"
+  }
 
   /** The families whose executors do nontrivial work: every bench
     * headliner plus the LSH / connected-components / PQ surface.
@@ -85,17 +97,11 @@ object ClusterCheck {
       b.config("spark.executor.memory", "4g")
     }
     val spark = GraftSession.build(b)
-    spark.sparkContext.setLogLevel("WARN")
     var failed = 0
     checkNames().foreach { name =>
       val d = Queries.byName(name)
       try {
-        val row = d.build(spark, sfDir)
-          .selectExpr("xxhash64(to_json(struct(*))) AS h")
-          .selectExpr("count(*) AS n", "bit_xor(h) AS hx",
-            "sum(CAST(h AS DECIMAL(38,0))) AS hs")
-          .collect()(0)
-        println(s"CLUSTERCHK $name n=${row.get(0)} xor=${row.get(1)} sum=${row.get(2)}")
+        println(s"CLUSTERCHK $name ${fingerprint(d.build(spark, sfDir))}")
       } catch {
         case e: Throwable =>
           failed += 1

@@ -77,6 +77,17 @@ object GraftSession {
   def targetDir(rel: String): String =
     java.nio.file.Paths.get("target", rel).toAbsolutePath.toString
 
+  /** Recursively delete [[targetDir]]`(rel)` if it exists, so a harness
+    * that re-creates a managed database starts from an empty location.
+    */
+  def removeTargetDir(rel: String): Unit = {
+    def rmrf(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmrf))
+      f.delete(); ()
+    }
+    rmrf(new java.io.File(targetDir(rel)))
+  }
+
   /** Target bytes of input per shuffle partition — Spark's own
     * `files.maxPartitionBytes` default (128 MB), so shuffle width tracks
     * scan width.
@@ -118,17 +129,21 @@ object GraftSession {
     math.max(cores, needed).toInt
   }
 
-  /** Local session for tests / entry. Shuffle-partition precedence:
-    * `SPARK_GRAFT_SHUFFLE_PARTITIONS` (explicit override) >
-    * [[derivedShufflePartitions]] when the caller names its input dir >
-    * core count (callers with no single input dir, e.g. plan-only
-    * harnesses, where the data never exceeds core-count scale).
+  /** Local core count: `SPARK_GRAFT_CPUS` when set, else every core the
+    * host offers. The one place that variable is read.
     */
-  def local(cores: Int = 32, dataDir: Option[String] = None): SparkSession = {
-    val parts = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .map(_.toInt)
-      .orElse(dataDir.map(derivedShufflePartitions(_, cores)))
-      .getOrElse(cores)
+  def cpus(): Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Local session for tests / entry. Shuffle partitions are
+    * [[derivedShufflePartitions]] when the caller names its input dir,
+    * else the core count (callers with no single input dir, e.g.
+    * plan-only harnesses, where the data never exceeds core-count
+    * scale). An explicit count is a runtime conf away
+    * (`graft.Run --conf=spark.sql.shuffle.partitions=N`).
+    */
+  def local(cores: Int = cpus(), dataDir: Option[String] = None): SparkSession = {
+    val parts = dataDir.map(derivedShufflePartitions(_, cores)).getOrElse(cores)
     build(
       SparkSession.builder()
         .master(s"local[$cores]")

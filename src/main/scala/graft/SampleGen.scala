@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Deterministic sub-corpus sampler: makes a scale corpus's heavy
   * oracle families (LSH / connected-components / ANN / q51 windows)
   * DuckDB-tractable without excluding them from the 100× correctness
@@ -30,11 +28,7 @@ object SampleGen {
     val (src, out) = (args(0), args(1))
     val m = if (args.length > 2) args(2).toInt else 49
     require(m % 5 != 0, "modulus must be coprime to 5 (decontamination split)")
-    val spark = GraftSession.build(
-      SparkSession.builder()
-        .master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     def load(name: String) = graft.catalog.Tables.load(spark, src, name)

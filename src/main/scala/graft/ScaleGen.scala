@@ -40,11 +40,7 @@ object ScaleGen {
     val replicas = if (args.length > 2) args(2).toInt else 10
     val mode = if (args.length > 3) args(3) else "uniform"
     require(Set("uniform", "zipf")(mode), s"unknown mode $mode")
-    val spark = GraftSession.build(
-      SparkSession.builder()
-        .master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     generate(spark, src, out, replicas, mode)
     spark.stop()
   }

@@ -43,8 +43,7 @@ object ScaleInvariants {
     require(args.length >= 2, "usage: ScaleInvariants <bigDir> <baseDir> [stride]")
     val (dir, baseDir) = (args(0), args(1))
     val stride = if (args.length > 2) args(2).toLong else 100000L
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, Some(dir))
+    val spark = GraftSession.local(dataDir = Some(dir))
     val docs = graft.catalog.Tables.load(spark, dir, "documents")
       .select("doc_id", "text")
     val baseDocs = graft.catalog.Tables.load(spark, baseDir, "documents")

@@ -208,8 +208,7 @@ object SqlRunner {
       "usage: SqlRunner <sfDir> <file.sql> [more.sql ...] [--explain] [--analyze] [--out]" +
         " | SqlRunner <sfDir> --repl [--explain] [--analyze]")
     val sfDir = positional(0)
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, Some(sfDir))
+    val spark = GraftSession.local(dataDir = Some(sfDir))
     catalog.Tables.registerAll(spark, sfDir)
     if (isRepl) {
       println(s"graft SQL repl on $sfDir — end statements with ';', " +

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -13,18 +12,13 @@ object Verify {
     // only; the driver always invokes with exactly (sfDir, outDir).
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(',').toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // The session under test must be the configured engine (AQE/CBO/UTC),
     // not a bare default SparkSession.
-    val spark = GraftSession.build(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus))
+    val spark = GraftSession.local()
     // The correctness gate must grade the COMPLETE engine — fail loudly
     // if a future edit bypasses GraftSession.build and silently drops
     // the post-reorder experimental rules.
     GraftSession.requireComplete(spark)
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     var failed = 0
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>

@@ -113,7 +113,7 @@ object TemporalQueries {
   /** The UNSALTED twin of [[skewSalted]]: the same join left to AQE's
     * runtime skew handling instead of explicit salting. Same oracle —
     * both mitigation paths must produce the identical aggregate. On a
-    * Zipf-skewed corpus SkewSoak demonstrates the
+    * Zipf-skewed corpus `graft.Run`'s skew recipe demonstrates the
     * `SortMergeJoin(skew=true)` split firing on exactly this shape
     * (sf10zipf, hot l_orderkey at 10% of the fact table); at uniform
     * test scale it is an ordinary join.

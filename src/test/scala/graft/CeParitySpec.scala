@@ -45,11 +45,7 @@ class CeParitySpec extends AnyFunSuite {
   test("reference CE battery: our CBO beats the reference's estimator " +
     "on gmean and worst-case q-error; group counts estimated exactly") {
     val s = TestSpark.spark.newSession()
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmrf))
-      f.delete(); ()
-    }
-    rmrf(new java.io.File(GraftSession.targetDir("warehouse/graft_ce.db")))
+    GraftSession.removeTargetDir("warehouse/graft_ce.db")
     s.sql("CREATE DATABASE IF NOT EXISTS graft_ce")
     s.catalog.setCurrentDatabase("graft_ce")
     val ddl = Files.readString(

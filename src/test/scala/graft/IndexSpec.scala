@@ -28,11 +28,7 @@ class IndexSpec extends AnyFunSuite {
   }
 
   private def freshDb(s: SparkSession, db: String): Unit = {
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmrf))
-      f.delete(); ()
-    }
-    rmrf(new java.io.File(GraftSession.targetDir(s"warehouse/$db.db")))
+    GraftSession.removeTargetDir(s"warehouse/$db.db")
     s.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     s.catalog.setCurrentDatabase(db)
   }

@@ -194,13 +194,9 @@ class RegressParitySpec extends AnyFunSuite {
     */
   private lazy val tpchD: SparkSession = {
     val s = TestSpark.spark.newSession()
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmrf))
-      f.delete(); ()
-    }
     // in-memory catalog forgets tables across JVMs; managed locations
     // persist — clear so CREATE TABLE can re-land
-    rmrf(new java.io.File(GraftSession.targetDir("warehouse/graft_tpchd.db")))
+    GraftSession.removeTargetDir("warehouse/graft_tpchd.db")
     s.sql("CREATE DATABASE IF NOT EXISTS graft_tpchd")
     s.catalog.setCurrentDatabase("graft_tpchd")
     val ddl = Files.readString(

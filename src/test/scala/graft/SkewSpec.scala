@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -66,9 +68,9 @@ class SkewSpec extends AnyFunSuite {
     // The runtime path that handles skew WITHOUT salting: AQE detects an
     // oversized shuffle partition and splits it, marking the join node
     // `skew=true`. Thresholds are scaled to the fixture (hot key ~6 MB
-    // of unsafe rows vs a 256 KB threshold) exactly as SkewSoak scales
-    // them to the sf1 corpus — the mechanism, not the absolute sizes, is
-    // the contract. Broadcast is disabled to force the shuffle join AQE
+    // of unsafe rows vs a 256 KB threshold) exactly as graft.Run's skew
+    // recipe scales them to the sf1 corpus — the mechanism, not the
+    // absolute sizes, is the contract. Broadcast is disabled to force the shuffle join AQE
     // must rescue; confs are restored so other suites see none of this.
     val conf = spark.conf
     val keys = Seq(
@@ -92,8 +94,14 @@ class SkewSpec extends AnyFunSuite {
         .selectExpr("IF(id % 10 = 0, id % 1000, 0L) AS k", "id AS v")
       val right = spark.range(1000).selectExpr("id AS rk", "id * 2 AS w")
       val joined = left.join(right, col("k") === col("rk"))
-      val plan = finalPlan(joined)
-      assert(plan.contains("skew=true"), plan)
+      // Through Run's execution path: the split must fire AND the final
+      // stage must really run — an undrained execution leaves the join's
+      // numOutputRows at 0.
+      Run.execute(joined)
+      assert(Run.skewJoins(joined) >= 1, joined.queryExecution.executedPlan)
+      val smj = new AdaptiveSparkPlanHelper {}.collect(
+        joined.queryExecution.executedPlan) { case j: SortMergeJoinExec => j }
+      assert(smj.map(_.metrics("numOutputRows").value) == Seq(400000L))
     } finally saved.foreach {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None) => conf.unset(k)

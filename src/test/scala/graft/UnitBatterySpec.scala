@@ -91,11 +91,7 @@ class UnitBatterySpec extends AnyFunSuite {
     assert(checks.size == 310, s"mined ${checks.size} checks")
 
     val s = TestSpark.spark.newSession()
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmrf))
-      f.delete(); ()
-    }
-    rmrf(new java.io.File(GraftSession.targetDir("warehouse/graft_unit.db")))
+    GraftSession.removeTargetDir("warehouse/graft_unit.db")
     s.sql("CREATE DATABASE IF NOT EXISTS graft_unit")
     s.catalog.setCurrentDatabase("graft_unit")
     UnitMiner.loadMicroTables(s)
@@ -149,11 +145,7 @@ class UnitBatterySpec extends AnyFunSuite {
     assert(negLines.size == 27, s"mined ${negLines.size} negative cases")
 
     val s = TestSpark.spark.newSession()
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmrf))
-      f.delete(); ()
-    }
-    rmrf(new java.io.File(GraftSession.targetDir("warehouse/graft_unit_neg.db")))
+    GraftSession.removeTargetDir("warehouse/graft_unit_neg.db")
     s.sql("CREATE DATABASE IF NOT EXISTS graft_unit_neg")
     s.catalog.setCurrentDatabase("graft_unit_neg")
     UnitMiner.loadMicroTables(s)
@@ -184,11 +176,7 @@ class UnitBatterySpec extends AnyFunSuite {
     val checks = events.collect { case c: UnitMiner.Check => c }
     assert(checks.size == 5, s"mined ${checks.size} checks")
     val s = TestSpark.spark.newSession()
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmrf))
-      f.delete(); ()
-    }
-    rmrf(new java.io.File(GraftSession.targetDir("warehouse/graft_unit_str.db")))
+    GraftSession.removeTargetDir("warehouse/graft_unit_str.db")
     s.sql("CREATE DATABASE IF NOT EXISTS graft_unit_str")
     s.catalog.setCurrentDatabase("graft_unit_str")
     val results = UnitMiner.replayAll(s, events)
