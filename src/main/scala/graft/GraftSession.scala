@@ -80,12 +80,15 @@ object GraftSession {
   /** Recursively delete [[targetDir]]`(rel)` if it exists, so a harness
     * that re-creates a managed database starts from an empty location.
     */
-  def removeTargetDir(rel: String): Unit = {
+  def removeTargetDir(rel: String): Unit = removeDir(targetDir(rel))
+
+  /** Recursively delete the file or directory at `path`, if it exists. */
+  def removeDir(path: String): Unit = {
     def rmrf(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmrf))
       f.delete(); ()
     }
-    rmrf(new java.io.File(targetDir(rel)))
+    rmrf(new java.io.File(path))
   }
 
   /** Target bytes of input per shuffle partition — Spark's own

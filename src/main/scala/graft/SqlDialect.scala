@@ -227,11 +227,7 @@ object SqlDialect {
       spark.read.parquet(staging).write.mode("overwrite").insertInto(table)
     } finally {
       // the staging copy is table-sized — deleting it is not optional
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(staging))
+      GraftSession.removeDir(staging)
     }
     spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
       s"('graft.index.$name' = '${idxCols.mkString(",")}')")

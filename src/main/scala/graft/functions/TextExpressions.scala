@@ -28,9 +28,11 @@ object TextKernels {
     * order — bit-identical to
     * `array_distinct(transform(sequence(0, size(ws)-n),
     *    i -> concat(ws[i], ' ', ..., ws[i+n-1])))`
-    * for arrays with at least `n` non-null elements; shorter arrays
-    * yield an empty result (callers filter `size(ws) >= n` first, which
-    * also guards the composable form's descending-`sequence` hazard).
+    * for arrays with at least `n` elements: like `concat`, a window that
+    * contains a null element yields a null shingle (kept once, at its
+    * first occurrence); shorter arrays yield an empty result (callers
+    * filter `size(ws) >= n` first, which also guards the composable
+    * form's descending-`sequence` hazard).
     */
   def shingles(arr: ArrayData, n: Int): ArrayData = {
     val sz = arr.numElements()
@@ -39,9 +41,14 @@ object TextKernels {
     var i = 0
     while (i <= sz - n) {
       val parts = new Array[UTF8String](n)
+      var hasNull = false
       var j = 0
-      while (j < n) { parts(j) = arr.getUTF8String(i + j); j += 1 }
-      out.add(UTF8String.concatWs(sep, parts: _*))
+      while (j < n) {
+        if (arr.isNullAt(i + j)) hasNull = true
+        else parts(j) = arr.getUTF8String(i + j)
+        j += 1
+      }
+      out.add(if (hasNull) null else UTF8String.concatWs(sep, parts: _*))
       i += 1
     }
     new GenericArrayData(out.toArray.asInstanceOf[Array[Any]])
@@ -261,7 +268,9 @@ case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
       s"word_shingles expects array<string>, got ${t.sql}")
   }
 
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  // null elements in the input make null shingles
+  override def dataType: DataType = ArrayType(StringType,
+    child.dataType.asInstanceOf[ArrayType].containsNull)
   override def prettyName: String = "word_shingles"
 
   override def nullSafeEval(input: Any): Any =

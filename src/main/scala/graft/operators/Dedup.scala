@@ -582,6 +582,15 @@ object Dedup {
   /** Character 4-gram Jaccard over a bounded candidate set (the MinHash
     * band candidates) — a second, finer similarity measure for the pairs
     * the LSH sweep surfaced. Candidate-bounded: never all-pairs.
+    *
+    * Short-text contract: a text shorter than `n` code points has an
+    * empty gram set. Paired with a longer text its Jaccard is 0.0; when
+    * BOTH texts of a candidate pair are that short the Jaccard is 0/0,
+    * which is NULL with `spark.sql.ansi.enabled=false` and a
+    * DIVIDE_BY_ZERO error with it on (Spark 4's default). Candidates
+    * come from word 3-shingles, so at the default n = 4 only a text of
+    * at most 3 code points that still splits into 3 words (a run of
+    * spaces) can be that short.
     */
   def charNgramJaccard(docs: DataFrame, n: Int = 4): DataFrame = {
     val cand = minHashPairs(docs, threshold = 0.0)

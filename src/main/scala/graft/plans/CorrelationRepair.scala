@@ -1,6 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{Star, UnresolvedAlias, UnresolvedAttribute, UnresolvedFunction, UnresolvedHaving, UnresolvedOrdinal, UnresolvedRelation, UnresolvedStar}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, BinaryComparison, CaseWhen, EqualNullSafe, EqualTo, ExprId, Expression, GreaterThan, Literal, Not, Or, PredicateHelper, ScalarSubquery, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, Filter, GlobalLimit, Join, JoinHint, LocalLimit, LogicalPlan, Project, Sort, SubqueryAlias}
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 /** Engine-surface repair of multi-level correlated subqueries — the
   * r13 battery rewrites promoted to a user-reachable capability (r14)
@@ -8,31 +13,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * qpmodel's binder resolves an outer reference from ANY enclosing
   * block for ANY schema (`/root/reference/qpmodel/Expr.cs:992-1021`);
-  * Spark's analyzer resolves one level. Through r13 the gap was bridged
-  * only inside the mined-battery replay ([[graft.regress.UnitMiner]]);
-  * r14 exposed the rewrites at [[graft.SqlRunner]] but classified bare
-  * columns by the reference micro-schema convention (column
-  * `<letter><digit>` belongs to table `<letter>`), so the capability
-  * only reached battery-shaped schemas. r15 replaces that with
-  * CATALOG-RESOLVED attribution ([[StatementSchema]]): every table
-  * named in the statement's FROM/JOIN clauses is resolved against the
-  * session catalog (`spark.table`), and a bare identifier classifies to
-  * the unique resolved table whose schema carries it — ambiguity (two
-  * in-scope tables sharing the name) or an unresolvable identifier
-  * DECLINES the rewrite, so the original analyzer error stands. The
-  * same three rewrites, each firing ONLY after Spark's analyzer rejects
-  * the statement:
+  * Spark's analyzer resolves one level. The repairs are pattern-matching
+  * transforms over the PARSED, UNRESOLVED Catalyst plan (the Spark SQL
+  * paper's rule idiom): the parser already gives every block, conjunct
+  * and column reference as a tree node, so no rewrite re-scans SQL text.
+  * Column ownership is CATALOG-RESOLVED ([[StatementSchema]]): every
+  * relation the statement names is resolved against the session
+  * catalog, and a bare column classifies to the unique resolved table
+  * whose schema carries it — ambiguity (two in-scope tables sharing the
+  * name) or an unresolvable column DECLINES the rewrite, so the
+  * original analyzer error stands. The same three rewrites, each firing
+  * ONLY after Spark's analyzer rejects the statement:
   *
   *  - [[flattenTwoLevel]]: conjunctive two-level correlation → the
-  *    inner block becomes a GROUPED derived table in the middle FROM
-  *    (grouped by its correlated equality keys, `max(expr)` +
-  *    `count(*)`), joined on the moved equalities with a
-  *    `raise_error` guard — scalar semantics preserved EXACTLY: no
-  *    match → the comparison is UNKNOWN (row dropped, as with a NULL
-  *    scalar), >1 match per binding → the same runtime error the
-  *    subquery form raises (r15, closing the r14 advisory: the
-  *    ungrouped flatten silently duplicated middle rows when the
-  *    inner key matched more than one row);
+  *    inner block becomes a GROUPED derived table in the middle FROM,
+  *    with a `raise_error` guard that keeps scalar semantics exact;
   *  - [[hoistTwoLevelScalar]]: DISJUNCTIVE middle WHERE (where a
   *    flatten would be wrong) → the middle-skipping inner scalar is
   *    precomputed as a grouped left join at the outer block;
@@ -40,13 +35,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    grouped select list → aggregate first, then apply the list
   *    (schema-free: its guards are structural only).
   *
+  * Each emits the tree the equivalent rewritten SQL text parses to,
+  * with the generated names `__q<n>_<key>`, `__q<n>_v`, `__q<n>_c`,
+  * `__iv`, `__s`, `__k`, `__v`, `__c` and `__g`.
+  *
   * Gated by `spark.graft.sql.correlationRepair` (default false — the
   * repair is OPT-IN: a clean statement is never rewritten either way,
   * but an engine should not silently transform failing SQL unless
   * asked). [[graft.SqlRunner]] consults the conf on its statement
-  * path; UnitMiner replays the battery through the same functions.
+  * path; UnitMiner replays the battery through the same repair loop.
   */
-object CorrelationRepair {
+object CorrelationRepair extends PredicateHelper {
 
   val ConfKey = "spark.graft.sql.correlationRepair"
 
@@ -55,19 +54,15 @@ object CorrelationRepair {
 
   // ------------------------------------------------- schema resolution
 
-  /** Catalog-resolved column→table attribution for ONE statement: the
-    * table names appearing after FROM/JOIN (including depth-0 comma
-    * lists), each resolved through the session catalog — temp views
-    * and catalog tables alike — to its lowercase column set. Names
-    * that do not resolve (aliases, derived-table keywords) are simply
-    * absent; classification then declines on their columns, which is
-    * the safe direction (the rewrite refuses, the original analyzer
-    * error stands).
+  /** Catalog-resolved column→table attribution for ONE statement: every
+    * relation the parsed statement names, in any block, each resolved
+    * through the session catalog — temp views and catalog tables
+    * alike — to its lowercase column set. Names that do not resolve
+    * (CTE names, missing tables) are simply absent; classification
+    * then declines on their columns, which is the safe direction (the
+    * rewrite refuses, the original analyzer error stands).
     */
   final case class StatementSchema(tables: Map[String, Set[String]]) {
-    def has(table: String): Boolean = tables.contains(table.toLowerCase)
-    def columnsOf(table: String): Set[String] =
-      tables.getOrElse(table.toLowerCase, Set.empty)
     /** In-scope tables whose schema carries `col`. */
     def owners(col: String): Set[String] = {
       val c = col.toLowerCase
@@ -76,327 +71,96 @@ object CorrelationRepair {
   }
 
   object StatementSchema {
-    private val FromJoin = """(?i)\b(?:from|join)\s+([A-Za-z_][\w.]*)""".r
-    private val Ident = """^\s*,\s*([A-Za-z_][\w.]*)""".r
-
-    /** FROM/JOIN table-name candidates, including `from a, b c` comma
-      * lists (first token of each comma item; a following bare token —
-      * or `AS alias` pair — is skipped; a `(` ends the list — the
-      * derived table's own FROM matches the regex separately). String
-      * literals are masked before scanning: a value like
-      * `'copied from nation'` must not mint a phantom table, which
-      * would both poison the ambiguity test and false-trigger the
-      * hoist's middle-scans-outer-table capture guard (r15 review).
-      */
-    private[graft] def fromCandidates(sql: String): Seq[String] = {
-      val t = maskLiterals(sql)
-      val stop = Set("where", "group", "order", "having", "limit",
-        "join", "inner", "left", "right", "full", "cross", "on",
-        "union", "except", "intersect")
-      val Tok = """^\s+([A-Za-z_]\w*)""".r
-      val out = Seq.newBuilder[String]
-      FromJoin.findAllMatchIn(t).foreach { m =>
-        out += m.group(1)
-        // comma continuation after the item (and optional alias /
-        // `AS alias` pair)
-        var rest = t.substring(m.end)
-        var more = true
-        while (more) {
-          val afterAlias = Tok.findFirstMatchIn(rest) match {
-            case Some(a) if a.group(1).equalsIgnoreCase("as") =>
-              // explicit `AS alias`: consume the keyword AND the alias
-              val r1 = rest.substring(a.end)
-              Tok.findFirstMatchIn(r1).map(b => r1.substring(b.end))
-                .getOrElse(r1)
-            case Some(a) if a.group(1).equalsIgnoreCase("on") =>
-              // JOIN … ON <cond>: the joined item's condition runs to
-              // the next depth-0 comma, which CONTINUES the comma list
-              // (`from t1 join t2 on t1.k = t2.k, t3` — stopping at
-              // `on` lost t3, r15 review); a clause keyword or an
-              // unbalanced ')' ends the list instead.
-              skipOnCondition(rest.substring(a.end))
-            case Some(a) if !stop(a.group(1).toLowerCase) =>
-              rest.substring(a.end)
-            case _ => rest
-          }
-          Ident.findFirstMatchIn(afterAlias) match {
-            case Some(i) => out += i.group(1); rest = afterAlias.substring(i.end)
-            case None => more = false
-          }
-        }
-      }
-      out.result().distinct
-    }
-
-    /** Tail of `r` (pre-masked text) from the depth-0 comma that
-      * continues a FROM comma list past a JOIN's ON condition; ""
-      * when a clause keyword or the enclosing block's ')' ends the
-      * list first (so `order by c1, c2` never reads as table items).
-      */
-    private def skipOnCondition(r: String): String = {
-      val clauseEnd = Set("where", "group", "order", "having", "limit",
-        "union", "except", "intersect", "join", "inner", "left",
-        "right", "full", "cross")
-      var bal = 0; var k = 0
-      while (k < r.length) {
-        val ch = r.charAt(k)
-        if (ch == '(') bal += 1
-        else if (ch == ')') { bal -= 1; if (bal < 0) return "" }
-        else if (bal == 0) {
-          if (ch == ',') return r.substring(k)
-          if (ch.isLetter || ch == '_') {
-            val st = k
-            while (k + 1 < r.length && (r.charAt(k + 1).isLetterOrDigit ||
-              r.charAt(k + 1) == '_')) k += 1
-            if (clauseEnd(r.substring(st, k + 1).toLowerCase)) return ""
-          }
-        }
-        k += 1
-      }
-      ""
-    }
-
-    /** `sql` with the CONTENT of single-quoted literals blanked to
-      * spaces (quotes kept, indices preserved) — lets regex scanners
-      * run without matching keywords inside values.
-      */
-    private[graft] def maskLiterals(sql: String): String = {
-      val a = sql.toCharArray
-      var i = 0; var inQ = false
-      while (i < a.length) {
-        if (inQ) { if (a(i) == '\'') inQ = false else a(i) = ' ' }
-        else if (a(i) == '\'') inQ = true
-        i += 1
-      }
-      new String(a)
-    }
-
-    def of(spark: SparkSession, sql: String): StatementSchema =
-      StatementSchema(fromCandidates(sql).flatMap { name =>
+    def of(spark: SparkSession, plan: LogicalPlan): StatementSchema =
+      StatementSchema(relations(plan).distinct.flatMap { name =>
         scala.util.Try(spark.table(name).schema.fieldNames.toSet)
           .toOption.map(cols =>
             name.toLowerCase -> cols.map(_.toLowerCase))
       }.toMap)
   }
 
-  private val SqlKeywords = Set(
-    "and", "or", "not", "where", "select", "from", "as", "case", "when",
-    "then", "else", "end", "null", "between", "in", "like", "is",
-    "distinct", "true", "false", "exists", "group", "by", "order",
-    "having", "limit", "on", "join", "inner", "left", "right", "full",
-    "outer", "cross", "union", "all", "except", "intersect", "asc",
-    "desc", "interval", "date", "cast", "div")
+  /** Names of the relations `plan` scans, subqueries included. */
+  private def relations(plan: LogicalPlan): Seq[String] =
+    plan.collectWithSubqueries { case r: UnresolvedRelation => r.tableName }
 
-  /** (paren depth, inside-string) immediately before `pos` — the state
-    * every structural scanner must agree on: single-quoted literals are
-    * CONTENT, so an `and`/`or`/keyword/paren inside one neither splits
-    * a conjunct nor moves the depth (the r15 review: the tokenizers
-    * skipped quotes but the split/keyword scanners did not, so a value
-    * like 'ASIA and EUROPE' mis-split the inner WHERE and silently
-    * declined — or mis-routed — the repair).
-    */
-  private[graft] def scanState(t: String, pos: Int): (Int, Boolean) = {
-    var bal = 0; var i = 0; var inQ = false
-    while (i < pos && i < t.length) {
-      val c = t.charAt(i)
-      if (inQ) { if (c == '\'') inQ = false }
-      else if (c == '\'') inQ = true
-      else if (c == '(') bal += 1
-      else if (c == ')') bal -= 1
-      i += 1
-    }
-    (bal, inQ)
+  /** Unqualified column names in `e`, lowercased. */
+  private def bare(e: Expression): Seq[String] = e.collect {
+    case a: UnresolvedAttribute if a.nameParts.size == 1 =>
+      a.nameParts.head.toLowerCase
   }
 
-  /** Bare (unqualified, non-call) identifier tokens of a SQL fragment,
-    * lowercased: single-quoted strings are skipped, tokens adjacent to
-    * `.` are qualified references, a token whose next non-space char is
-    * `(` is a function call, keywords are dropped.
-    */
-  private[graft] def bareCols(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') { // skip string literal
-        i += 1
-        while (i < s.length && s.charAt(i) != '\'') i += 1
-        i += 1
-      } else if (c.isLetter || c == '_') {
-        val start = i
-        while (i < s.length &&
-          (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_')) i += 1
-        val tok = s.substring(start, i).toLowerCase
-        val prevDot = start > 0 && s.charAt(start - 1) == '.'
-        var j = i
-        while (j < s.length && s.charAt(j) == ' ') j += 1
-        val nextDot = i < s.length && s.charAt(i) == '.'
-        val call = j < s.length && s.charAt(j) == '('
-        if (!prevDot && !nextDot && !call && !SqlKeywords(tok))
-          out += tok
-      } else i += 1
-    }
-    out.result()
+  /** The `A` of each qualified `A.B` reference in `e`, lowercased. */
+  private def qualifierNames(e: Expression): Seq[String] = e.collect {
+    case a: UnresolvedAttribute if a.nameParts.size > 1 =>
+      a.nameParts.head.toLowerCase
   }
 
-  /** Qualifier tokens of `A.B` identifier references outside string
-    * literals, lowercased (the `A` of each qualified reference): the
-    * piece [[bareCols]] deliberately drops, needed where a conjunct's
-    * relationship to a specific TABLE must be decided — a conjunct
-    * like `customer.c_acctbal > 0` carries no bare tokens at all, so a
-    * bare-token-only test reads it as reference-free (the r15 review:
-    * flattenTwoLevel classified exactly that shape as FREE and moved
-    * an inner-local filter out of the derived table). Decimal
-    * constants (`0.5`) don't qualify (the token before the dot must
-    * start a letter/underscore identifier) and dots inside literals
-    * are skipped.
+  /** Subquery expressions of `plan`'s own blocks (not of nested ones). */
+  private def subqueries(plan: LogicalPlan): Seq[SubqueryExpression] =
+    plan.flatMap(_.expressions.flatMap(_.collect {
+      case s: SubqueryExpression => s }))
+
+  /** `t0 AND … AND tn` as the parser builds it from SQL text: a
+    * balanced tree, so a rewrite emits the tree its text form parses to.
     */
-  private[graft] def qualifiers(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') { // skip string literal
-        i += 1
-        while (i < s.length && s.charAt(i) != '\'') i += 1
-        i += 1
-      } else if (c.isLetter || c == '_') {
-        val start = i
-        while (i < s.length &&
-          (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_')) i += 1
-        if (i < s.length && s.charAt(i) == '.' &&
-            (start == 0 || s.charAt(start - 1) != '.'))
-          out += s.substring(start, i).toLowerCase
-      } else i += 1
+  private def conjoin(ts: Seq[Expression]): Expression =
+    if (ts.size == 1) ts.head
+    else {
+      val (l, r) = ts.splitAt((ts.size + 1) / 2)
+      And(conjoin(l), conjoin(r))
     }
-    out.result()
-  }
 
-  // ------------------------------------------------------- structural
-  // scanners shared by the three rewrites. ONE copy each (the r15
-  // whole-round review found the per-function copies had already
-  // diverged: the lift's paren scanner missed the quote-awareness fix,
-  // the hoist re-implemented equality splitting with a first-'='
-  // regex that mangled `<=`). All literal-aware; word boundaries
-  // include `_` (a column named `flag_or` is not the OR keyword —
-  // `isLetterOrDigit` boundaries split identifiers with `_and`/`_or`
-  // segments).
+  private def col(parts: String*): UnresolvedAttribute =
+    UnresolvedAttribute(parts.toSeq)
 
-  private def isWordChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
+  private def call(fn: String, args: Expression*): UnresolvedFunction =
+    UnresolvedFunction(fn, args.toSeq, isDistinct = false)
 
-  /** Index of the ')' matching the '(' at `open`, literal-aware; -1. */
-  private[graft] def matchingParen(s: String, open: Int): Int = {
-    var bal = 0; var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') { i += 1
-        while (i < s.length && s.charAt(i) != '\'') i += 1 }
-      else if (c == '(') bal += 1
-      else if (c == ')') { bal -= 1; if (bal == 0) return i }
-      i += 1
-    }
-    -1
-  }
-
-  private val SubOpen = """(?i)\(\s*select\b""".r
-
-  /** (start, end-inclusive) spans of `(select …)` at any depth,
-    * literal-aware.
+  /** The inner block re-aggregated per correlation key:
+    * `(select k as kName…, max(e) as v, count(*) as c from rel
+    * [where locals] group by k…) alias`.
     */
-  private[graft] def subSpans(s: String): Seq[(Int, Int)] =
-    SubOpen.findAllMatchIn(s)
-      .filter(m => !scanState(s, m.start)._2) // not inside a literal
-      .map(m => (m.start, matchingParen(s, m.start)))
-      .filter(_._2 > 0).toSeq
+  private def grouped(alias: String, keys: Seq[(Expression, String)],
+      e: Expression, v: String, c: String, locals: Seq[Expression],
+      rel: LogicalPlan): LogicalPlan =
+    SubqueryAlias(alias, Aggregate(keys.map(_._1),
+      keys.map { case (k, name) => Alias(k, name)() } :+
+        Alias(call("max", e), v)() :+
+        Alias(call("count", Literal(1)), c)(), // count(*) as parsed
+      if (locals.isEmpty) rel else Filter(conjoin(locals), rel)))
 
-  /** Depth-0 conjunct split on AND. */
-  private[graft] def topSplitAnd(s: String): Seq[String] = {
-    val parts = Seq.newBuilder[String]
-    var bal = 0; var last = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') { i += 1
-        while (i < s.length && s.charAt(i) != '\'') i += 1 }
-      else if (c == '(') bal += 1 else if (c == ')') bal -= 1
-      else if (bal == 0 && (c == 'a' || c == 'A') &&
-        s.regionMatches(true, i, "and", 0, 3) &&
-        (i == 0 || !isWordChar(s.charAt(i - 1))) &&
-        (i + 3 >= s.length || !isWordChar(s.charAt(i + 3)))) {
-        parts += s.substring(last, i); last = i + 3; i += 2
-      }
-      i += 1
-    }
-    parts += s.substring(last)
-    parts.result().map(_.trim).filter(_.nonEmpty)
-  }
-
-  private[graft] def hasTopOr(s: String): Boolean = {
-    var bal = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') { i += 1
-        while (i < s.length && s.charAt(i) != '\'') i += 1 }
-      else if (c == '(') bal += 1 else if (c == ')') bal -= 1
-      else if (bal == 0 && (c == 'o' || c == 'O') &&
-        s.regionMatches(true, i, "or", 0, 2) &&
-        (i == 0 || !isWordChar(s.charAt(i - 1))) &&
-        (i + 2 >= s.length || !isWordChar(s.charAt(i + 2))))
-        return true
-      i += 1
-    }
-    false
-  }
-
-  /** First position of word `kw` at paren-depth 0 outside literals;
-    * -1.
+  /** `value`, or the same runtime error the scalar-subquery form raises
+    * when `tooMany` holds.
     */
-  private[graft] def topKeyword(s: String, kw: String): Int = {
-    var bal = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') { i += 1
-        while (i < s.length && s.charAt(i) != '\'') i += 1 }
-      else if (c == '(') bal += 1 else if (c == ')') bal -= 1
-      else if (bal == 0 && s.regionMatches(true, i, kw, 0, kw.length) &&
-        (i == 0 || !isWordChar(s.charAt(i - 1))) &&
-        (i + kw.length >= s.length ||
-          !isWordChar(s.charAt(i + kw.length))))
-        return i
-      i += 1
-    }
-    -1
-  }
+  private def scalarValue(tooMany: Expression, value: Expression): Expression =
+    CaseWhen(Seq(tooMany -> call("raise_error",
+      Literal("scalar subquery returned more than one row"))), Some(value))
 
-  /** A WHERE-tail that is not pure predicate: the inner/middle text
-    * carries a trailing top-level clause the conjunct model cannot
-    * represent (a swallowed `limit 1` otherwise lands verbatim inside
-    * a generated conjunct — r15 review).
+  /** The inner block both two-level rewrites accept:
+    * `select e from t where p` over one unaliased single-name table,
+    * yielding (e, t, p); `e`, re-aggregated as `max(e)`, is free of
+    * calls, aliases, stars and subqueries. A DISTINCT, GROUP BY, ORDER
+    * BY or LIMIT wraps the Project in its own node and so declines:
+    * DISTINCT would make count(*) count pre-distinct rows and raise a
+    * spurious scalar error where the original deduplicates; a
+    * LIMIT/GROUP BY/ORDER has no place in the generated derived table.
     */
-  private[graft] def hasTrailingClause(s: String): Boolean =
-    Seq("group", "having", "order", "limit", "union", "except",
-      "intersect").exists(topKeyword(s, _) >= 0)
-
-  /** Single depth-0 plain '=' (not <=, >=, <>, !=, ==):
-    * Some(lhs, rhs).
-    */
-  private[graft] def eqSides(c: String): Option[(String, String)] = {
-    var bal = 0; var at = -1; var i = 0
-    while (i < c.length) {
-      val ch = c.charAt(i)
-      if (ch == '(') bal += 1 else if (ch == ')') bal -= 1
-      else if (ch == '\'') { i += 1
-        while (i < c.length && c.charAt(i) != '\'') i += 1 }
-      else if (ch == '=' && bal == 0) {
-        val prev = if (i > 0) c.charAt(i - 1) else ' '
-        val next = if (i + 1 < c.length) c.charAt(i + 1) else ' '
-        if ("<>!=".contains(prev) || next == '=') return None
-        if (at >= 0) return None // two separate equalities in one conjunct
-        at = i
-      }
-      i += 1
+  private object InnerBlock {
+    def unapply(p: LogicalPlan)
+        : Option[(Expression, UnresolvedRelation, Expression)] = p match {
+      case Project(Seq(item), Filter(cond, r @ UnresolvedRelation(Seq(_), _, _))) =>
+        val e = item match {
+          case UnresolvedAlias(c, _) => c
+          case other => other
+        }
+        val plain = !e.exists {
+          case _: UnresolvedFunction | _: Alias | _: Star |
+               _: SubqueryExpression => true
+          case _ => false
+        }
+        if (plain) Some((e, r, cond)) else None
+      case _ => None
     }
-    if (at < 0) None else Some((c.substring(0, at).trim,
-      c.substring(at + 1).trim))
   }
 
   /** The correlation repairs keyed by analyzer error: conjunctive
@@ -406,15 +170,15 @@ object CorrelationRepair {
     * column ownership against `spark`'s catalog at repair time.
     */
   def correlationRepairs(spark: SparkSession)(
-      msg: String, cur: String): Option[String] =
+      msg: String, plan: LogicalPlan): Option[LogicalPlan] =
     if (msg.contains("UNRESOLVED_COLUMN")) {
-      val schema = StatementSchema.of(spark, cur)
-      val flat = flattenTwoLevel(cur, schema)
-      Some(if (flat != cur) flat else hoistTwoLevelScalar(cur, schema))
+      val schema = StatementSchema.of(spark, plan)
+      flattenTwoLevel(plan, schema)
+        .orElse(hoistTwoLevelScalar(plan, schema))
     }
     else if (msg.contains(
         "SCALAR_SUBQUERY_IS_IN_GROUP_BY_OR_AGGREGATE_FUNCTION"))
-      Some(liftGroupedScalarSubquery(cur))
+      liftGroupedScalarSubquery(plan)
     else None
 
   /** Analyze `sql`, applying the error-triggered repairs (at most once
@@ -424,39 +188,136 @@ object CorrelationRepair {
     analyzeRepairedWith(spark, sql, correlationRepairs(spark))
 
   /** The shared repair driver (UnitMiner's battery replay composes its
-    * extra text shims onto the same loop): analyze; on a NON-FATAL
-    * failure consult `repairs(message, currentText)`; retry at most
-    * twice. When a rewrite was applied but the rewritten text fails
+    * two plan shims onto the same loop): analyze `spark.sql(sql)`; on a
+    * NON-FATAL failure parse the statement and consult
+    * `repairs(message, currentPlan)`; retry the repaired plan, at most
+    * twice. When a rewrite was applied but the rewritten plan fails
     * with no further repair, the ORIGINAL statement's error surfaces
-    * (the user never wrote the rewritten text — its error would quote
+    * (the user never wrote the rewritten plan — its error would quote
     * alien internals), with the later failure attached as suppressed.
     * Fatal VM errors propagate untouched.
     */
   def analyzeRepairedWith(spark: SparkSession, sql: String,
-      repairs: (String, String) => Option[String]): DataFrame = {
-    var cur = sql
-    var attempts = 0
-    var first: Throwable = null
-    while (true) {
+      repairs: (String, LogicalPlan) => Option[LogicalPlan]): DataFrame = {
+    def attempt(plan: Option[LogicalPlan], attempts: Int,
+        first: Option[Throwable]): DataFrame =
       try {
-        val df = spark.sql(cur)
+        val df = plan.fold(spark.sql(sql))(GraftBridge.ofRows(spark, _))
         df.schema // force analysis so repairs trigger here, not later
-        return df
+        df
       } catch {
         case scala.util.control.NonFatal(e) =>
-          if (first == null) first = e
+          val original = first.getOrElse(e)
           val msg = Option(e.getMessage).getOrElse("")
-          val next = if (attempts < 2) repairs(msg, cur) else None
+          val next = if (attempts >= 2) None else scala.util.Try(
+            plan.getOrElse(spark.sessionState.sqlParser.parsePlan(sql)))
+            .toOption.flatMap(p => repairs(msg, p).filter(_ != p))
           next match {
-            case Some(r) if r != cur => cur = r; attempts += 1
-            case _ =>
-              if (!(e eq first)) first.addSuppressed(e)
-              throw first
+            case Some(p) => attempt(Some(p), attempts + 1, Some(original))
+            case None =>
+              if (!(e eq original)) original.addSuppressed(e)
+              throw original
           }
       }
-    }
-    throw new IllegalStateException("unreachable")
+    attempt(None, 0, None)
   }
+
+  // ------------------------------------------------------ the flatten
+
+  private sealed trait Conj
+  /** Inner-owned columns only: stays inside the derived table. */
+  private final case class LocalC(e: Expression) extends Conj
+  /** No inner-table reference at all: constant per correlation binding. */
+  private final case class FreeC(e: Expression) extends Conj
+  /** `innerCol = expr(no inner refs)`: a grouping key. */
+  private final case class KeyEq(key: String, ex: Expression) extends Conj
+
+  /** Ownership of `e`'s bare columns relative to table `tbl`:
+    * Some(true) all inner-owned, Some(false) none inner-owned (or no
+    * bare column: constants are not inner-local), None
+    * mixed/ambiguous/unresolvable (decline).
+    */
+  private def ownership(e: Expression, tbl: String,
+      schema: StatementSchema): Option[Boolean] = {
+    val owners = bare(e).map(schema.owners)
+    if (owners.exists(_.size != 1)) None
+    else owners.map(_.head == tbl).distinct match {
+      case Seq() => Some(false)
+      case Seq(inner) => Some(inner)
+      case _ => None // mixed inner/outer inside one expression
+    }
+  }
+
+  /** One inner conjunct's class, None when it fits none (decline). */
+  private def classify(c: Expression, tbl: String,
+      schema: StatementSchema): Option[Conj] = {
+    def outerOnly(e: Expression) = bare(e).forall { t =>
+      val o = schema.owners(t)
+      o.nonEmpty && !o.contains(tbl)
+    }
+    def isKey(e: Expression) = e match {
+      case a: UnresolvedAttribute =>
+        a.nameParts.size == 1 && schema.owners(a.nameParts.head) == Set(tbl)
+      case _ => false
+    }
+    // Inner-table-QUALIFIED references (customer.c_acctbal where
+    // customer IS the inner table) carry no bare columns, so every test
+    // below must consult the qualified references too — a bare-only test
+    // classified such a conjunct FREE and moved an inner-local filter
+    // out of the derived table (r15 review: silent wrong results when
+    // the middle scans the same table).
+    val qs = qualifierNames(c)
+    if (qs.contains(tbl)) {
+      // references the inner table by name: LOCAL only when everything
+      // else in the conjunct is inner too
+      if (qs.forall(_ == tbl) &&
+          (bare(c).isEmpty || ownership(c, tbl, schema).contains(true)))
+        Some(LocalC(c))
+      else None // inner refs mixed with other scopes: decline
+    }
+    else if (qs.isEmpty && ownership(c, tbl, schema).contains(true))
+      Some(LocalC(c))
+    else if (outerOnly(c)) Some(FreeC(c))
+    else c match {
+      case EqualTo(l, r) =>
+        val keyEx =
+          if (isKey(l)) Some((l, r)) else if (isKey(r)) Some((r, l)) else None
+        // the expression side must be free of inner-table references
+        // (bare OR qualified) and unresolvable bare columns (other
+        // qualified refs are middle/outer scope and fine)
+        keyEx.collect { case (k: UnresolvedAttribute, ex)
+            if !qualifierNames(ex).contains(tbl) && outerOnly(ex) =>
+          KeyEq(k.nameParts.head.toLowerCase, ex)
+        }
+      case _ => None
+    }
+  }
+
+  /** The block's WHERE: the Filter under its select list and trailing
+    * clauses. GROUP BY, HAVING, DISTINCT, ORDER BY and LIMIT are their
+    * own nodes ABOVE it, so conjuncts appended to the WHERE can never
+    * merge into one of those clauses.
+    */
+  private def whereOf(block: LogicalPlan): Option[Filter] = block match {
+    case f: Filter => Some(f)
+    case p @ (_: Project | _: Aggregate | _: UnresolvedHaving | _: Distinct |
+              _: Sort | _: GlobalLimit | _: LocalLimit) =>
+      whereOf(p.children.head)
+    case _ => None
+  }
+
+  /** `lhs op (subquery)`: the subquery operand of a comparison conjunct. */
+  private def comparedSubquery(c: Expression): Option[ScalarSubquery] =
+    c match {
+      case b: BinaryComparison if !b.isInstanceOf[EqualNullSafe] =>
+        b.right match {
+          case s: ScalarSubquery if !SubqueryExpression.hasSubquery(b.left) =>
+            Some(s)
+          case _ => None
+        }
+      case Not(e: EqualTo) => comparedSubquery(e)
+      case _ => None
+    }
 
   /** Two-level correlation flatten. qpmodel resolves an outer reference
     * from ANY enclosing block (`select a1 from a where a.a1 = (select b1
@@ -466,228 +327,109 @@ object CorrelationRepair {
     * shapes — the inner scalar subquery is single-table, its WHERE a
     * pure conjunction whose correlated conjuncts are EQUALITIES
     * `innerCol = expr` (expr free of inner-table references), and it
-    * appears as one comparison operand in the middle block's
-    * conjunctive WHERE — flatten mechanically: the inner block becomes
-    * a derived table in the MIDDLE block's FROM, GROUPED by the moved
-    * equality keys and carrying `max(selExpr)` + `count(*)`; the
-    * comparison operand becomes a CASE that raises the scalar
-    * >1-row error when the matched group's count exceeds 1, and each
-    * moved equality joins the derived key to its (now one-level-up,
-    * which Spark supports) expression. Per correlation binding the
-    * equality keys select at most ONE group, so middle rows are never
+    * is the right operand of a comparison that is itself a conjunct of
+    * the middle block's WHERE — flatten mechanically: the inner block
+    * becomes a derived table in the MIDDLE block's FROM, GROUPED by the
+    * moved equality keys and carrying `max(selExpr)` + `count(*)`; the
+    * comparison operand becomes a CASE that raises the scalar >1-row
+    * error when the matched group's count exceeds 1, and each moved
+    * equality joins the derived key to its (now one-level-up, which
+    * Spark supports) expression. Per correlation binding the equality
+    * keys select at most ONE group, so middle rows are never
     * duplicated; count > 1 raises exactly where the subquery form
     * raises; an empty group drops the row exactly as a NULL scalar
     * makes the comparison UNKNOWN (r15 — value-exact for any data, not
     * just corpora with unique inner keys).
     *
     * Column classification is catalog-resolved via `schema` (r15):
-    * a conjunct is inner-local when all its bare identifiers are owned
-    * by the inner table ALONE among the statement's tables; a
-    * correlated equality's key side must be a single bare inner
-    * column and its expression side free of inner-owned or
-    * unresolvable bare identifiers. Any ambiguity — a column name two
-    * in-scope tables share, an identifier no resolved table carries —
-    * declines the span (the text returns unchanged and the original
-    * analyzer error stands). Disjunctive contexts (UnitTest.cs:1062's
-    * `… or b1 = (subq)`) are NOT flattened — an inner join is wrong
-    * under OR — and fall through to [[hoistTwoLevelScalar]].
+    * a conjunct is inner-local when all its bare columns are owned by
+    * the inner table ALONE among the statement's tables; a correlated
+    * equality's key side must be a single bare inner column and its
+    * expression side free of inner-owned or unresolvable bare columns.
+    * Any ambiguity — a column name two in-scope tables share, a column
+    * no resolved table carries — declines the middle block (None when
+    * no block flattened; the original analyzer error stands).
+    * Disjunctive contexts (UnitTest.cs:1062's `… or b1 = (subq)`) are
+    * NOT flattened — an inner join is wrong under OR — and fall
+    * through to [[hoistTwoLevelScalar]].
     */
-  def flattenTwoLevel(sql: String, schema: StatementSchema): String = {
-    val InnerShape =
-      """(?is)^\(\s*select\s+([^,()]+?)\s+from\s+(\w+)\s+where\s+(.+)\)$""".r
-    var fresh = 0
-
-    /** Ownership of a fragment's bare identifiers relative to the inner
-      * table: Some(true) all inner-owned, Some(false) none inner-owned,
-      * None mixed/ambiguous/unresolvable (decline).
-      */
-    def ownership(frag: String, tbl: String): Option[Boolean] = {
-      val toks = bareCols(frag)
-      if (toks.isEmpty) return Some(false) // constants: not inner-local
-      val classes = toks.map { t =>
-        val o = schema.owners(t)
-        if (o.isEmpty || o.size > 1) None
-        else Some(o.head == tbl.toLowerCase)
-      }
-      if (classes.contains(None)) None
-      else if (classes.forall(_.contains(true))) Some(true)
-      else if (classes.forall(_.contains(false))) Some(false)
-      else None // mixed inner/outer inside one fragment side
-    }
-
-    // rewrite ONE middle block's inner text; None if nothing flattened
-    def rewriteMiddle(mid: String): Option[String] = {
-      val fromAt = topKeyword(mid, "from")
-      val whereAt = topKeyword(mid, "where")
-      if (fromAt < 0 || whereAt < fromAt) return None
-      val head = mid.substring(0, fromAt)
-      var fromPart = mid.substring(fromAt + 4, whereAt)
-      var wherePart = mid.substring(whereAt + 5)
-      // Split off any trailing top-level clause FIRST: the rewrite
-      // appends join/free conjuncts to the end of `wherePart`, so a
-      // middle block ending in GROUP BY/ORDER/LIMIT would get them
-      // merged into that clause (`group by m1 and (...)`) instead of
-      // the WHERE — wrong results for a boolean group key, lost repair
-      // otherwise (r15 review). Subquery spans inside the trailing
-      // clause (a HAVING) are simply out of flatten scope.
-      val TrailKw =
-        "(?i)\\b(group|having|order|limit|union|except|intersect)\\b".r
-      val trailing = TrailKw.findAllMatchIn(wherePart)
-        .find(m => scanState(wherePart, m.start) == ((0, false)))
-        .map(_.start) match {
-        case Some(t) =>
-          val tail = wherePart.substring(t); wherePart = wherePart.substring(0, t)
-          tail
-        case None => ""
-      }
-      if (hasTopOr(wherePart)) return None
-      var changed = false
-      // innermost scalar subqueries inside the middle WHERE, right-to-left
-      val spans = subSpans(wherePart)
-      val innermost = spans.filterNot { case (s, e) =>
-        spans.exists { case (s2, e2) => s2 > s && e2 < e } }
-      innermost.sortBy(-_._1).foreach { case (s, e) =>
-        wherePart.substring(s, e + 1) match {
-          case InnerShape(selExpr, tbl, preds)
-              if !hasTopOr(preds) && schema.has(tbl) &&
-                // a trailing LIMIT/GROUP BY/ORDER in the inner would be
-                // swallowed into the last conjunct and land verbatim in
-                // the generated text (r15 review); DISTINCT would make
-                // count(*) count pre-distinct rows and raise a spurious
-                // scalar error where the original deduplicates — both
-                // decline (original analyzer error stands)
-                !hasTrailingClause(preds) &&
-                !selExpr.trim.toLowerCase.startsWith("distinct") &&
-                ownership(selExpr, tbl).contains(true) =>
-            val conjs = topSplitAnd(preds)
-            // Three conjunct classes (anything else declines the span):
-            //  - LOCAL: bare inner-owned columns only — stays inside
-            //    the derived table;
-            //  - FREE: no inner-table reference at all (qualified
-            //    middle refs + outer bare columns) — constant per
-            //    correlation binding, moves to the middle WHERE
-            //    verbatim AND gates the >1-row error (a false free
-            //    conjunct means the subquery matched ZERO rows, so no
-            //    error may fire no matter the group count);
-            //  - KEY EQUALITY `innerCol = expr(no inner refs)` — the
-            //    grouping key that makes the rewrite duplication-free.
-            sealed trait Conj
-            case class LocalC(text: String) extends Conj
-            case class FreeC(text: String) extends Conj
-            case class KeyEq(key: String, ex: String) extends Conj
-            val tblL = tbl.toLowerCase
-            val classified: Seq[Option[Conj]] = conjs.map { c =>
-              // Inner-table-QUALIFIED references (customer.c_acctbal
-              // where customer IS the inner table) carry no bare
-              // tokens, so every test below must consult the
-              // qualifiers too — a bare-only test classified such a
-              // conjunct FREE and moved an inner-local filter out of
-              // the derived table (r15 review: silent wrong results
-              // when the middle scans the same table).
-              val qs = qualifiers(c)
-              lazy val noInnerRefs = bareCols(c).forall { t =>
-                val o = schema.owners(t)
-                o.nonEmpty && !o.contains(tblL)
-              }
-              if (qs.contains(tblL)) {
-                // references the inner table by name: LOCAL only when
-                // everything else in the conjunct is inner too
-                if (qs.forall(_ == tblL) &&
-                    (bareCols(c).isEmpty || ownership(c, tbl).contains(true)))
-                  Some(LocalC(c))
-                else None // inner refs mixed with other scopes: decline
-              }
-              else if (qs.isEmpty && ownership(c, tbl).contains(true))
-                Some(LocalC(c))
-              else if (noInnerRefs) Some(FreeC(c))
-              else eqSides(c).flatMap { case (l, r) =>
-                val keyEx =
-                  if (l.matches("\\w+") &&
-                    schema.owners(l) == Set(tblL)) Some((l, r))
-                  else if (r.matches("\\w+") &&
-                    schema.owners(r) == Set(tblL)) Some((r, l))
-                  else None
-                // the expression side must be free of inner-table
-                // references (bare OR qualified) and unresolvable bare
-                // identifiers (other qualified refs are middle/outer
-                // scope and fine as text)
-                keyEx.filter { case (_, ex) =>
-                  qualifiers(ex).forall(_ != tblL) &&
-                  bareCols(ex).forall { t =>
-                    val o = schema.owners(t)
-                    o.nonEmpty && !o.contains(tblL)
-                  }
-                }.map { case (k, ex) => KeyEq(k.toLowerCase, ex) }
-              }
-            }
-            if (classified.contains(None)) return None
-            val local = classified.flatten.collect { case LocalC(c) => c }
-            val free = classified.flatten.collect { case FreeC(c) => c }
-            val moved = classified.flatten.collect {
-              case KeyEq(k, ex) => (k, ex) }
-            // the comparison operand before the span: `<lhs> <op> (`
-            val before = wherePart.substring(0, s)
-            val Cmp = """([\w.]+)\s*(>=|<=|<>|=|>|<)\s*$""".r
-            (Cmp.findFirstMatchIn(before), moved.nonEmpty) match {
-              case (Some(cm), true) =>
-                fresh += 1
-                val q = s"__q$fresh"
-                val keys = moved.map(_._1).distinct
-                val sel = (keys.map(k => s"$k as ${q}_$k") :+
-                  s"max($selExpr) as ${q}_v" :+
-                  s"count(*) as ${q}_c").mkString(", ")
-                val derived = s"(select $sel from $tbl" +
-                  (if (local.nonEmpty) s" where ${local.mkString(" and ")}"
-                   else "") + s" group by ${keys.mkString(", ")}) $q"
-                val joinEqs = moved.map { case (k, ex) =>
-                  s"$q.${q}_$k = $ex" }
-                // The error guard must re-state EVERYTHING that gates
-                // row membership — the key equalities AND the free
-                // conjuncts — because the CASE can be evaluated for
-                // (middle row, derived group) pairs the appended join
-                // conjuncts later reject (decorrelation pulls the key
-                // equalities up as join conditions, leaving this
-                // comparison to run over ALL groups): a duplicate-key
-                // group no binding matches must NOT raise. For the
-                // matched group the equalities are true and the guard
-                // reduces to free + count, the reference's semantics.
-                val guardCond = (joinEqs ++ free :+ s"$q.${q}_c > 1")
-                  .mkString("(", ") and (", ")")
-                val guarded = s"(case when $guardCond then raise_error(" +
-                  "'scalar subquery returned more than one row') " +
-                  s"else $q.${q}_v end)"
-                val joinConjs = joinEqs ++ free
-                wherePart = before.substring(0, cm.start) +
-                  s"${cm.group(1)} ${cm.group(2)} $guarded" +
-                  wherePart.substring(e + 1) +
-                  s" and ${joinConjs.mkString(" and ")}"
-                fromPart = fromPart + s", $derived"
-                changed = true
-              case _ => ()
-            }
-          case _ => ()
-        }
-      }
-      if (changed) Some(s"${head}from $fromPart where $wherePart$trailing")
-      else None
-    }
-
-    // middle candidates: subquery spans of the whole statement that
-    // contain another subquery span; rewrite right-to-left
-    var cur = sql
-    val all = subSpans(cur)
-    val middles = all.filter { case (s, e) =>
-      all.exists { case (s2, e2) => s2 > s && e2 < e } }
-      .filterNot { case (s, e) => // only OUTERMOST middles (depth-1)
-        all.exists { case (s2, e2) => s2 < s && e2 > e } }
-      .sortBy(-_._1)
-    middles.foreach { case (s, e) =>
-      rewriteMiddle(cur.substring(s + 1, e)).foreach { r =>
-        cur = cur.substring(0, s + 1) + r + cur.substring(e)
-      }
-    }
-    cur
+  def flattenTwoLevel(plan: LogicalPlan,
+      schema: StatementSchema): Option[LogicalPlan] = {
+    val names = Iterator.from(1).map(n => s"__q$n")
+    // middle blocks: subqueries that contain another subquery;
+    // rewrite right-to-left
+    val healed = subqueries(plan)
+      .filter(m => subqueries(m.plan).nonEmpty).reverse
+      .flatMap(m => flattenMiddle(m.plan, schema, names)
+        .map(m.exprId -> _))
+      .toMap
+    if (healed.isEmpty) None
+    else Some(plan.transformAllExpressions {
+      case s: SubqueryExpression if healed.contains(s.exprId) =>
+        s.withNewPlan(healed(s.exprId))
+    })
   }
+
+  /** Flatten the leaf scalar subqueries compared in ONE middle block's
+    * WHERE, rightmost first; None if nothing flattened or any candidate
+    * declines.
+    */
+  private def flattenMiddle(mid: LogicalPlan, schema: StatementSchema,
+      names: Iterator[String]): Option[LogicalPlan] = whereOf(mid).flatMap {
+    where =>
+      val spans = for {
+        s <- splitConjunctivePredicates(where.condition).flatMap(comparedSubquery).reverse
+        if subqueries(s.plan).isEmpty
+        (sel, rel, preds) <- InnerBlock.unapply(s.plan)
+        tbl = rel.tableName.toLowerCase
+        if !preds.isInstanceOf[Or] && schema.tables.contains(tbl) &&
+          ownership(sel, tbl, schema).contains(true)
+      } yield (s, sel, rel, splitConjunctivePredicates(preds).map(classify(_, tbl, schema)))
+      val (cond, from) =
+        if (spans.exists(_._4.contains(None))) (where.condition, where.child)
+        else spans.foldLeft((where.condition, where.child)) {
+          case ((cond, from), (s, sel, rel, classified)) =>
+            val conjs = classified.flatten
+            val local = conjs.collect { case LocalC(c) => c }
+            val free = conjs.collect { case FreeC(c) => c }
+            val moved = conjs.collect { case k: KeyEq => k }
+            if (moved.isEmpty) (cond, from)
+            else {
+              val q = names.next()
+              val keys = moved.map(_.key).distinct
+              val derived = grouped(q, keys.map(k => (col(k), s"${q}_$k")),
+                sel, s"${q}_v", s"${q}_c", local, rel)
+              val joinEqs =
+                moved.map(m => EqualTo(col(q, s"${q}_${m.key}"), m.ex))
+              // The error guard must re-state EVERYTHING that gates row
+              // membership — the key equalities AND the free conjuncts —
+              // because the CASE can be evaluated for (middle row,
+              // derived group) pairs the appended join conjuncts later
+              // reject (decorrelation pulls the key equalities up as
+              // join conditions, leaving this comparison to run over ALL
+              // groups): a duplicate-key group no binding matches must
+              // NOT raise. For the matched group the equalities are true
+              // and the guard reduces to free + count, the reference's
+              // semantics. A false free conjunct means the subquery
+              // matched ZERO rows, so no error may fire no matter the
+              // group count.
+              val guard = conjoin(joinEqs ++ free :+
+                GreaterThan(col(q, s"${q}_c"), Literal(1)))
+              val guarded = scalarValue(guard, col(q, s"${q}_v"))
+              val replaced = cond.transform {
+                case x: ScalarSubquery if x.exprId == s.exprId => guarded
+              }
+              (conjoin(splitConjunctivePredicates(replaced) ++ joinEqs ++ free),
+                Join(from, derived, Inner, None, JoinHint.NONE))
+            }
+        }
+      if (from eq where.child) None
+      else Some(mid.transformDown {
+        case f: Filter if f eq where => Filter(cond, from)
+      })
+  }
+
+  // --------------------------------------------------------- the hoist
 
   /** Two-level correlation under a DISJUNCTIVE middle WHERE — the one
     * shape [[flattenTwoLevel]] must refuse (an inner join drops rows
@@ -715,122 +457,99 @@ object CorrelationRepair {
     * never have evaluated the inner at all. This matches how Spark
     * itself treats subquery evaluation order (subqueries run before
     * the consuming operator decides row-by-row relevance); exact
-    * laziness would require runtime machinery out of scope for a text
+    * laziness would require runtime machinery out of scope for a plan
     * rewrite.
     *
-    * Guards (all catalog-resolved via `schema` since r15): single
-    * resolved-table outer FROM, no outer GROUP BY/ORDER/LIMIT,
-    * innermost span only, every correlated bare identifier in the
-    * inner owned by the OUTER table alone with the middle block not
-    * scanning that table (capture), inner WHERE a conjunction with
-    * exactly ONE correlated conjunct of the form `col = expr(outer)` —
-    * anything else returns the text unchanged so the original error
-    * stands.
+    * Guards (all catalog-resolved via `schema` since r15): the
+    * statement is one `select … from t [alias] where …` block over a
+    * resolved table (no GROUP BY/ORDER/LIMIT), the first leaf subquery
+    * nested in another is a scalar over the inner shape, every
+    * correlated bare column in the inner is owned by the OUTER table
+    * alone with the middle block not scanning that table (capture),
+    * inner WHERE a conjunction with exactly ONE correlated conjunct of
+    * the form `col = expr(outer)` — anything else returns None so the
+    * original error stands.
     */
-  def hoistTwoLevelScalar(sql: String, schema: StatementSchema): String = {
-    val s = sql.trim.stripSuffix(";")
-    if (!s.toLowerCase.startsWith("select ")) return sql
-    val fromAt = topKeyword(s, "from")
-    val whereAt = topKeyword(s, "where")
-    if (fromAt < 0 || whereAt < fromAt) return sql
-    if (Seq("group", "order", "limit")
-          .exists(topKeyword(s, _) >= 0)) return sql
-    val selList = s.substring("select ".length, fromAt).trim
-    val fromT = s.substring(fromAt + "from".length, whereAt).trim
-    if (!fromT.matches("\\w+(\\s+\\w+)?")) return sql
-    val parts = fromT.split("\\s+")
-    val (tbl, alias) = (parts.head, parts.last)
-    if (!schema.has(tbl)) return sql
-    val outerT = tbl.toLowerCase
-    val w = s.substring(whereAt + "where".length)
-    val spans = subSpans(w)
-    // innermost span strictly inside another span
-    val candidate = spans.find { case (a, b) =>
-      spans.exists { case (oa, ob) => oa < a && b < ob } &&
-        !spans.exists { case (ia, ib) => a < ia && ib < b }
-    }
-    candidate match {
-      case Some((a, b)) =>
-        val inner = w.substring(a, b + 1)
-        val enclosing = spans.filter { case (oa, ob) => oa < a && b < ob }
-          .maxBy(_._1)
-        val midText = w.substring(enclosing._1, enclosing._2 + 1)
-        // FULL from-clause extraction (comma lists + JOINs), shared with
-        // the schema resolver — the old `\bfrom\s+(\w+)` saw only the
-        // first table of a FROM list, so a middle block scanning the
-        // outer table past a comma defeated the capture guard (the r15
-        // review).
-        def tablesOf(block: String): Set[String] =
-          StatementSchema.fromCandidates(block).map(_.toLowerCase).toSet
-        val innerTables = tablesOf(inner)
-        val midTables = tablesOf(
-          midText.substring(0, a - enclosing._1) +
-            midText.substring(b + 1 - enclosing._1))
-        // correlated owners among the inner's bare identifiers: tokens
-        // owned by a resolved table that is not one of the inner's own;
-        // unresolvable tokens (aliases, strings already skipped) are
-        // ignored — an over-claimed token can only make the guards
-        // refuse, never mis-rewrite.
-        val corr = bareCols(inner).flatMap { t =>
-          val o = schema.owners(t)
-          if (o.size == 1 && !innerTables(o.head)) Some(o.head) else None
-        }.toSet
-        if (corr.isEmpty || corr != Set(outerT) ||
-            midTables.contains(outerT)) return sql
-        // decompose the inner: select E from t2 where conjuncts
-        val InnerShape =
-          """(?is)^\(\s*select\s+(.*?)\s+from\s+(\w+)\s+where\s+(.*)\)$""".r
-        val (e, t2, conjText) = inner match {
-          case InnerShape(e0, t0, w0) => (e0.trim, t0, w0.trim)
-          case _ => return sql
-        }
-        if (e.contains("(") || e.contains(",")) return sql // plain expr only
-        // DISTINCT would make count(*) count pre-distinct rows (a
-        // spurious >1-row error where the original deduplicates); a
-        // disjunctive inner WHERE cannot be split into conjuncts (the
-        // AND-split of `k = outer and x=1 or y=2` silently
-        // re-associates the OR); a trailing LIMIT/GROUP/ORDER would be
-        // swallowed into the last conjunct verbatim. All decline —
-        // the original analyzer error stands (r15 review).
-        if (e.toLowerCase.startsWith("distinct")) return sql
-        if (hasTopOr(conjText) || hasTrailingClause(conjText)) return sql
-        if (!bareCols(e).forall(t =>
-          schema.owners(t) == Set(t2.toLowerCase))) return sql
-        val conjuncts = topSplitAnd(conjText)
-        def ownersOf(x: String): Set[String] =
-          bareCols(x).flatMap(schema.owners).toSet
-        val (corrConj, localConj) =
-          conjuncts.partition(c => (ownersOf(c) -- innerTables).nonEmpty)
-        // eqSides (not a first-'=' regex): compound operators <=, >=,
-        // !=, <> must not split at their '=' (r15 review — the regex
-        // produced `on __s.__k = (a3 <)`-class garbage)
-        val (key, corrExpr) = corrConj match {
-          case Seq(c0) => eqSides(c0) match {
-            case Some((l, r))
-                if ownersOf(l) == Set(t2.toLowerCase) &&
-                  l.matches("\\w+") && ownersOf(r) == corr =>
-              (l, r)
-            case Some((l, r))
-                if ownersOf(r) == Set(t2.toLowerCase) &&
-                  r.matches("\\w+") && ownersOf(l) == corr =>
-              (r, l)
-            case _ => return sql
-          }
-          case _ => return sql
-        }
-        val localWhere =
-          if (localConj.isEmpty) "" else localConj.mkString(" where ", " and ", "")
-        val newW = w.substring(0, a) + "__iv" + w.substring(b + 1)
-        s"select $selList from (select $alias.*, " +
-          "case when __s.__c > 1 then raise_error(" +
-          "'scalar subquery returned more than one row') " +
-          s"else __s.__v end as __iv from $fromT left join " +
-          s"(select $key as __k, max($e) as __v, count(*) as __c " +
-          s"from $t2$localWhere group by $key) __s " +
-          s"on __s.__k = ($corrExpr)) $alias where$newW"
-      case None => sql
-    }
+  def hoistTwoLevelScalar(plan: LogicalPlan,
+      schema: StatementSchema): Option[LogicalPlan] = plan match {
+    case Project(selList, Filter(w, rel)) =>
+      val (t, alias) = rel match {
+        case r @ UnresolvedRelation(Seq(name), _, _) =>
+          (r.tableName.toLowerCase, name)
+        case SubqueryAlias(id, r @ UnresolvedRelation(Seq(_), _, _))
+            if id.qualifier.isEmpty => (r.tableName.toLowerCase, id.name)
+        case _ => return None
+      }
+      if (!schema.tables.contains(t)) return None
+      val (inner, middle) = w.collect { case s: SubqueryExpression => s }
+          .iterator.flatMap(firstNestedLeaf).nextOption() match {
+        case Some(pair) => pair
+        case None => return None
+      }
+      val innerTables = relations(inner.plan).map(_.toLowerCase).toSet
+      val midTables = relations(middle.plan).diff(relations(inner.plan))
+        .map(_.toLowerCase).toSet
+      // correlated owners among the inner's bare columns: columns owned
+      // by a resolved table that is not one of the inner's own;
+      // unresolvable columns are ignored — an over-claimed column can
+      // only make the guards refuse, never mis-rewrite.
+      val corr = inner.plan.flatMap(_.expressions.flatMap(bare)).flatMap { c =>
+        val o = schema.owners(c)
+        if (o.size == 1 && !innerTables(o.head)) Some(o.head) else None
+      }.toSet
+      if (corr != Set(t) || midTables.contains(t)) return None
+      val (e, innerRel, conds) = inner.plan match {
+        case InnerBlock(e0, r0, c0) if inner.isInstanceOf[ScalarSubquery] =>
+          (e0, r0, c0)
+        case _ => return None
+      }
+      val t2 = innerRel.tableName.toLowerCase
+      // a disjunctive inner WHERE cannot be split into conjuncts (the
+      // AND-split of `k = outer and x=1 or y=2` silently re-associates
+      // the OR): decline (r15 review)
+      if (conds.isInstanceOf[Or]) return None
+      if (!bare(e).forall(c => schema.owners(c) == Set(t2))) return None
+      def ownersOf(x: Expression) = bare(x).flatMap(schema.owners).toSet
+      val (corrConj, localConj) = splitConjunctivePredicates(conds)
+        .partition(c => (ownersOf(c) -- innerTables).nonEmpty)
+      def isKey(x: Expression) =
+        x.isInstanceOf[UnresolvedAttribute] && bare(x).size == 1 &&
+          ownersOf(x) == Set(t2)
+      val (key, corrExpr) = corrConj match {
+        case Seq(EqualTo(l, r)) if isKey(l) && ownersOf(r) == corr => (l, r)
+        case Seq(EqualTo(l, r)) if isKey(r) && ownersOf(l) == corr => (r, l)
+        case _ => return None
+      }
+      val iv = Alias(scalarValue(GreaterThan(col("__s", "__c"), Literal(1)),
+        col("__s", "__v")), "__iv")()
+      val pre = SubqueryAlias(alias, Project(
+        Seq(UnresolvedStar(Some(Seq(alias))), iv),
+        Join(rel, grouped("__s", Seq((key, "__k")), e, "__v", "__c",
+          localConj, innerRel), LeftOuter,
+          Some(EqualTo(col("__s", "__k"), corrExpr)), JoinHint.NONE)))
+      val newW = replaceSubquery(Filter(w, rel), inner.exprId, col("__iv"))
+        .asInstanceOf[Filter].condition
+      Some(Project(selList, Filter(newW, pre)))
+    case _ => None
   }
+
+  /** The first (in statement order) leaf subquery nested inside
+    * `parent`, with its enclosing subquery.
+    */
+  private def firstNestedLeaf(parent: SubqueryExpression)
+      : Option[(SubqueryExpression, SubqueryExpression)] =
+    subqueries(parent.plan).iterator.flatMap { k =>
+      if (subqueries(k.plan).isEmpty) Some((k, parent))
+      else firstNestedLeaf(k)
+    }.nextOption()
+
+  private def replaceSubquery(plan: LogicalPlan, id: ExprId,
+      by: Expression): LogicalPlan =
+    plan.transformAllExpressionsWithSubqueries {
+      case s: SubqueryExpression if s.exprId == id => by
+    }
+
+  // ---------------------------------------------------------- the lift
 
   /** Correlated scalar subquery in a grouped select list
     * (UnitTest.cs:1392: `select a1, 5+(select b2 from b where b1=a1)
@@ -839,78 +558,43 @@ object CorrelationRepair {
     * while Spark demands the subquery itself appear in GROUP BY or an
     * aggregate (SCALAR_SUBQUERY_IS_IN_GROUP_BY_OR_AGGREGATE_FUNCTION).
     * When every grouping key is a plain column and the select list
-    * outside subquery spans references ONLY those keys (no aggregate
+    * outside subqueries references ONLY those keys (no aggregate
     * functions), grouping and subquery evaluation commute: aggregate
     * first in a derived table, then apply the select list — the
     * subquery now correlates to an ordinary (post-group) column.
-    * Statements with a trailing HAVING/ORDER/LIMIT or expression keys
-    * are left alone (returned unchanged → the original error stands).
-    * Schema-free: the guards are structural (keys plain, non-subquery
-    * select-list tokens ⊆ keys), so no catalog resolution is needed.
+    * Statements with a trailing HAVING/ORDER/LIMIT (a node above the
+    * Aggregate) or expression keys are left alone (None → the original
+    * error stands). Schema-free: the guards are structural (keys plain
+    * columns; outside subqueries the select list reads only keys, calls
+    * only abs/round and carries no alias), so no catalog resolution is
+    * needed.
     */
-  def liftGroupedScalarSubquery(sql: String): String = {
-    val s = sql.trim.stripSuffix(";")
-    if (!s.toLowerCase.startsWith("select ")) return sql
-    val fromAt = topKeyword(s, "from")
-    if (fromAt < 0) return sql
-    val selList = s.substring("select ".length, fromAt).trim
-    val rest = s.substring(fromAt + "from".length)
-    val gbAt = topKeyword(rest, "group")
-    if (gbAt < 0) return sql
-    val fromWhere = rest.substring(0, gbAt).trim
-    val keysTail = rest.substring(gbAt).replaceFirst("(?i)group\\s+by", "")
-    if (Seq("having", "order", "limit")
-          .exists(topKeyword(keysTail, _) >= 0)) return sql
-    def topSplit(text: String): Seq[String] = {
-      val out = Seq.newBuilder[String]
-      var bal = 0; var last = 0; var inQ = false
-      text.zipWithIndex.foreach { case (c, i) =>
-        if (inQ) { if (c == '\'') inQ = false }
-        else if (c == '\'') inQ = true
-        else if (c == '(') bal += 1 else if (c == ')') bal -= 1
-        else if (c == ',' && bal == 0) { out += text.substring(last, i); last = i + 1 }
-      }
-      out += text.substring(last)
-      out.result().map(_.trim).filter(_.nonEmpty)
+  def liftGroupedScalarSubquery(plan: LogicalPlan): Option[LogicalPlan] =
+    plan match {
+      case Aggregate(grouping, items, child, _) =>
+        val keys = grouping.map {
+          case UnresolvedOrdinal(i) if i >= 1 && i <= items.size =>
+            items(i - 1) match {
+              case Alias(c, _) => c
+              case item => item
+            }
+          case k => k
+        }.collect {
+          case a: UnresolvedAttribute if a.nameParts.size == 1 => a
+        }
+        if (keys.size != grouping.size) return None
+        val keyCols = keys.map(_.nameParts.head.toLowerCase).toSet
+        val keysOnly = items.forall(!_.exists {
+          case a: UnresolvedAttribute =>
+            a.nameParts.size > 1 || !keyCols(a.nameParts.head.toLowerCase)
+          case f: UnresolvedFunction =>
+            !Seq(Seq("abs"), Seq("round")).contains(f.nameParts.map(_.toLowerCase))
+          case _: Alias | _: Star => true
+          case _ => false
+        })
+        if (!keysOnly) None
+        else Some(Project(items,
+          SubqueryAlias("__g", Aggregate(keys, keys, child))))
+      case _ => None
     }
-    val items = topSplit(selList)
-    val keys = topSplit(keysTail).map { k =>
-      if (k.matches("\\d+")) {
-        val i = k.toInt - 1
-        if (i < 0 || i >= items.size) return sql
-        items(i).split("(?i)\\s+as\\s+")(0).trim
-      } else k
-    }
-    // keys must be plain columns; the select list outside subquery
-    // spans may reference only them and no aggregate function
-    if (!keys.forall(_.matches("\\w+"))) return sql
-    // strip subquery spans via the shared literal-aware scanner (the
-    // per-function indexOf/paren loop here was the one structural
-    // scanner in the file that matched `(select` and counted parens
-    // INSIDE string literals — r15 review)
-    val noSubs = {
-      var cur = selList
-      var span = subSpans(cur).headOption
-      while (span.isDefined) {
-        val (open, close) = span.get
-        cur = cur.substring(0, open) + cur.substring(close + 1)
-        span = subSpans(cur).headOption
-      }
-      if (SubOpen.findFirstMatchIn(cur)
-            .exists(m => !scanState(cur, m.start)._2)) return sql // unclosed
-      cur
-    }
-    val keyCols = keys.map(_.toLowerCase).toSet
-    val colTokens = """\b[a-z][a-z_]*\d*\b""".r.findAllIn(noSubs.toLowerCase)
-      .toSeq.distinct
-    val aggNames = Set("count", "sum", "min", "max", "avg", "stddev",
-      "stddev_samp", "var_samp", "first", "last")
-    if (colTokens.exists(aggNames.contains)) return sql
-    val nonKey = colTokens.filterNot(keyCols.contains)
-      .filterNot(Set("as", "select", "from", "and", "or", "not", "case",
-        "when", "then", "else", "end", "null", "abs", "round").contains)
-    if (nonKey.nonEmpty) return sql
-    s"select $selList from (select ${keys.mkString(", ")} " +
-      s"from $fromWhere group by ${keys.mkString(", ")}) __g"
-  }
 }

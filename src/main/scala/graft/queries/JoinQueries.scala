@@ -193,8 +193,9 @@ object JoinQueries {
   // reference-verbatim statements (UnitTest.cs:1046/1057/1392, run
   // against micro-tables a = b = {(i,i+1,i+2,i+3) : i ∈ 0..2}, here
   // derived deterministically from nation) are analyzer-rejected and
-  // healed by graft.plans.CorrelationRepair through SqlRunner.exec —
-  // opt-in conf, firing only AFTER the rejection. DuckDB binds
+  // healed by graft.plans.CorrelationRepair (tree rewrites of the
+  // parsed plan) through SqlRunner.exec — opt-in conf, firing only
+  // AFTER the rejection. DuckDB binds
   // multi-level correlation natively, so the oracle runs the ORIGINAL
   // text.
   // ------------------------------------------------------------------
@@ -221,8 +222,9 @@ object JoinQueries {
   /** Run `sql` through [[graft.SqlRunner.exec]] with the repair conf on
     * (restored after); the oracle is the ORIGINAL statement over the
     * same data as CTEs. No ORDER BY needed — the oracle compare sorts
-    * rows — and [[graft.plans.CorrelationRepair.hoistTwoLevelScalar]]'s
-    * guards refuse statements with one anyway.
+    * rows — and [[graft.plans.CorrelationRepair.hoistTwoLevelScalar]]
+    * only matches a statement whose top node is the select list, which
+    * an ORDER BY's Sort node would sit above.
     */
   private def repairedDef(name: String, sql: String): QueryDef =
     QueryDef(name, (s, dir) => {
@@ -262,7 +264,8 @@ object JoinQueries {
   // multi-level correlation against orders/customer/region-class
   // schemas still got the raw analyzer error; the r15 generalization
   // resolves column ownership through the session catalog
-  // (CorrelationRepair.StatementSchema), and these rows prove the
+  // (CorrelationRepair.StatementSchema: every relation of the parsed
+  // statement resolved through the catalog), and these rows prove the
   // capability on the standard schema — DuckDB again binds the ORIGINAL
   // multi-level text natively, so the rewrite is adjudicated against
   // native multi-level binding on real tables.
@@ -296,7 +299,7 @@ object JoinQueries {
     * hardening): the inner block carries a conjunct with NO inner-table
     * reference at all (`n_name <> 'NATION_2'` — outer-owned), which is
     * constant per correlation binding. It must move to the middle WHERE
-    * verbatim AND gate the >1-row error guard next to the key
+    * unchanged AND gate the >1-row error guard next to the key
     * equalities — this is exactly the interplay where the in-round
     * review found the spurious-raise bug, so it gets a DuckDB-
     * adjudicated pin (the oracle binds the original multi-level text

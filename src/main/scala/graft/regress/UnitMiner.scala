@@ -2,7 +2,12 @@ package graft.regress
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.Try
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation, UnresolvedStar, UnresolvedSubqueryColumnAliases}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types._
 
 /** Mine and replay the reference's INLINE unit battery: `test/UnitTest.cs`
@@ -264,7 +269,7 @@ object UnitMiner {
             while (k2 >= 0 && (text.charAt(k2).isLetterOrDigit ||
               text.charAt(k2) == '_')) k2 -= 1
             val word = text.substring(k2 + 1, lStart).toLowerCase
-            if (!SqlKeywords.contains(word)) lStart = k2 + 1
+            if (!NonCallKeywords.contains(word)) lStart = k2 + 1
           } else {
             var k = l
             while (k >= 0 && (text.charAt(k).isLetterOrDigit ||
@@ -313,7 +318,7 @@ object UnitMiner {
     text
   }
 
-  private val SqlKeywords = Set("select", "where", "when", "then", "else",
+  private val NonCallKeywords = Set("select", "where", "when", "then", "else",
     "and", "or", "not", "on", "in", "from", "join", "having", "group",
     "order", "by", "union", "all", "distinct", "as", "case", "end",
     "between", "exists", "limit", "values", "intersect", "except")
@@ -349,87 +354,69 @@ object UnitMiner {
 
   // -------------------------------------------- repair-on-error shims
 
-  /** qpmodel (and DuckDB) accept a PARTIAL derived-table column-alias
-    * list — `(select a3, a4 from a) b(a4)` — renaming the first k
-    * output columns and TRUNCATING the derived table to them (the
-    * committed expectations show k-column `select *` output,
-    * UnitTest.cs:1125/2645-2649). Spark requires the full list
-    * (ASSIGNMENT_ARITY_MISMATCH), so on that error the statement is
-    * rewritten to the equivalent explicit form:
+  /** qpmodel accepts a PARTIAL derived-table column-alias list —
+    * `(select a3, a4 from a) b(a4)` — renaming the first k output
+    * columns and TRUNCATING the derived table to them (the committed
+    * expectations show k-column `select *` output,
+    * UnitTest.cs:1125/2645-2649; DuckDB also accepts the list but keeps
+    * the remaining columns). Spark requires the full list
+    * (ASSIGNMENT_ARITY_MISMATCH), so on that error each
+    * `UnresolvedSubqueryColumnAliases` shorter than its child's analyzed
+    * arity n becomes the equivalent explicit form
     * `(select c1..ck from (Q) t(c1..ck, __pad{k+1}..__pad{n})) t`.
-    * The subquery's arity comes from analyzing the inner text against
-    * the live catalog; innermost sites fix first (an outer site's inner
-    * text may not analyze until its own nested site is fixed), one fix
-    * per pass until a pass fixes nothing.
+    * The transform runs bottom-up, so a nested site is padded before
+    * the arity of the site around it is taken (an outer site's child
+    * may not analyze until its own nested site is fixed); a child that
+    * does not analyze on its own (a correlated one) stays as written.
     */
-  def padDerivedAliases(spark: SparkSession, sql: String): String = {
-    val Site = """\)\s*(\w+)\s*\(\s*([\w\s,]+?)\s*\)""".r
-    var cur = sql
-    var fixed = true
-    while (fixed) {
-      fixed = false
-      val it = Site.findAllMatchIn(cur).toSeq.iterator
-      while (!fixed && it.hasNext) {
-        val m = it.next()
-        // match the close paren at m.start backward to its open paren
-        var bal = 1
-        var i = m.start - 1
-        while (i >= 0 && bal > 0) {
-          val c = cur.charAt(i)
-          if (c == ')') bal += 1 else if (c == '(') bal -= 1
-          if (bal > 0) i -= 1
-        }
-        if (i >= 0) {
-          val inner = cur.substring(i + 1, m.start)
-          if (inner.trim.toLowerCase.startsWith("select")) {
-            val aliases = m.group(2).split(",").map(_.trim)
-              .filter(_.nonEmpty).toSeq
-            val arity = try Some(spark.sql(inner).columns.length)
-              catch { case _: Throwable => None }
-            arity match {
-              case Some(n) if n > aliases.size =>
-                val t = m.group(1)
-                val full = (aliases ++
-                  (aliases.size until n).map(k => s"__pad${k + 1}"))
-                  .mkString(", ")
-                val repl = s"(select ${aliases.mkString(", ")} from " +
-                  s"($inner) $t($full)) $t"
-                cur = cur.substring(0, i) + repl + cur.substring(m.end)
-                fixed = true
-              case _ => ()
-            }
-          }
-        }
-      }
+  def padDerivedAliases(spark: SparkSession,
+      plan: LogicalPlan): Option[LogicalPlan] = {
+    def arity(q: LogicalPlan) =
+      Try(GraftBridge.ofRows(spark, q).columns.length).getOrElse(0)
+    val padded = plan.transformUpWithSubqueries {
+      case site @ SubqueryAlias(id, UnresolvedSubqueryColumnAliases(names, q)) =>
+        val pads = (names.size until arity(q)).map(k => s"__pad${k + 1}")
+        if (pads.isEmpty) site
+        else SubqueryAlias(id, Project(names.map(n => UnresolvedAttribute(Seq(n))),
+          SubqueryAlias(id, UnresolvedSubqueryColumnAliases(names ++ pads, q))))
     }
-    cur
+    Some(padded).filter(_ != plan)
   }
 
   /** qpmodel lets a table alias share a column's name and still
     * resolves qualified uses to the alias — `from a a1 … a1.a1` — even
     * from a nested subquery (UnitTest.cs:1369). Spark resolves the
     * outer reference `a1.a1` as FIELD EXTRACTION from the INT column
-    * a1 (INVALID_EXTRACT_BASE_FIELD_TYPE); renaming the shadowing
-    * alias (and its qualified uses) to a fresh name restores the
-    * intended binding without touching statements that already
-    * resolve.
+    * a1 (INVALID_EXTRACT_BASE_FIELD_TYPE); renaming each table alias
+    * that names a column of a statement table (and its qualified uses)
+    * to a fresh `<alias>__t` restores the intended binding without
+    * touching statements that already resolve.
     */
-  def renameShadowAliases(sql: String): String = {
-    val Alias = """(?i)\b(from|join)\s+(\w+)\s+([abcdrt][1-4])\b""".r
-    Alias.findAllMatchIn(sql).map(_.group(3)).toSeq.distinct
-      .foldLeft(sql) { (cur, a) =>
-        val renamed = Alias.replaceAllIn(cur, m =>
-          if (m.group(3) == a) s"${m.group(1)} ${m.group(2)} ${a}__t"
-          else m.matched)
-        renamed.replaceAll(s"(?i)\\b$a\\.", s"${a}__t.")
-      }
+  def renameShadowAliases(spark: SparkSession,
+      plan: LogicalPlan): Option[LogicalPlan] = {
+    val schema = graft.plans.CorrelationRepair.StatementSchema.of(spark, plan)
+    val shadows = plan.collectWithSubqueries {
+      case SubqueryAlias(id, _: UnresolvedRelation)
+          if schema.owners(id.name).nonEmpty => id.name.toLowerCase
+    }.toSet
+    def shadowing(q: String) = shadows(q.toLowerCase)
+    if (shadows.isEmpty) None
+    else Some(plan.transformUpWithSubqueries {
+      case SubqueryAlias(id, r: UnresolvedRelation) if shadowing(id.name) =>
+        SubqueryAlias(id.name + "__t", r)
+    }.transformAllExpressionsWithSubqueries {
+      case UnresolvedAttribute(q +: rest) if rest.nonEmpty && shadowing(q) =>
+        UnresolvedAttribute((q + "__t") +: rest)
+      case UnresolvedStar(Some(q +: rest)) if shadowing(q) =>
+        UnresolvedStar(Some((q + "__t") +: rest))
+    })
   }
 
   /** Analyze `sql`, applying the error-triggered repairs (at most once
     * each) — statements that analyze clean never get rewritten.
     * One driver, shared with the engine surface
     * ([[graft.plans.CorrelationRepair.analyzeRepairedWith]]); the
-    * battery composes its two text shims (derived-alias padding, alias
+    * battery composes its two plan shims (derived-alias padding, alias
     * shadowing) ahead of the engine's correlation repairs. The
     * correlation repairs resolve column ownership against the session
     * catalog (r15) — the micro tables are loaded as catalog tables, so
@@ -439,12 +426,12 @@ object UnitMiner {
   def analyzeRepaired(spark: SparkSession, sql: String)
       : org.apache.spark.sql.DataFrame =
     graft.plans.CorrelationRepair.analyzeRepairedWith(spark, sql,
-      (msg, cur) =>
+      (msg, plan) =>
         if (msg.contains("ASSIGNMENT_ARITY_MISMATCH"))
-          Some(padDerivedAliases(spark, cur))
+          padDerivedAliases(spark, plan)
         else if (msg.contains("INVALID_EXTRACT_BASE_FIELD_TYPE"))
-          Some(renameShadowAliases(cur))
-        else graft.plans.CorrelationRepair.correlationRepairs(spark)(msg, cur))
+          renameShadowAliases(spark, plan)
+        else graft.plans.CorrelationRepair.correlationRepairs(spark)(msg, plan))
 
   // ------------------------------------------------------- environment
 

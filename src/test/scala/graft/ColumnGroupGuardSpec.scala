@@ -47,13 +47,7 @@ class ColumnGroupGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
     tables.foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
       // A previous JVM's crash can orphan the managed locations.
-      val dir = new java.io.File(warehouseDir, t)
-      if (dir.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
-        }
-        rm(dir)
-      }
+      GraftSession.removeDir(new java.io.File(warehouseDir, t).getPath)
     }
     spark.sql(
       s"""CREATE TABLE cg_li USING parquet AS

@@ -181,17 +181,20 @@ class CorrelationRepairSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql("""CREATE OR REPLACE TEMP VIEW customer AS
       |SELECT id + 1 AS c_custkey, id AS c_nationkey FROM range(4)
       |""".stripMargin)
-    // the inner-local literal contains both ' and ' and ' or ' plus an
-    // unbalanced '(' — pre-r15-review the conjunct splitter broke the
-    // literal apart and the repair silently declined
-    val sql = "select n_nationkey from nation where n_nationkey >= (" +
-      "select max(c_nationkey) from customer " +
-      "where c_custkey <= n_nationkey + 1 and c_nationkey = " +
-      "(select r_regionkey from region where r_regionkey = n_regionkey " +
-      "and r_name <> 'ASIA and (EUROPE or AFRICA'))"
-    val rows = withRepair(SqlRunner.exec(spark, sql))
-      .collect().map(_.getLong(0)).sorted
-    assert(rows.toSeq == Seq(0L, 1L, 2L, 3L), s"got ${rows.toSeq}")
+    // the inner-local literals contain ' and ' and ' or ', an
+    // unbalanced '(' and a backslash-escaped quote (Spark's default
+    // literal syntax) — a text scanner splitting conjuncts at either
+    // broke the literal apart and the repair silently declined
+    Seq("'ASIA and (EUROPE or AFRICA'", "'it\\'s and (x'").foreach { lit =>
+      val sql = "select n_nationkey from nation where n_nationkey >= (" +
+        "select max(c_nationkey) from customer " +
+        "where c_custkey <= n_nationkey + 1 and c_nationkey = " +
+        "(select r_regionkey from region where r_regionkey = n_regionkey " +
+        s"and r_name <> $lit))"
+      val rows = withRepair(SqlRunner.exec(spark, sql))
+        .collect().map(_.getLong(0)).sorted
+      assert(rows.toSeq == Seq(0L, 1L, 2L, 3L), s"$lit: got ${rows.toSeq}")
+    }
   }
 
   test("r15 review: an inner-table-QUALIFIED local filter stays inside " +
@@ -222,27 +225,37 @@ class CorrelationRepairSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("r15 review: a middle block ending in GROUP BY keeps the " +
     "appended join conjuncts in its WHERE, not inside the trailing " +
     "clause") {
-    // TEXT-level assertion: Spark itself cannot analyze the healed
-    // grouped-correlated middle either way (a correlated scalar
-    // subquery may not GROUP BY non-correlated columns, so the repair
-    // driver surfaces the original error downstream) — but the
-    // flatten's OUTPUT must still be well-formed SQL: the join/free
-    // conjuncts land before the GROUP BY, never appended after it
-    // (`group by bo.b4 div 100 and (...)` made the join predicate part
-    // of the group key expression).
+    // The middle Aggregate's grouping expressions must come out
+    // unchanged and the moved key equality must land in the Filter
+    // below it — appended after the GROUP BY it would become part of
+    // the group key expression (`group by bo.b4 div 100 and (...)`).
     import graft.plans.CorrelationRepair
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{EqualTo, ScalarSubquery}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan}
     val sql = "select a1 from a where a1 = (select max(b1) from b bo " +
       "where b2 = (select b2 from b where b3 = a3 and b3 > 1) " +
       "and b2 < 30 group by bo.b4 div 100)"
-    val schema = CorrelationRepair.StatementSchema.of(spark, sql)
-    val flat = CorrelationRepair.flattenTwoLevel(sql, schema)
-    assert(flat != sql, "flatten did not fire on the grouped middle")
-    val gbAt = flat.indexOf("group by bo.b4")
-    assert(gbAt >= 0, s"middle GROUP BY lost: $flat")
-    assert(!flat.substring(gbAt).contains("__q1"),
-      s"appended conjuncts leaked past the GROUP BY: $flat")
-    assert(flat.substring(0, gbAt).contains("__q1_b3 = a3"),
-      s"join conjunct missing from the WHERE: $flat")
+    val parsed = spark.sessionState.sqlParser.parsePlan(sql)
+    val flat = CorrelationRepair.flattenTwoLevel(parsed,
+      CorrelationRepair.StatementSchema.of(spark, parsed))
+    assert(flat.isDefined, "flatten did not fire on the grouped middle")
+    def middle(p: LogicalPlan): Aggregate = p.collectFirst {
+      case Filter(c, _) => c.collectFirst { case s: ScalarSubquery => s.plan }
+    }.flatten.collect { case a: Aggregate => a }.get
+    val (before, after) = (middle(parsed), middle(flat.get))
+    assert(after.groupingExpressions == before.groupingExpressions,
+      s"middle GROUP BY changed: ${after.groupingExpressions}")
+    val moved = EqualTo(UnresolvedAttribute(Seq("__q1", "__q1_b3")),
+      UnresolvedAttribute(Seq("a3")))
+    assert(after.child.collectFirst { case Filter(c, _) => c }
+      .exists(_.exists(_ == moved)),
+      s"join conjunct missing from the WHERE below the GROUP BY: $after")
+    // and the healed statement runs: per a-row k the inner is k+1, the
+    // middle's single group max(b1) is k (DuckDB: 0;1;2)
+    val rows = withRepair(SqlRunner.exec(spark, sql))
+      .collect().map(_.getLong(0)).sorted
+    assert(rows.toSeq == Seq(0L, 1L, 2L), s"got ${rows.toSeq}")
   }
 
   test("r15 review: a dot inside a string literal does not disqualify " +
@@ -266,21 +279,28 @@ class CorrelationRepairSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.toSeq == Seq(0L, 1L, 2L, 3L), s"got ${rows.toSeq}")
   }
 
-  test("r15 review: fromCandidates handles AS aliases in comma lists " +
-    "and masks string literals") {
-    import graft.plans.CorrelationRepair.StatementSchema.fromCandidates
-    assert(fromCandidates(
+  private def schemaTables(sql: String): Set[String] =
+    graft.plans.CorrelationRepair.StatementSchema.of(spark,
+      spark.sessionState.sqlParser.parsePlan(sql)).tables.keySet
+
+  test("StatementSchema resolves every table of an AS-aliased comma " +
+    "list, and a string literal names no table") {
+    Seq("nation", "region", "customer").foreach { t =>
+      spark.sql(s"CREATE OR REPLACE TEMP VIEW $t AS SELECT id AS x, " +
+        "'' AS note FROM range(1)")
+    }
+    assert(schemaTables(
       "select * from nation as n, region r, customer where n.x = 1")
-      == Seq("nation", "region", "customer"))
-    assert(fromCandidates(
+      == Set("nation", "region", "customer"))
+    assert(schemaTables(
       "select * from nation where note = 'copied from region, customer'")
-      == Seq("nation"))
+      == Set("nation"))
   }
 
   test("r15 review: a disjunctive INNER where declines the hoist — " +
     "the AND-split of `k = outer and x or y` would re-associate the " +
     "OR and silently change which rows the scalar sees") {
-    // flatten already refuses (hasTopOr on the inner preds); the hoist
+    // flatten already refuses (the inner WHERE is a disjunction); the hoist
     // must too, so the statement keeps its original analyzer error.
     val sql = "select a1 from a where a1 = (select b1 from b bo " +
       "where b2 = (select b2 from b where b3 = a3 and b3 > 1 or b4 = 99)" +
@@ -314,24 +334,18 @@ class CorrelationRepairSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Option(e.getMessage).exists(_.contains("UNRESOLVED_COLUMN")))
   }
 
-  test("r15 review: word boundaries include underscore — a column " +
-    "named flag_or is not the OR keyword, col_and is not AND") {
-    import graft.plans.CorrelationRepair
-    assert(!CorrelationRepair.hasTopOr("m1 = 2 and flag_or = 1"))
-    assert(CorrelationRepair.topSplitAnd("col_and = 5 and x = 2")
-      == Seq("col_and = 5", "x = 2"))
-    assert(CorrelationRepair.hasTopOr("m1 = 2 or m2 = 1"))
-  }
-
-  test("r15 review: fromCandidates continues a comma list past a " +
-    "JOIN's ON condition, and stops at clause keywords") {
-    import graft.plans.CorrelationRepair.StatementSchema.fromCandidates
-    assert(fromCandidates(
+  test("StatementSchema continues a comma list past a JOIN's ON " +
+    "condition, and ORDER BY columns name no table") {
+    Seq("t1", "t2", "t3").foreach { t =>
+      spark.sql(s"CREATE OR REPLACE TEMP VIEW $t AS " +
+        "SELECT id AS k, id AS x, id AS p, id AS c1, id AS c2 FROM range(1)")
+    }
+    assert(schemaTables(
       "select * from t1 join t2 on t1.k = t2.k, t3 where x = 1")
-      == Seq("t1", "t2", "t3"))
-    assert(fromCandidates(
+      == Set("t1", "t2", "t3"))
+    assert(schemaTables(
       "select * from t1 join t2 on t1.k = t2.k where p order by c1, c2")
-      == Seq("t1", "t2"))
+      == Set("t1", "t2"))
   }
 
   test("r15 canary: the analyzer error classes the dispatch keys on " +
@@ -355,5 +369,31 @@ class CorrelationRepairSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"grouped-scalar rejection class drifted: ${e2.getCondition}")
     assert(e2.getMessage.contains(
       "SCALAR_SUBQUERY_IS_IN_GROUP_BY_OR_AGGREGATE_FUNCTION"))
+  }
+
+  // ------------------------------------------ battery repair-on-error
+  // shims (graft.regress.UnitMiner), on the same a/b views
+
+  test("battery shim: a partial derived-table alias list is padded to " +
+    "the child's arity and keeps the first k columns") {
+    val sql = "select a4 from (select a3, a4 from a) b(a4)"
+    val raw = intercept[Exception](spark.sql(sql).schema)
+    assert(raw.getMessage.contains("ASSIGNMENT_ARITY_MISMATCH"))
+    // a4 names the renamed first column, a3 (DuckDB: 2;3;4)
+    val rows = graft.regress.UnitMiner.analyzeRepaired(spark, sql)
+      .collect().map(_.getLong(0)).sorted
+    assert(rows.toSeq == Seq(2L, 3L, 4L), s"got ${rows.toSeq}")
+  }
+
+  test("battery shim: a table alias that names a column is renamed " +
+    "together with the qualified references to it") {
+    val sql = "select a1.a2 from a a1 " +
+      "where a1.a2 >= (select min(a2) from a where a2 > a1.a1)"
+    val raw = intercept[Exception](spark.sql(sql).schema)
+    assert(raw.getMessage.contains("INVALID_EXTRACT_BASE_FIELD_TYPE"))
+    // per outer row k: min(a2) over a2 > k is k+1 = the outer a2
+    val rows = graft.regress.UnitMiner.analyzeRepaired(spark, sql)
+      .collect().map(_.getLong(0)).sorted
+    assert(rows.toSeq == Seq(1L, 2L, 3L), s"got ${rows.toSeq}")
   }
 }

@@ -37,7 +37,12 @@ class NativeTextParitySpec extends AnyFunSuite {
       .toDF("doc_id", "ws", "text")
 
   test("WordShingles == array_distinct(transform(sequence, concat)) incl order") {
-    val df = corpus(300).filter(size(col("ws")) >= 3)
+    // null elements: concat makes every window holding one a null shingle
+    val withNulls = Seq(
+      (-1L, Seq("a", null, "c", "a", null, "c"), ""),
+      (-2L, Seq("x", "y", "z", null, "x", "y", "z"), ""))
+      .toDF("doc_id", "ws", "text")
+    val df = corpus(300).union(withNulls).filter(size(col("ws")) >= 3)
       .select(col("doc_id"),
         WordShingles(col("ws"), 3).as("nat"),
         expr("""array_distinct(transform(sequence(0, size(ws) - 3),

@@ -152,13 +152,7 @@ class SqlRunnerSpec extends AnyFunSuite {
     */
   private def resetTable(name: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $name")
-    val loc = new java.io.File(s"target/warehouse/$name")
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(loc)
-    }
+    GraftSession.removeTargetDir(s"warehouse/$name")
   }
 
   test("dialect: CREATE TABLE ... distributed by -> bucketed parquet table") {

@@ -37,20 +37,22 @@ class UnitBatterySpec extends AnyFunSuite {
       // 1062/1346/1349/1352/1356/1360/1364/3403/3416/3442/3484),
       // 1125/2645/2647/2649 (partial derived-table alias lists) and
       // 1369 (column-shadowing table alias). Round 12's repair-on-error
-      // rewrites (UnitMiner.flattenTwoLevel / padDerivedAliases /
-      // renameShadowAliases) close all but 1062, which is correlation
+      // rewrites (CorrelationRepair.flattenTwoLevel,
+      // UnitMiner.padDerivedAliases / renameShadowAliases; the
+      // correlation rewrites moved to CorrelationRepair in r15 and are
+      // plan transforms since) close all but 1062, which is correlation
       // under a top-level OR: the join flatten is only valid in a
       // conjunctive context (an inner join drops rows the OR's other
       // arm would admit), so the shape is re-pinned as an engine limit,
       // not rewrite-incomplete.
       // 1062 (two-level correlation under a disjunctive WHERE, where
       // the conjunctive flatten is invalid) healed in r13 by
-      // UnitMiner.hoistTwoLevelScalar — the inner subquery's value
+      // CorrelationRepair.hoistTwoLevelScalar — the inner subquery's value
       // depends only on outer-block columns, so it precomputes as a
       // grouped left join at the outer FROM (scalar error semantics
       // preserved via count + raise_error).
       // 1392 (correlated scalar subquery in a grouped select list)
-      // healed in r13 by UnitMiner.liftGroupedScalarSubquery.
+      // healed in r13 by CorrelationRepair.liftGroupedScalarSubquery.
       2215 -> ("reference defect, conceded in its own source: the " +
         "golden output 0,1;1,1;2,1 is what UnitTest.cs:2211-2215 " +
         "itself comments as 'incorrect results' (correct would be " +
