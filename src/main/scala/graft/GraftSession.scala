@@ -66,13 +66,11 @@ object GraftSession {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
     .config("spark.sql.warehouse.dir", targetDir("warehouse"))
-    // Streaming checkpoints for the bounded readStream verification path.
-    .config("spark.sql.streaming.checkpointLocation", targetDir("checkpoints"))
 
   /** `target/<rel>` under the process working directory, absolute: where
-    * the engine keeps its warehouse, streaming checkpoints and generated
-    * corpora. Run from the repository root, that is the build's own
-    * `target/`.
+    * the engine keeps its warehouse, generated corpora and the fixed
+    * output directories of queries whose result reads files lazily. Run
+    * from the repository root, that is the build's own `target/`.
     */
   def targetDir(rel: String): String =
     java.nio.file.Paths.get("target", rel).toAbsolutePath.toString

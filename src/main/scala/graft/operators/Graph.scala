@@ -12,19 +12,13 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** The family's checkpoint laziness, conf-gated for A/B soaks
-    * (`spark.graft.graph.eagerCheckpoint`, default false = lazy).
-    * Lazy (optimization r15) skips the dedicated materialization job and
-    * the extra row pass per checkpoint — blocks persist during the first
-    * consuming stage; the guaranteed-once contract is identical either
-    * way. The r16 interleaved soak (OPTIMIZATION_r16.md) re-verified the
-    * r15 claim with a committed artifact; the gate stays so any host can
-    * reproduce the A/B with --conf, same pattern as
-    * spark.graft.graph.packedAdjacency.
+  /** The family's lazy local checkpoint. Lazy (optimization r15, measured
+    * faster than eager and re-verified in OPTIMIZATION_r16.md) skips the
+    * dedicated materialization job and the extra row pass per checkpoint
+    * — blocks persist during the first consuming stage; the
+    * guaranteed-once contract is identical either way.
     */
-  private def ckpt(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = df.sparkSession.conf
-      .get("spark.graft.graph.eagerCheckpoint", "false").toBoolean)
+  private def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
 
   /** Undirected co-occurrence edge list: one (a < b) edge per pair of
     * distinct `item`s sharing a `group`. One shuffle on group to gather

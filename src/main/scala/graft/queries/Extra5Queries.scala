@@ -152,12 +152,12 @@ object Extra5Queries {
 
   /** Z-order layout rewrite + pruned 2-D probe
     * ([[Maintenance.zorderWrite]]): the OPTIMIZE ZORDER maintenance op
-    * on vanilla parquet.
+    * on vanilla parquet. The probe reads the rewrite lazily, so it lives
+    * in one fixed `target/` directory that each run overwrites.
     */
   val zorder: QueryDef = QueryDef("maintenance_zorder",
     (s, dir) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_zorder").toString
+      val out = graft.GraftSession.targetDir("maintenance_zorder")
       val ev = Tables.load(s, dir, "events")
         .select("event_id", "user_id", "value")
       Maintenance.zorderWrite(ev, "user_id", "value", out, 16)

@@ -104,14 +104,7 @@ object ExtraQueries {
   val bucketed: QueryDef = QueryDef("ddl_bucketed",
     (s, dir) => {
       Tables.registerAll(s, dir)
-      s.sql("DROP TABLE IF EXISTS orders_bucketed")
-      val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      val loc = java.nio.file.Paths.get(wh, "orders_bucketed")
-      if (java.nio.file.Files.exists(loc)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
+      SourceSinkQueries.dropTableAndLocation(s, "orders_bucketed")
       s.table("orders")
         .write.bucketBy(8, "o_custkey").sortBy("o_custkey")
         .format("parquet").saveAsTable("orders_bucketed")

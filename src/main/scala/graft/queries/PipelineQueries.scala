@@ -1053,15 +1053,13 @@ object PipelineQueries {
       // text join, the language join) otherwise each re-scan the
       // text-heavy documents source — 6 file scans measured in the
       // initial plan, dedup'd only if ReuseExchange fires. One scan of
-      // the lake's fattest table, guaranteed. Eager-vs-lazy is
-      // conf-switchable for the 100× variance A/B (lazy materializes
-      // during whichever consumer job fires first; eager pays one
-      // dedicated materialization job up front) — see BASELINE.md for
-      // the measured decision.
+      // the lake's fattest table, guaranteed. Lazy, the measured
+      // faster choice (BASELINE.md): it materializes during whichever
+      // consumer job fires first, where eager pays one dedicated
+      // materialization job up front.
       val corpus = d.unionByName(d.filter("doc_id % 5 = 0")
         .selectExpr("doc_id + 10000 AS doc_id", "text", "lang"))
-        .localCheckpoint(eager = s.conf
-          .get("spark.graft.pipeline.eagerCheckpoint", "false").toBoolean)
+        .localCheckpoint(eager = false)
       val canonical = Dedup.exact(corpus)
         .join(corpus, org.apache.spark.sql.functions.expr("keep_id = doc_id"))
       val quality = TextAnalysis.stats(

@@ -21,15 +21,11 @@ object SourceSinkQueries {
     * run gets a fresh in-memory metastore, so DROP TABLE IF EXISTS cannot
     * see (or clean) the previous run's location.
     */
-  private def dropTableAndLocation(s: SparkSession, table: String): Unit = {
+  private[queries] def dropTableAndLocation(s: SparkSession, table: String): Unit = {
     s.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = java.nio.file.Paths.get(
+    graft.GraftSession.removeDir(java.nio.file.Paths.get(
       s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), table)
-    if (java.nio.file.Files.exists(loc)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+      .toString)
   }
 
   private val supplierChecksum =
@@ -390,13 +386,17 @@ object SourceSinkQueries {
         .createTempDirectory("graft_tiny").toString
       val out = java.nio.file.Files
         .createTempDirectory("graft_compacted").toString
-      val docs = Tables.load(s, dir, "documents")
-      docs.repartition(64).write.mode("overwrite").parquet(tiny)
-      val nOut = graft.operators.Maintenance.compact(s, tiny, out)
-      val nIn = docs.count()
-      val nAfter = s.read.parquet(out).count()
-      import s.implicits._
-      Seq((nIn == nAfter, nOut < 64)).toDF("rows_preserved", "fewer_files")
+      // Both counts run eagerly and the result is a local frame, so
+      // the scratch dirs go before returning.
+      try {
+        val docs = Tables.load(s, dir, "documents")
+        docs.repartition(64).write.mode("overwrite").parquet(tiny)
+        val nOut = graft.operators.Maintenance.compact(s, tiny, out)
+        val nIn = docs.count()
+        val nAfter = s.read.parquet(out).count()
+        import s.implicits._
+        Seq((nIn == nAfter, nOut < 64)).toDF("rows_preserved", "fewer_files")
+      } finally Seq(tiny, out).foreach(graft.GraftSession.removeDir)
     },
     Some("SELECT TRUE AS rows_preserved, TRUE AS fewer_files"))
 

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
@@ -67,7 +65,7 @@ object Streams {
     */
   def tumbleAvailableNow(spark: SparkSession, dir: String,
                          queryName: String = "graft_stream_tumble"): DataFrame =
-    runComplete(tumbleAgg(spark, dir), queryName)
+    runToMemory(tumbleAgg(spark, dir), queryName)
 
   private def tumbleAgg(spark: SparkSession, dir: String): DataFrame =
     eventsStream(spark, dir)
@@ -86,37 +84,39 @@ object Streams {
     * directory convention. At scale foreachBatch is the idiomatic exit
     * to any batch writer (parquet/JDBC/Delta) with exactly-once per
     * batch id; the write runs at the sink dataframe's parallelism, not
-    * through the driver.
+    * through the driver. The target is one fixed directory under
+    * `target/`, replaced by every run's overwrite.
     */
   def tumbleToParquet(spark: SparkSession, dir: String): DataFrame = {
-    val out = Files.createTempDirectory("graft_stream_parquet").toString
-    val q = tumbleAgg(spark, dir).writeStream
+    val out = graft.GraftSession.targetDir("stream_tumble_parquet")
+    tumbleAgg(spark, dir).writeStream
       .outputMode("complete")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         batch.write.mode("overwrite").parquet(out)
       }
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_stream_ckpt").toString)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+      .awaitTermination()
     spark.read.parquet(out)
   }
 
-  /** Shared runner: execute a streaming aggregate to completion into a
-    * memory sink (complete mode) and return the result table.
+  /** The bounded-stream runner every query here shares: run `df` to
+    * completion (Trigger.AvailableNow) into a memory sink named
+    * `queryName`, in output mode `mode`, and return the sink table. No
+    * checkpoint location is passed (nor by [[tumbleToParquet]]): Spark
+    * gives the query its own temporary checkpoint and deletes it when
+    * the query stops cleanly.
     */
-  private def runComplete(agg: DataFrame, queryName: String): DataFrame = {
-    val q = agg.writeStream
+  private[graft] def runToMemory(df: DataFrame, queryName: String,
+                                 mode: String = "complete"): DataFrame = {
+    df.writeStream
       .format("memory")
       .queryName(queryName)
-      .outputMode("complete")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_stream_ckpt").toString)
+      .outputMode(mode)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-    agg.sparkSession.table(queryName)
+      .awaitTermination()
+    df.sparkSession.table(queryName)
   }
 
   /** Stream–static enrichment: the unbounded event scan joined to the
@@ -131,7 +131,7 @@ object Streams {
       queryName: String = "graft_stream_enrich"): DataFrame = {
     val cust = graft.catalog.Tables.load(spark, dir, "customer")
       .select(col("c_custkey"), col("c_nationkey"))
-    runComplete(
+    runToMemory(
       eventsStream(spark, dir)
         .join(cust, col("user_id") === col("c_custkey"))
         .groupBy(col("c_nationkey"))
@@ -150,7 +150,7 @@ object Streams {
     */
   def sessionAvailableNow(spark: SparkSession, dir: String,
                           queryName: String = "graft_stream_session"): DataFrame =
-    runComplete(
+    runToMemory(
       eventsStream(spark, dir)
         .filter(col("user_id") <= 20)
         .withWatermark("ts", "1 hour")
@@ -165,7 +165,7 @@ object Streams {
     */
   def hopAvailableNow(spark: SparkSession, dir: String,
                       queryName: String = "graft_stream_hop"): DataFrame =
-    runComplete(
+    runToMemory(
       eventsStream(spark, dir)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "12 hours", "6 hours"))
@@ -180,7 +180,17 @@ object Streams {
     * then aggregated so the oracle output is compact.
     */
   def clickViewJoinAvailableNow(spark: SparkSession, dir: String,
-                                queryName: String = "graft_stream_ssjoin"): DataFrame = {
+                                queryName: String = "graft_stream_ssjoin"): DataFrame =
+    runToMemory(clickViewJoin(spark, dir, "inner"), queryName, "append")
+      .groupBy("user_id")
+      .agg(count("*").as("n_pairs"))
+
+  /** The click/view stream-stream join under `joinType`: each click
+    * against the same user's views in the preceding 30 minutes, both
+    * sides watermarked (1 hour) so join state is bounded.
+    */
+  private def clickViewJoin(spark: SparkSession, dir: String,
+                            joinType: String): DataFrame = {
     val clicks = eventsStream(spark, dir)
       .filter("event_type = 'click' AND user_id < 20")
       .select(col("user_id"), col("ts").as("click_ts"),
@@ -190,22 +200,10 @@ object Streams {
       .filter("event_type = 'view' AND user_id < 20")
       .select(col("user_id").as("v_user"), col("ts").as("view_ts"))
       .withWatermark("view_ts", "1 hour")
-    val joined = clicks.join(views, expr(
+    clicks.join(views, expr(
       """user_id = v_user AND
         |view_ts >= click_ts - INTERVAL 30 MINUTES AND
-        |view_ts < click_ts""".stripMargin))
-    val q = joined.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_stream_ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-      .groupBy("user_id")
-      .agg(count("*").as("n_pairs"))
+        |view_ts < click_ts""".stripMargin), joinType)
   }
 
   /** Streaming drift monitor: per-tumbling-window PSI of the event-value
@@ -222,7 +220,7 @@ object Streams {
   def psiDriftWindowedAvailableNow(spark: SparkSession, dir: String,
       queryName: String = "graft_stream_psi"): DataFrame = {
     val binExpr = "CAST(floor(value / 10) AS BIGINT)"
-    runComplete(
+    runToMemory(
       eventsStream(spark, dir)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "6 hours"), expr(binExpr).as("b"))
@@ -297,16 +295,7 @@ object Streams {
     val kept = flagged.filter(!col("probable")).drop("probable")
       .unionByName(flagged.filter(col("probable")).drop("probable")
         .join(ex, Seq("h"), "left_anti"))
-    val q = kept.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_stream_ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    runToMemory(kept, queryName, "append")
       .agg(count(lit(1)).as("n_kept"),
         sum("doc_id").cast("long").as("sum_ids"))
   }
@@ -345,29 +334,7 @@ object Streams {
   def clickViewLeftOuterAvailableNow(spark: SparkSession, dir: String,
       queryName: String = "graft_stream_ssjoin_outer"): DataFrame = {
     val maxTs = joinWatermarkBase(spark, dir)
-    val clicks = eventsStream(spark, dir)
-      .filter("event_type = 'click' AND user_id < 20")
-      .select(col("user_id"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val views = eventsStream(spark, dir)
-      .filter("event_type = 'view' AND user_id < 20")
-      .select(col("user_id").as("v_user"), col("ts").as("view_ts"))
-      .withWatermark("view_ts", "1 hour")
-    val joined = clicks.join(views, expr(
-      """user_id = v_user AND
-        |view_ts >= click_ts - INTERVAL 30 MINUTES AND
-        |view_ts < click_ts""".stripMargin), "left_outer")
-    val q = joined.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_stream_ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    runToMemory(clickViewJoin(spark, dir, "left_outer"), queryName, "append")
       .filter(col("click_ts") <= lit(maxTs) - expr("INTERVAL 2 HOURS"))
       .groupBy("user_id")
       .agg(count(col("view_ts")).as("n_pairs"),
@@ -385,30 +352,8 @@ object Streams {
   def clickViewFullOuterAvailableNow(spark: SparkSession, dir: String,
       queryName: String = "graft_stream_ssjoin_full"): DataFrame = {
     val maxTs = joinWatermarkBase(spark, dir)
-    val clicks = eventsStream(spark, dir)
-      .filter("event_type = 'click' AND user_id < 20")
-      .select(col("user_id"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val views = eventsStream(spark, dir)
-      .filter("event_type = 'view' AND user_id < 20")
-      .select(col("user_id").as("v_user"), col("ts").as("view_ts"))
-      .withWatermark("view_ts", "1 hour")
-    val joined = clicks.join(views, expr(
-      """user_id = v_user AND
-        |view_ts >= click_ts - INTERVAL 30 MINUTES AND
-        |view_ts < click_ts""".stripMargin), "full_outer")
-    val q = joined.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_stream_ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     val cutoff = lit(maxTs) - expr("INTERVAL 2 HOURS")
-    spark.table(queryName)
+    runToMemory(clickViewJoin(spark, dir, "full_outer"), queryName, "append")
       .filter(coalesce(col("click_ts"), col("view_ts")) <= cutoff)
       .groupBy(coalesce(col("user_id"), col("v_user")).as("uid"))
       .agg(
@@ -424,23 +369,14 @@ object Streams {
     * oracle can recompute (COUNT(DISTINCT user_id) per type).
     */
   def dedupAvailableNow(spark: SparkSession, dir: String,
-                        queryName: String = "graft_stream_dedup"): DataFrame = {
-    val q = eventsStream(spark, dir)
-      .select("user_id", "event_type")
-      .dropDuplicates("user_id", "event_type")
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_stream_ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+                        queryName: String = "graft_stream_dedup"): DataFrame =
+    runToMemory(
+      eventsStream(spark, dir)
+        .select("user_id", "event_type")
+        .dropDuplicates("user_id", "event_type"),
+      queryName, "append")
       .groupBy("event_type")
       .agg(count("*").as("n_users"))
-  }
 
   /** Watermark-bounded streaming dedup: like [[dedupAvailableNow]] but
     * via dropDuplicatesWithinWatermark — state for a key is EVICTED once
@@ -451,24 +387,15 @@ object Streams {
     */
   def dedupWithinWatermarkAvailableNow(
       spark: SparkSession, dir: String,
-      queryName: String = "graft_stream_dedup_wm"): DataFrame = {
-    val q = eventsStream(spark, dir)
-      .withWatermark("ts", "365 days")
-      .select(col("user_id"), col("event_type"), col("ts"))
-      .dropDuplicatesWithinWatermark("user_id", "event_type")
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_stream_ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+      queryName: String = "graft_stream_dedup_wm"): DataFrame =
+    runToMemory(
+      eventsStream(spark, dir)
+        .withWatermark("ts", "365 days")
+        .select(col("user_id"), col("event_type"), col("ts"))
+        .dropDuplicatesWithinWatermark("user_id", "event_type"),
+      queryName, "append")
       .groupBy("event_type")
       .agg(count("*").as("n_users"))
-  }
 
   /** Streaming NEAR-dup dedup: the LLM-pipeline ingest shape — documents
     * arrive as a stream, each gets a SimHash fingerprint (the codegen'd
@@ -485,28 +412,20 @@ object Streams {
     */
   def simhashDedupAvailableNow(
       spark: SparkSession, dir: String, bits: Int = 16,
-      queryName: String = "graft_stream_neardup"): DataFrame = {
-    val q = tableStream(spark, dir, "documents")
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .select(col("doc_id"),
-        graft.functions.SimHashFingerprint(col("ws"), bits).as("fp"))
-      .dropDuplicates("fp")
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_stream_ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName).agg(
-      count("*").as("n_families"),
-      min("fp").as("mn_fp"),
-      max("fp").as("mx_fp"),
-      expr("""CAST(SUM(CAST(conv(substring(md5(fp), 1, 12), 16, 10)
-             |  AS BIGINT)) AS BIGINT)""".stripMargin).as("fp_checksum"))
-  }
+      queryName: String = "graft_stream_neardup"): DataFrame =
+    runToMemory(
+      tableStream(spark, dir, "documents")
+        .select(col("doc_id"), split(col("text"), " ").as("ws"))
+        .select(col("doc_id"),
+          graft.functions.SimHashFingerprint(col("ws"), bits).as("fp"))
+        .dropDuplicates("fp"),
+      queryName, "append")
+      .agg(
+        count("*").as("n_families"),
+        min("fp").as("mn_fp"),
+        max("fp").as("mx_fp"),
+        expr("""CAST(SUM(CAST(conv(substring(md5(fp), 1, 12), 16, 10)
+               |  AS BIGINT)) AS BIGINT)""".stripMargin).as("fp_checksum"))
 
   /** Streaming ingest-prep: the gate a continuously-crawling pipeline
     * runs ON ARRIVAL — each incoming document (odd doc_ids here, the
@@ -537,28 +456,20 @@ object Streams {
       .select(graft.functions.SimHashFingerprint(col("ws"), bits).as("fp"))
       .distinct()
       .withColumn("known", lit(1))
-    val q = tableStream(spark, dir, "documents")
-      .filter("doc_id % 2 = 1")
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .withColumn("fp", graft.functions.SimHashFingerprint(col("ws"), bits))
-      .withColumn("quality_ok", expr(
-        s"size(ws) >= $minWords AND size(array_distinct(ws)) / size(ws) >= $minTtr"))
-      .join(broadcast(existing), Seq("fp"), "left")
-      .withColumn("verdict", expr(
-        """CASE WHEN NOT quality_ok THEN 'reject_quality'
-          |     WHEN known = 1 THEN 'reject_dup'
-          |     ELSE 'admit' END""".stripMargin))
-      .select("doc_id", "verdict")
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_stream_ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    runToMemory(
+      tableStream(spark, dir, "documents")
+        .filter("doc_id % 2 = 1")
+        .select(col("doc_id"), split(col("text"), " ").as("ws"))
+        .withColumn("fp", graft.functions.SimHashFingerprint(col("ws"), bits))
+        .withColumn("quality_ok", expr(
+          s"size(ws) >= $minWords AND size(array_distinct(ws)) / size(ws) >= $minTtr"))
+        .join(broadcast(existing), Seq("fp"), "left")
+        .withColumn("verdict", expr(
+          """CASE WHEN NOT quality_ok THEN 'reject_quality'
+            |     WHEN known = 1 THEN 'reject_dup'
+            |     ELSE 'admit' END""".stripMargin))
+        .select("doc_id", "verdict"),
+      queryName, "append")
       .groupBy("verdict")
       .agg(count(lit(1)).as("n"), sum("doc_id").as("sum_doc_id"))
   }
@@ -597,17 +508,7 @@ object Streams {
       .select(col("event_id"), col("user_id"), col("ts"),
         col("event_type"))
       .as[AsofIn]
-    val q = asofWalk(ev).toDF()
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_stream_ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    runToMemory(asofWalk(ev).toDF(), queryName, "append")
       .select("event_id", "user_id", "ts", "view_ts", "view_event_id")
   }
 
@@ -695,15 +596,6 @@ object Streams {
     val assigned = graft.operators.Similarity
       .assignEmbeddings(incoming, cents)
       .select(col("vec_id"), col("cid"), col("cos_centroid"))
-    val q = assigned.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_stream_ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    runToMemory(assigned, queryName, "append")
   }
 }

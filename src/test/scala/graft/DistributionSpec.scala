@@ -72,8 +72,7 @@ class DistributionSpec extends AnyFunSuite {
       } finally
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
           (10L << 20).toString)
-    } finally
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+    } finally GraftSession.removeDir(dir.toString)
   }
 
   test("roundrobin: repartition(n) produces a round-robin exchange") {
@@ -87,12 +86,7 @@ class DistributionSpec extends AnyFunSuite {
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     Seq("b_orders", "b_lineitem").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = java.nio.file.Paths.get(wh, t)
-      if (java.nio.file.Files.exists(loc)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
+      GraftSession.removeDir(java.nio.file.Paths.get(wh, t).toString)
     }
     Tables.load(spark, sfDir, "orders")
       .write.bucketBy(4, "o_orderkey").sortBy("o_orderkey")

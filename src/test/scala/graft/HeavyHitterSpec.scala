@@ -58,8 +58,6 @@ class HeavyHitterSpec extends AnyFunSuite {
       .select(col("r.item"), col("r.c_lo"), col("r.c_hi"))
       .writeStream.format("memory").queryName("hh_stream")
       .outputMode("complete")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_test_ckpt").toString)
       .start()
     try {
       val b1 = Seq.fill(60)("hot") ++ (1 to 20).map(i => s"rare_a_$i")
@@ -124,8 +122,6 @@ class HeavyHitterSpec extends AnyFunSuite {
       .select(col("r.item"), col("r.c_lo"), col("r.c_hi"))
       .writeStream.format("memory").queryName("hh_grams_stream")
       .outputMode("complete")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_test_ckpt2").toString)
       .start()
     try {
       val boiler = "click here to subscribe now"

@@ -206,7 +206,7 @@ class OperatorSpec extends AnyFunSuite {
         new java.io.File(dir).listFiles().nonEmpty)
     } finally {
       hadCkpt.foreach(spark.sparkContext.setCheckpointDir)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      GraftSession.removeDir(dir)
     }
   }
 

@@ -113,12 +113,7 @@ class PlanShapeSpec extends AnyFunSuite {
     "(reference ANALYZE -> CE, Statis.cs)") {
     spark.sql("DROP TABLE IF EXISTS stats_probe")
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val loc = java.nio.file.Paths.get(wh, "stats_probe")
-    if (java.nio.file.Files.exists(loc)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    GraftSession.removeDir(java.nio.file.Paths.get(wh, "stats_probe").toString)
     spark.sql("CREATE TABLE stats_probe USING PARQUET AS SELECT * FROM nation")
     spark.sql("ANALYZE TABLE stats_probe COMPUTE STATISTICS FOR ALL COLUMNS")
     val stats = spark.table("stats_probe").queryExecution.optimizedPlan.stats

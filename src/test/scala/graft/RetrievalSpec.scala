@@ -198,10 +198,10 @@ class RetrievalSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val clash = Seq((1L, 2L, 3L)).toDF("x", "y", "__zg_z")
-    intercept[IllegalArgumentException] {
-      graft.operators.Maintenance.zorderWrite(clash, "x", "y",
-        java.nio.file.Files.createTempDirectory("zg").toString, 2)
-    }
+    val zg = java.nio.file.Files.createTempDirectory("zg").toString
+    try intercept[IllegalArgumentException] {
+      graft.operators.Maintenance.zorderWrite(clash, "x", "y", zg, 2)
+    } finally GraftSession.removeDir(zg)
   }
 
   test("leakageSafeSplit: connected docs share a split; every doc assigned once") {

@@ -23,13 +23,7 @@ class SessionSpec extends AnyFunSuite {
 
   private def withDir(test: java.io.File => Unit): Unit = {
     val dir = Files.createTempDirectory("graft-session-spec").toFile
-    try test(dir)
-    finally {
-      Option(dir.listFiles).foreach(_.foreach { f =>
-        Option(f.listFiles).foreach(_.foreach(_.delete())); f.delete()
-      })
-      dir.delete()
-    }
+    try test(dir) finally GraftSession.removeDir(dir.getPath)
   }
 
   /** Sparse file: length() reports the logical size without writing it. */

@@ -25,18 +25,12 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = s.sqlContext
     val mem = MemoryStream[Timestamp]
     mem.addData(astTimes: _*)
-    val name = s"ast_${groupExpr.hashCode.abs}"
-    val q = mem.toDF().withColumnRenamed("value", "a0")
-      .groupBy(expr(groupExpr)).count()
-      .selectExpr("window.start AS ws", "count")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_test_ckpt").toString)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name).collect()
-      .map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
+    graft.streaming.Streams.runToMemory(
+      mem.toDF().withColumnRenamed("value", "a0")
+        .groupBy(expr(groupExpr)).count()
+        .selectExpr("window.start AS ws", "count"),
+      s"ast_${groupExpr.hashCode.abs}")
+      .collect().map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
   }
 
   test("tumbling window groups 2;2;1 (reference UnitTest.cs:3685-3694)") {
@@ -64,19 +58,14 @@ class StreamingSpec extends AnyFunSuite {
     // streaming session windows require a grouping key alongside the
     // window (global session aggregation is unsupported) — use a
     // constant key, dropped on output
-    val q = mem.toDF().withColumnRenamed("value", "a0")
-      .withWatermark("a0", "0 seconds")
-      .withColumn("k", lit(1))
-      .groupBy($"k", session_window($"a0", "10 seconds")).count()
-      .selectExpr("session_window.start AS ss", "count")
-      .writeStream.format("memory").queryName("ast_session")
-      .outputMode("complete")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_test_ckpt").toString)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table("ast_session").collect()
-      .map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
+    val got = graft.streaming.Streams.runToMemory(
+      mem.toDF().withColumnRenamed("value", "a0")
+        .withWatermark("a0", "0 seconds")
+        .withColumn("k", lit(1))
+        .groupBy($"k", session_window($"a0", "10 seconds")).count()
+        .selectExpr("session_window.start AS ss", "count"),
+      "ast_session")
+      .collect().map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
     assert(got == Map(
       Timestamp.valueOf("2020-05-12 07:22:16") -> 4L,
       Timestamp.valueOf("2020-05-12 07:22:56") -> 1L))
@@ -91,8 +80,6 @@ class StreamingSpec extends AnyFunSuite {
     val q = runningUserTotals(mem.toDS())
       .writeStream.format("memory").queryName("user_totals")
       .outputMode("update")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_test_ckpt").toString)
       .start()
     try {
       mem.addData(UserEvent(1, 2.0), UserEvent(1, 3.0), UserEvent(2, 1.0))
@@ -127,8 +114,6 @@ class StreamingSpec extends AnyFunSuite {
       .dropDuplicatesWithinWatermark("k")
       .writeStream.format("memory").queryName("rocks_dedup")
       .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_test_ckpt").toString)
       .start()
     try {
       mem.addData((1L, ts(0)), (1L, ts(1)), (2L, ts(5)))
@@ -170,8 +155,6 @@ class StreamingSpec extends AnyFunSuite {
       .dropDuplicates("fp")
       .writeStream.format("memory").queryName("rocks_simhash")
       .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_test_ckpt").toString)
       .start()
     try {
       mem.addData((1L, "the quick brown fox jumps over the lazy dog"),
@@ -193,8 +176,17 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("bounded stream scan over events parquet executes end-to-end") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def checkpointDirs() = Option(tmp.list).map(_.toSet).getOrElse(Set.empty)
+      .filter(n => n.startsWith("graft_stream_ckpt") ||
+        n.startsWith("temporary-"))
+    val before = checkpointDirs()
     val df = graft.streaming.Streams.tumbleAvailableNow(
       spark, sfDir, queryName = "test_stream_tumble")
+    // Spark owns the checkpoint: a temporary one, deleted on a clean stop.
+    val leaked = checkpointDirs() -- before
+    assert(leaked.isEmpty, s"checkpoint dirs left in $tmp: $leaked")
+    assert(!new java.io.File(GraftSession.targetDir("checkpoints")).exists)
     assert(df.count() > 0)
     assert(df.columns.toSeq == Seq("w_start", "cnt", "sum_v"))
   }
@@ -215,8 +207,6 @@ class StreamingSpec extends AnyFunSuite {
       .selectExpr("window.start AS ws", "count")
       .writeStream.format("memory").queryName("late_tumble")
       .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_test_ckpt").toString)
       .start()
     try {
       // Batch 1: two rows in the 07:00 window, one at 07:02:30 that
@@ -255,8 +245,6 @@ class StreamingSpec extends AnyFunSuite {
       .selectExpr("session_window.start AS ss", "count")
       .writeStream.format("memory").queryName("late_session")
       .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_test_ckpt").toString)
       .start()
     try {
       // Session [07:00:00, 07:00:15) of two events; 07:05:00 pushes the
@@ -292,8 +280,6 @@ class StreamingSpec extends AnyFunSuite {
         |AND view_ts < click_ts""".stripMargin), "left_outer")
     val q = j.writeStream.format("memory").queryName("ssjoin_outer_sem")
       .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_test_ckpt").toString)
       .start()
     try {
       // Batch 1: C1(u1 @07:01:00) has a matching view 10 s earlier;
@@ -331,8 +317,6 @@ class StreamingSpec extends AnyFunSuite {
       .selectExpr("window.start AS ws", "count")
       .writeStream.format("memory").queryName("late_merged")
       .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_test_ckpt").toString)
       .start()
     try {
       mem.addData(
@@ -374,8 +358,6 @@ class StreamingSpec extends AnyFunSuite {
       .asofWalk(mem.toDS()).toDF()
       .writeStream.format("memory").queryName("asof_walk")
       .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_test_ckpt").toString)
       .start()
     try {
       mem.addData(ev(50, 5, "click"), ev(20, 3, "view"), ev(21, 3, "view"),
@@ -415,8 +397,6 @@ class StreamingSpec extends AnyFunSuite {
     val q = stream.select("vec_id", "cid")
       .writeStream.format("memory").queryName("ann_assign")
       .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_test_ckpt").toString)
       .start()
     try {
       val (b1, b2) = rows.splitAt(rows.length / 2)
@@ -443,10 +423,12 @@ class StreamingSpec extends AnyFunSuite {
   private def landFile(df: org.apache.spark.sql.DataFrame,
                        srcDir: java.nio.file.Path, name: String): Unit = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_half")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = new java.io.File(tmp.toString).listFiles
-      .find(f => f.getName.endsWith(".parquet")).get
-    java.nio.file.Files.move(part.toPath, srcDir.resolve(name))
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = new java.io.File(tmp.toString).listFiles
+        .find(f => f.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(part.toPath, srcDir.resolve(name))
+    } finally GraftSession.removeDir(tmp.toString)
   }
 
   test("checkpoint recovery: tumbling agg state survives a stop/restart") {
@@ -454,48 +436,51 @@ class StreamingSpec extends AnyFunSuite {
     import s.implicits._
     val srcDir = java.nio.file.Files.createTempDirectory("graft_ckpt_src")
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_rec")
-    def ev(sec: Int, v: Double) = (java.sql.Timestamp.from(
-      Timestamp.valueOf("2020-05-12 08:00:00").toInstant.plusSeconds(sec)), v)
-    // Window = 10s. First half covers windows 0,10; second half ADDS to
-    // window 10 and opens window 20 — so the recovered run can only be
-    // right if window 10's partial count survived the restart.
-    val half1 = Seq(ev(1, 1.0), ev(2, 1.0), ev(11, 1.0))
-    val half2 = Seq(ev(12, 1.0), ev(13, 1.0), ev(21, 1.0))
-    val schema = half1.toDF("ts", "v").schema
-    def runOnce(sinkName: String): Map[java.sql.Timestamp, Long] = {
+    val freshCkpt = java.nio.file.Files.createTempDirectory("graft_ckpt_fresh")
+    try {
+      def ev(sec: Int, v: Double) = (java.sql.Timestamp.from(
+        Timestamp.valueOf("2020-05-12 08:00:00").toInstant.plusSeconds(sec)), v)
+      // Window = 10s. First half covers windows 0,10; second half ADDS to
+      // window 10 and opens window 20 — so the recovered run can only be
+      // right if window 10's partial count survived the restart.
+      val half1 = Seq(ev(1, 1.0), ev(2, 1.0), ev(11, 1.0))
+      val half2 = Seq(ev(12, 1.0), ev(13, 1.0), ev(21, 1.0))
+      val schema = half1.toDF("ts", "v").schema
+      def runOnce(sinkName: String): Map[java.sql.Timestamp, Long] = {
+        val q = s.readStream.schema(schema).parquet(srcDir.toString)
+          .withWatermark("ts", "5 seconds")
+          .groupBy(window(col("ts"), "10 seconds")).count()
+          .selectExpr("window.start AS ws", "count")
+          .writeStream.format("memory").queryName(sinkName)
+          .outputMode("complete")
+          .option("checkpointLocation", ckpt.toString)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        s.table(sinkName).collect().map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
+      }
+      landFile(half1.toDF("ts", "v"), srcDir, "half1.parquet")
+      val partial = runOnce("ckpt_rec_run1") // query STOPS here (AvailableNow)
+      assert(partial.values.sum == 3, s"first half processed: $partial")
+      landFile(half2.toDF("ts", "v"), srcDir, "half2.parquet")
+      val recovered = runOnce("ckpt_rec_run2") // restart from same checkpoint
+      // Uninterrupted baseline: same input, fresh checkpoint + sink.
       val q = s.readStream.schema(schema).parquet(srcDir.toString)
         .withWatermark("ts", "5 seconds")
         .groupBy(window(col("ts"), "10 seconds")).count()
         .selectExpr("window.start AS ws", "count")
-        .writeStream.format("memory").queryName(sinkName)
+        .writeStream.format("memory").queryName("ckpt_rec_base")
         .outputMode("complete")
-        .option("checkpointLocation", ckpt.toString)
+        .option("checkpointLocation", freshCkpt.toString)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      s.table(sinkName).collect().map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
-    }
-    landFile(half1.toDF("ts", "v"), srcDir, "half1.parquet")
-    val partial = runOnce("ckpt_rec_run1") // query STOPS here (AvailableNow)
-    assert(partial.values.sum == 3, s"first half processed: $partial")
-    landFile(half2.toDF("ts", "v"), srcDir, "half2.parquet")
-    val recovered = runOnce("ckpt_rec_run2") // restart from same checkpoint
-    // Uninterrupted baseline: same input, fresh checkpoint + sink.
-    val freshCkpt = java.nio.file.Files.createTempDirectory("graft_ckpt_fresh")
-    val q = s.readStream.schema(schema).parquet(srcDir.toString)
-      .withWatermark("ts", "5 seconds")
-      .groupBy(window(col("ts"), "10 seconds")).count()
-      .selectExpr("window.start AS ws", "count")
-      .writeStream.format("memory").queryName("ckpt_rec_base")
-      .outputMode("complete")
-      .option("checkpointLocation", freshCkpt.toString)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val base = s.table("ckpt_rec_base").collect()
-      .map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
-    assert(recovered == base,
-      s"recovered run diverged from uninterrupted: $recovered vs $base")
-    // The split window really did span the restart (2+1 either side).
-    assert(recovered(Timestamp.valueOf("2020-05-12 08:00:10")) == 3L)
+      val base = s.table("ckpt_rec_base").collect()
+        .map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
+      assert(recovered == base,
+        s"recovered run diverged from uninterrupted: $recovered vs $base")
+      // The split window really did span the restart (2+1 either side).
+      assert(recovered(Timestamp.valueOf("2020-05-12 08:00:10")) == 3L)
+    } finally
+      Seq(srcDir, ckpt, freshCkpt).foreach(d => GraftSession.removeDir(d.toString))
   }
 
   test("checkpoint recovery: dropDuplicates seen-keys state survives restart") {
@@ -507,27 +492,30 @@ class StreamingSpec extends AnyFunSuite {
     // parquet FILE sink is the fault-tolerant production sink, so the
     // restart goes through it and reads the directory back.
     val outDir = java.nio.file.Files.createTempDirectory("graft_ckpt_out2")
-    val schema = Seq((1L, "a")).toDF("k", "payload").schema
-    def runOnce(): Seq[Long] = {
-      val q = s.readStream.schema(schema).parquet(srcDir.toString)
-        .dropDuplicates("k")
-        .writeStream.format("parquet")
-        .option("path", outDir.toString)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(outDir.toString).collect().map(_.getLong(0)).toSeq.sorted
-    }
-    landFile(Seq((1L, "a"), (2L, "b")).toDF("k", "payload"),
-      srcDir, "half1.parquet")
-    assert(runOnce() == Seq(1L, 2L))
-    // Second half re-sends key 1: it may only be dropped if the seen-keys
-    // state store was recovered from the checkpoint.
-    landFile(Seq((1L, "a2"), (3L, "c")).toDF("k", "payload"),
-      srcDir, "half2.parquet")
-    val total = runOnce()
-    assert(total == Seq(1L, 2L, 3L),
-      s"restart must drop the key seen before the restart; sink holds $total")
+    try {
+      val schema = Seq((1L, "a")).toDF("k", "payload").schema
+      def runOnce(): Seq[Long] = {
+        val q = s.readStream.schema(schema).parquet(srcDir.toString)
+          .dropDuplicates("k")
+          .writeStream.format("parquet")
+          .option("path", outDir.toString)
+          .outputMode("append")
+          .option("checkpointLocation", ckpt.toString)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        s.read.parquet(outDir.toString).collect().map(_.getLong(0)).toSeq.sorted
+      }
+      landFile(Seq((1L, "a"), (2L, "b")).toDF("k", "payload"),
+        srcDir, "half1.parquet")
+      assert(runOnce() == Seq(1L, 2L))
+      // Second half re-sends key 1: it may only be dropped if the seen-keys
+      // state store was recovered from the checkpoint.
+      landFile(Seq((1L, "a2"), (3L, "c")).toDF("k", "payload"),
+        srcDir, "half2.parquet")
+      val total = runOnce()
+      assert(total == Seq(1L, 2L, 3L),
+        s"restart must drop the key seen before the restart; sink holds $total")
+    } finally
+      Seq(srcDir, ckpt, outDir).foreach(d => GraftSession.removeDir(d.toString))
   }
 }

@@ -39,34 +39,38 @@ class ZorderSpec extends AnyFunSuite {
   test("zorderWrite preserves rows exactly") {
     val in = grid()
     val out = Files.createTempDirectory("zorder_rows").toString
-    Maintenance.zorderWrite(in, "x", "y", out, 8)
-    val back = spark.read.parquet(out)
-    assert(back.count() == 10000L)
-    assert(back.select("id", "x", "y").exceptAll(in).isEmpty)
-    assert(in.exceptAll(back.select("id", "x", "y")).isEmpty)
+    try {
+      Maintenance.zorderWrite(in, "x", "y", out, 8)
+      val back = spark.read.parquet(out)
+      assert(back.count() == 10000L)
+      assert(back.select("id", "x", "y").exceptAll(in).isEmpty)
+      assert(in.exceptAll(back.select("id", "x", "y")).isEmpty)
+    } finally GraftSession.removeDir(out)
   }
 
   test("z-ordered layout prunes row groups a linear layout can't") {
     val in = grid()
     val zdir = Files.createTempDirectory("zorder_z").toString
     val ldir = Files.createTempDirectory("zorder_lin").toString
-    Maintenance.zorderWrite(in, "x", "y", zdir, 16)
-    // linear layout: same file count, clustered by the unrelated id
-    in.repartitionByRange(16, org.apache.spark.sql.functions.col("id"))
-      .sortWithinPartitions("id")
-      .write.mode("overwrite").parquet(ldir)
+    try {
+      Maintenance.zorderWrite(in, "x", "y", zdir, 16)
+      // linear layout: same file count, clustered by the unrelated id
+      in.repartitionByRange(16, org.apache.spark.sql.functions.col("id"))
+        .sortWithinPartitions("id")
+        .write.mode("overwrite").parquet(ldir)
 
-    val box = "x < 100 AND y < 100" // ~1% of the grid area
-    val zRows = scanRows(spark.read.parquet(zdir).filter(box))
-    val lRows = scanRows(spark.read.parquet(ldir).filter(box))
-    // The box result is identical either way...
-    assert(spark.read.parquet(zdir).filter(box).count() ==
-      spark.read.parquet(ldir).filter(box).count())
-    // ...but the z-ordered scan touches a fraction of the row groups:
-    // every linear file spans the full x/y range (no pruning), while the
-    // box intersects only a couple of z-ranges.
-    assert(lRows == 10000L, s"linear layout unexpectedly pruned: $lRows")
-    assert(zRows < lRows / 3,
-      s"z-order pruned too little: $zRows vs linear $lRows")
+      val box = "x < 100 AND y < 100" // ~1% of the grid area
+      val zRows = scanRows(spark.read.parquet(zdir).filter(box))
+      val lRows = scanRows(spark.read.parquet(ldir).filter(box))
+      // The box result is identical either way...
+      assert(spark.read.parquet(zdir).filter(box).count() ==
+        spark.read.parquet(ldir).filter(box).count())
+      // ...but the z-ordered scan touches a fraction of the row groups:
+      // every linear file spans the full x/y range (no pruning), while the
+      // box intersects only a couple of z-ranges.
+      assert(lRows == 10000L, s"linear layout unexpectedly pruned: $lRows")
+      assert(zRows < lRows / 3,
+        s"z-order pruned too little: $zRows vs linear $lRows")
+    } finally Seq(zdir, ldir).foreach(GraftSession.removeDir)
   }
 }
