@@ -12,6 +12,19 @@ import org.apache.spark.sql.SparkSession
   * than being silently timed.
   */
 object Bench {
+  /** The fixed probe kernel: 3×10^8 xorshift64+popcount steps. */
+  private def probeWork(): Long = {
+    var x = 0x9e3779b97f4a7c15L
+    var acc = 0L
+    var i = 0
+    while (i < 300000000) {
+      x ^= x << 13; x ^= x >>> 7; x ^= x << 17
+      acc += java.lang.Long.bitCount(x)
+      i += 1
+    }
+    acc
+  }
+
   /** Fixed single-core CPU probe: 3×10^8 xorshift64+popcount steps, min of
     * three timed runs after one JIT-warming run. Deterministic work, zero
     * allocation, no memory traffic — its seconds measure only how fast this
@@ -23,23 +36,12 @@ object Bench {
     * tools/bench_trend.py can compare time÷probe instead of raw seconds.
     */
   def calProbe(): Double = {
-    def work(): Long = {
-      var x = 0x9e3779b97f4a7c15L
-      var acc = 0L
-      var i = 0
-      while (i < 300000000) {
-        x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-        acc += java.lang.Long.bitCount(x)
-        i += 1
-      }
-      acc
-    }
-    var sink = work() // JIT warm
+    var sink = probeWork() // JIT warm
     var best = Double.MaxValue
     var n = 0
     while (n < 3) {
       val t0 = System.nanoTime()
-      sink ^= work()
+      sink ^= probeWork()
       best = math.min(best, (System.nanoTime() - t0) / 1e9)
       n += 1
     }
@@ -92,20 +94,9 @@ object Bench {
     * scale with aggregate, not single-core, throughput).
     */
   def calProbePar(threads: Int): Double = {
-    def work(): Long = {
-      var x = 0x9e3779b97f4a7c15L
-      var acc = 0L
-      var i = 0
-      while (i < 300000000) {
-        x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-        acc += java.lang.Long.bitCount(x)
-        i += 1
-      }
-      acc
-    }
     @volatile var sink = 0L
     def pass(): Double = {
-      val ts = (1 to threads).map(_ => new Thread(() => { sink ^= work() }))
+      val ts = (1 to threads).map(_ => new Thread(() => { sink ^= probeWork() }))
       val t0 = System.nanoTime()
       ts.foreach(_.start()); ts.foreach(_.join())
       (System.nanoTime() - t0) / 1e9

@@ -91,6 +91,66 @@ object Similarity {
     when(vec.dot(a, a) * vec.dot(b, b) === 0d, 0d)
       .otherwise(vec.dot(a, b) / (sqrt(vec.dot(a, a)) * sqrt(vec.dot(b, b))))
 
+  /** Assign each row's quantized embedding `qe` to its nearest centroid
+    * in the broadcast one-row `cents` array: argmax over (cos, -cid) ==
+    * ORDER BY cos DESC, cid ASC — the oracle's tie-break. Native fused
+    * CoarseAssignBest expression (optimization r16): the previous
+    * transform/array_max lambda ran interpreted per corpus row AND
+    * re-evaluated dot(qe, qe) per centroid; the kernel is bit-identical
+    * (same guarded cosine arithmetic, same lexicographic tie-break —
+    * NativeVecParitySpec) and stays in whole-stage codegen.
+    */
+  private def coarseAssign(df: DataFrame, cents: DataFrame): DataFrame =
+    df.crossJoin(broadcast(cents))
+      .withColumn("cid",
+        vec.coarseAssignBest(col("qe"), col("cents")).getField("cid"))
+      .drop("cents")
+
+  /** The quantized corpus `(vec_id, qe)` the k-means and PQ paths run on. */
+  private def quantized(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), vec.quantize(col("embedding")).as("qe"))
+
+  /** Collapse flat `(cid, ce)` centroids into the one-row, cid-sorted
+    * `cents` model that [[coarseAssign]] and [[probe]] broadcast.
+    */
+  private def model(flat: DataFrame): DataFrame =
+    flat.agg(sort_array(collect_list(struct(col("cid"), col("ce")))).as("cents"))
+
+  /** The deterministic seed model: the quantized vectors of the `k`
+    * smallest vec_ids, each its own centroid (cid = vec_id).
+    */
+  private def seeds(qc: DataFrame, k: Int): DataFrame =
+    model(qc.filter(col("vec_id") < k)
+      .select(col("vec_id").cast("int").as("cid"), col("qe").as("ce")))
+
+  /** One Lloyd step from [[seeds]]: assign every `qe` to its nearest seed,
+    * then centroid = floor(per-dim mean) back onto the integer grid. Sums
+    * of quantized components are exact (|q| ~ 2^21, n ~ corpus per
+    * cluster — far below 2^53), so the division inputs are bit-identical
+    * in any engine and at any partitioning. Returns flat `(cid, ce)`,
+    * uncached: each caller owns its own materialization.
+    */
+  private def lloyd(qc: DataFrame, k: Int, dim: Int): DataFrame = {
+    val sums = (1 to dim).map(d => sum(element_at(col("qe"), d)).as(s"s$d"))
+    coarseAssign(qc, seeds(qc, k)).groupBy("cid")
+      .agg(count(lit(1)).as("n"), sums: _*)
+      .select(col("cid"), array((1 to dim).map(d =>
+        floor(col(s"s$d") / col("n")).cast("double")): _*).as("ce"))
+  }
+
+  /** Each query row (carrying its quantized `qe`) probes its `nprobe`
+    * nearest centroids of the broadcast model: the scored array sorts by
+    * (-cos, cid) ascending == cos DESC, cid ASC (cids are unique, so the
+    * trailing `ce` never decides). One output row per probe, with struct
+    * `p = (ncs, cid, ce)`.
+    */
+  private def probe(q: DataFrame, cents: DataFrame, nprobe: Int): DataFrame =
+    q.crossJoin(broadcast(cents))
+      .withColumn("p", explode(slice(array_sort(transform(col("cents"),
+        c => struct((-cosQ(col("qe"), c("ce"))).as("ncs"), c("cid").as("cid"),
+          c("ce").as("ce")))), 1, nprobe)))
+      .drop("cents")
+
   /** IVF top-k with a REAL coarse quantizer (vs `ivfTopK`'s pre-labeled
     * stand-in): deterministically seeded k-means over the quantized
     * embedding space — seeds are the `numCentroids` smallest vec_ids, one
@@ -114,61 +174,24 @@ object Similarity {
     * Reference ANN surface: qpmodel has none — this is the training-data
     * pipeline extension mandated by the build brief.
     */
-  /** Assign each row's quantized embedding `qe` to its nearest centroid
-    * in the broadcast one-row `cents` array: argmax over (cos, -cid) ==
-    * ORDER BY cos DESC, cid ASC — the oracle's tie-break. Native fused
-    * CoarseAssignBest expression (optimization r16): the previous
-    * transform/array_max lambda ran interpreted per corpus row AND
-    * re-evaluated dot(qe, qe) per centroid; the kernel is bit-identical
-    * (same guarded cosine arithmetic, same lexicographic tie-break —
-    * NativeVecParitySpec) and stays in whole-stage codegen.
-    */
-  private def coarseAssign(df: DataFrame, cents: DataFrame): DataFrame =
-    df.crossJoin(broadcast(cents))
-      .withColumn("cid",
-        vec.coarseAssignBest(col("qe"), col("cents")).getField("cid"))
-      .drop("cents")
-
   def ivfKmeansTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                     numCentroids: Int = 8, nprobe: Int = 2,
                     dim: Int = 64): DataFrame = {
     val qc = corpus.select(col("vec_id"), col("embedding"),
       vec.quantize(col("embedding")).as("qe"))
-    val seedArr = qc.filter(col("vec_id") < numCentroids)
-      .select(col("vec_id").cast("int").as("cid"), col("qe").as("ce"))
-      .agg(sort_array(collect_list(struct(col("cid"), col("ce")))).as("cents"))
-
-    val asg1 = coarseAssign(qc, seedArr)
-    // One Lloyd step: centroid = floor(per-dim mean) back onto the integer
-    // grid. Sums of quantized components are exact (|q| ~ 2^21, n ~ corpus
-    // per cluster — far below 2^53), so the division inputs are
-    // bit-identical in any engine and at any partitioning.
-    val sums = (1 to dim).map(d => sum(element_at(col("qe"), d)).as(s"s$d"))
     // The centroid "model" (one row of K structs) feeds BOTH the
     // re-assignment and the probe branch; without materialization Spark
     // would recompute its corpus pass per consumer. cache() of K×dim
     // numbers is the within-query model hand-off (Bench unpersists
     // between passes, so timings stay honest).
-    val centArr = asg1.groupBy("cid")
-      .agg(count(lit(1)).as("n"), sums: _*)
-      .select(col("cid"), array((1 to dim).map(d =>
-        floor(col(s"s$d") / col("n")).cast("double")): _*).as("ce"))
-      .agg(sort_array(collect_list(struct(col("cid"), col("ce")))).as("cents"))
-      .cache()
+    val centArr = model(lloyd(qc, numCentroids, dim)).cache()
 
     val asg2 = coarseAssign(qc, centArr).select("vec_id", "embedding", "cid")
 
-    // Each query probes its nprobe nearest centroids: sort the same scored
-    // array by (-cos, cid) ascending == cos DESC, cid ASC; take nprobe.
-    val probes = queries.select(col("vec_id").as("q_id"),
+    val probes = probe(queries.select(col("vec_id").as("q_id"),
         col("embedding").as("q_emb"),
-        vec.quantize(col("embedding")).as("qe"))
-      .crossJoin(broadcast(centArr))
-      .withColumn("__s", transform(col("cents"),
-        c => struct((-cosQ(col("qe"), c("ce"))).as("ncs"), c("cid").as("cid"))))
-      .select(col("q_id"), col("q_emb"),
-        explode(transform(slice(array_sort(col("__s")), 1, nprobe),
-          x => x.getField("cid"))).as("p_cid"))
+        vec.quantize(col("embedding")).as("qe")), centArr, nprobe)
+      .select(col("q_id"), col("q_emb"), col("p.cid").as("p_cid"))
 
     val scored = asg2.join(broadcast(probes),
         col("cid") === col("p_cid") && col("vec_id") =!= col("q_id"))
@@ -183,8 +206,7 @@ object Similarity {
   def dotTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val q = broadcast(queries.select(col("vec_id").as("q_id"),
       vec.quantize(col("embedding")).as("q_qe")))
-    val scored = corpus
-      .select(col("vec_id"), vec.quantize(col("embedding")).as("qe"))
+    val scored = quantized(corpus)
       .join(q, col("vec_id") =!= col("q_id"))
       .withColumn("dotq", vec.dot(col("q_qe"), col("qe")))
     rankTopK(scored, k, scoreCol = "dotq")
@@ -233,6 +255,13 @@ object Similarity {
   private def pqCodebook(qc: DataFrame, m: Int, ks: Int, subDim: Int): DataFrame =
     pqNest(pqSeedsFlat(qc, m, ks, subDim)).cache()
 
+  /** The PQ subspace width `dim / m`; `m` must divide `dim` exactly. */
+  private def subDimOf(m: Int, dim: Int): Int = {
+    val subDim = dim / m
+    require(m * subDim == dim, s"m=$m must divide dim=$dim")
+    subDim
+  }
+
   /** Product-quantization top-k (asymmetric distance computation): encode
     * the corpus once as `m` one-byte-ish codes (argmin L2 to the subspace
     * codebook, ties to the smaller cid), then score each (query, vector)
@@ -258,13 +287,11 @@ object Similarity {
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
              m: Int = 8, ks: Int = 16, dim: Int = 64): DataFrame = {
-    val subDim = dim / m
-    require(m * subDim == dim, s"m=$m must divide dim=$dim")
+    val subDim = subDimOf(m, dim)
     // Checkpointed once: the quantized corpus feeds the codebook seeds
     // AND the encode (guaranteed-once rationale of pqKmeansTopK).
-    val qc = corpus.select(col("vec_id"), vec.quantize(col("embedding")).as("qe"))
-      .localCheckpoint(eager = false)
-    pqAdc(qc, queries, pqCodebook(qc, m, ks, subDim), k, m, subDim)
+    val qc = quantized(corpus).localCheckpoint(eager = false)
+    pqAdc(qc, queries, pqCodebook(qc, m, ks, subDim), k, subDim)
   }
 
   /** Encode: codes[j] = argmin_cid L2(sub_j, cw) — array_min over
@@ -312,20 +339,17 @@ object Similarity {
     * lut[j][codes[j]] summed left-to-right — bit-identical to the lambda
     * and to the oracle's per-subspace join-sum.
     */
-  private def adcDot(m: Int) = {
-    val _ = m // length is carried by the arrays themselves
-    graft.functions.vec.adcDot(col("lut"), col("codes"))
-  }
+  private def adcDot = vec.adcDot(col("lut"), col("codes"))
 
   /** Encode + ADC-score + rank against a given broadcast codebook — the
     * shared tail of [[pqTopK]] (seeded) and [[pqKmeansTopK]] (trained).
     */
   private def pqAdc(qc: DataFrame, queries: DataFrame, cb: DataFrame,
-                    k: Int, m: Int, subDim: Int): DataFrame = {
+                    k: Int, subDim: Int): DataFrame = {
     val scored = pqEncode(qc, cb)
       .crossJoin(broadcast(pqLut(queries, cb, subDim)))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("adc_dot", adcDot(m))
+      .withColumn("adc_dot", adcDot)
     rankTopK(scored, k, scoreCol = "adc_dot")
   }
 
@@ -347,36 +371,27 @@ object Similarity {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 numCentroids: Int = 8, nprobe: Int = 2,
                 m: Int = 8, ks: Int = 16, dim: Int = 64): DataFrame = {
-    val subDim = dim / m
-    require(m * subDim == dim, s"m=$m must divide dim=$dim")
+    val subDim = subDimOf(m, dim)
     // Checkpointed once: the quantized corpus feeds the seed filter,
     // the coarse assignment, the codebook AND the encode (measured 7
     // file scans without it — guaranteed-once rationale of
     // pqKmeansTopK).
-    val qc = corpus.select(col("vec_id"), vec.quantize(col("embedding")).as("qe"))
-      .localCheckpoint(eager = false)
+    val qc = quantized(corpus).localCheckpoint(eager = false)
     // Coarse: seeded centroids; each corpus vector files under one list.
     // The assignment keeps qe so pqEncode can carry cid through — no
     // join back onto the corpus to recover the list id.
-    val seedArr = qc.filter(col("vec_id") < numCentroids)
-      .select(col("vec_id").cast("int").as("cid"), col("qe").as("ce"))
-      .agg(sort_array(collect_list(struct(col("cid"), col("ce")))).as("cents"))
+    val seedArr = seeds(qc, numCentroids)
     val lists = coarseAssign(qc, seedArr).select(col("vec_id"), col("qe"), col("cid"))
-    // Each query probes its nprobe nearest centroids (cos DESC, cid ASC).
-    val probes = queries
-      .select(col("vec_id").as("q_id"), vec.quantize(col("embedding")).as("qe"))
-      .crossJoin(broadcast(seedArr))
-      .withColumn("__s", transform(col("cents"),
-        c => struct((-cosQ(col("qe"), c("ce"))).as("ncs"), c("cid").as("cid"))))
-      .select(col("q_id"),
-        explode(transform(slice(array_sort(col("__s")), 1, nprobe),
-          x => x.getField("cid"))).as("p_cid"))
+    val probes = probe(queries
+        .select(col("vec_id").as("q_id"), vec.quantize(col("embedding")).as("qe")),
+        seedArr, nprobe)
+      .select(col("q_id"), col("p.cid").as("p_cid"))
     // Fine: global PQ codebook; ADC only inside probed lists.
     val cb = pqCodebook(qc, m, ks, subDim)
     val scored = pqEncode(lists, cb)
       .join(broadcast(probes.join(pqLut(queries, cb, subDim), "q_id")),
         col("cid") === col("p_cid") && col("vec_id") =!= col("q_id"))
-      .withColumn("adc_dot", adcDot(m))
+      .withColumn("adc_dot", adcDot)
     rankTopK(scored, k, scoreCol = "adc_dot")
   }
 
@@ -391,48 +406,36 @@ object Similarity {
     * gated here by `SimilaritySpec`'s recall comparison against
     * [[ivfPqTopK]] at the identical budget.
     *
-    * Scale shape adds only [[ivfKmeansTopK]]'s coarse Lloyd step to
-    * [[ivfPqTopK]]'s plan (one K×dim partial-sum aggregate — see that
-    * method's scaladoc for why the centroid mean is required, not
-    * optional, under residual encoding): residual computation is one
-    * broadcast-join narrow projection (the centroid table is
-    * `numCentroids` rows); the LUT stays per-query-only (it scores the
-    * residual codewords against the RAW query — the `dot(q, ce)` probe
-    * offset, |queries| × nprobe numbers, carries the coarse part), so
-    * nothing new shuffles and the corpus is still never broadcast. One
-    * global residual codebook (shared across lists) keeps the code
-    * budget and the oracle derivation identical to the non-residual
-    * variant; per-list codebooks are the classical further refinement.
+    * Scale shape adds only the coarse [[lloyd]] step to [[ivfPqTopK]]'s
+    * plan (one K×dim partial-sum aggregate — the body says why the
+    * centroid mean is required, not optional, under residual encoding):
+    * residual computation is one broadcast-join narrow projection (the
+    * centroid table is `numCentroids` rows); the LUT stays per-query-only
+    * (it scores the residual codewords against the RAW query — the
+    * `dot(q, ce)` probe offset, |queries| × nprobe numbers, carries the
+    * coarse part), so nothing new shuffles and the corpus is still never
+    * broadcast. One global residual codebook (shared across lists) keeps
+    * the code budget and the oracle derivation identical to the
+    * non-residual variant; per-list codebooks are the classical further
+    * refinement.
     */
   def ivfPqResidualTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                         numCentroids: Int = 8, nprobe: Int = 2,
                         m: Int = 8, ks: Int = 16, dim: Int = 64): DataFrame = {
-    val subDim = dim / m
-    require(m * subDim == dim, s"m=$m must divide dim=$dim")
-    val qc = corpus.select(col("vec_id"), vec.quantize(col("embedding")).as("qe"))
-    val seedArr = qc.filter(col("vec_id") < numCentroids)
-      .select(col("vec_id").cast("int").as("cid"), col("qe").as("ce"))
-      .agg(sort_array(collect_list(struct(col("cid"), col("ce")))).as("cents"))
-    // One coarse Lloyd step (same floor-mean-on-the-integer-grid as
-    // ivfKmeansTopK) is LOAD-BEARING here, not an optional refinement:
-    // residuals only concentrate when the centroid is near its list's
-    // MEAN. Against raw seed vectors E‖x − c‖² ≈ ‖x‖² + ‖c‖² (unrelated
-    // vectors), i.e. residuals GROW and measured recall drops below the
-    // non-residual variant (0.17 vs 0.27 on the sf0.001 gate data).
-    val asg1 = coarseAssign(qc, seedArr)
-    val sums = (1 to dim).map(d => sum(element_at(col("qe"), d)).as(s"s$d"))
+    val subDim = subDimOf(m, dim)
+    val qc = quantized(corpus)
+    // One coarse Lloyd step is LOAD-BEARING here, not an optional
+    // refinement: residuals only concentrate when the centroid is near its
+    // list's MEAN. Against raw seed vectors E‖x − c‖² ≈ ‖x‖² + ‖c‖²
+    // (unrelated vectors), i.e. residuals GROW and measured recall drops
+    // below the non-residual variant (0.17 vs 0.27 on the sf0.001 gate
+    // data).
     // cache() (optimization r15): centFlat (numCentroids rows) feeds BOTH
     // centArr and the residual's broadcast join — uncached, the entire
     // Lloyd chain (corpus assignment + 64-column aggregate) executed
     // twice (the r15 before-plan shows the duplicated subtree).
-    val centFlat = asg1.groupBy("cid")
-      .agg(count(lit(1)).as("n"), sums: _*)
-      .select(col("cid"), array((1 to dim).map(d =>
-        floor(col(s"s$d") / col("n")).cast("double")): _*).as("ce"))
-      .cache()
-    val centArr = centFlat
-      .agg(sort_array(collect_list(struct(col("cid"), col("ce")))).as("cents"))
-      .cache()
+    val centFlat = lloyd(qc, numCentroids, dim).cache()
+    val centArr = model(centFlat).cache()
     // Residual on the quantized grid: integer − integer is exact, so
     // codebook training, encoding and ADC stay oracle-reproducible.
     // Lazy localCheckpoint (same rationale as the LSH helpers): two
@@ -447,21 +450,17 @@ object Similarity {
         vec.sub(col("qe"), col("ce")).as("qe"))
       .localCheckpoint(eager = false)
     val cb = pqCodebook(resid.select("vec_id", "qe"), m, ks, subDim)
-    // Probe selection as in ivfPqTopK (cos DESC, cid ASC), each probe
-    // carrying its dot(q, ce) offset for the score reconstruction.
-    val probes = queries
-      .select(col("vec_id").as("q_id"), vec.quantize(col("embedding")).as("qe"))
-      .crossJoin(broadcast(centArr))
-      .withColumn("__s", transform(col("cents"),
-        c => struct((-cosQ(col("qe"), c("ce"))).as("ncs"), c("cid").as("cid"),
-          vec.dot(col("qe"), c("ce")).as("qd"))))
-      .select(col("q_id"),
-        explode(slice(array_sort(col("__s")), 1, nprobe)).as("p"))
-      .select(col("q_id"), col("p.cid").as("p_cid"), col("p.qd").as("q_ce_dot"))
+    // Each probe carries its dot(q, ce) offset for the score
+    // reconstruction — computed for the nprobe chosen centroids only.
+    val probes = probe(queries
+        .select(col("vec_id").as("q_id"), vec.quantize(col("embedding")).as("qe")),
+        centArr, nprobe)
+      .select(col("q_id"), col("p.cid").as("p_cid"),
+        vec.dot(col("qe"), col("p.ce")).as("q_ce_dot"))
     val scored = pqEncode(resid.select("vec_id", "cid", "qe"), cb)
       .join(broadcast(probes.join(pqLut(queries, cb, subDim), "q_id")),
         col("cid") === col("p_cid") && col("vec_id") =!= col("q_id"))
-      .withColumn("adc_dot", col("q_ce_dot") + adcDot(m))
+      .withColumn("adc_dot", col("q_ce_dot") + adcDot)
     rankTopK(scored, k, scoreCol = "adc_dot")
   }
 
@@ -483,8 +482,7 @@ object Similarity {
     */
   def pqKmeansTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                    m: Int = 8, ks: Int = 16, dim: Int = 64): DataFrame = {
-    val subDim = dim / m
-    require(m * subDim == dim, s"m=$m must divide dim=$dim")
+    val subDim = subDimOf(m, dim)
     // Lazy localCheckpoint: the quantized corpus feeds the seed pass,
     // the Lloyd assignment AND the final encode — without it each
     // consumer re-scans the raw embedding column (measured 8 corpus
@@ -493,8 +491,7 @@ object Similarity {
     // residual frame and Spark ML's cache-before-kmeans practice: one
     // scan plus a corpus-sized local spill beats k re-reads of the
     // fattest column in the lake.
-    val qc = corpus.select(col("vec_id"), vec.quantize(col("embedding")).as("qe"))
-      .localCheckpoint(eager = false)
+    val qc = quantized(corpus).localCheckpoint(eager = false)
     // cache(): flat0 (≤ m×ks rows) feeds the seed codebook AND the
     // empty-cluster fallback join — uncached, the seed window chain ran
     // twice (two-consumer rationale of pqCodebook).
@@ -528,7 +525,7 @@ object Similarity {
         coalesce(col("c.cw"), col("s.cw")).as("cw"))
     // cache(): the trained one-row codebook feeds pqAdc's encode AND LUT
     // (same two-consumer rationale as pqCodebook).
-    pqAdc(qc, queries, pqNest(flat1).cache(), k, m, subDim)
+    pqAdc(qc, queries, pqNest(flat1).cache(), k, subDim)
   }
 
   /** PQ shortlist + exact re-rank — the production ANN serving shape:
@@ -617,26 +614,14 @@ object Similarity {
   }
 
   /** The deterministic k-means "model" as one (cid, ce)-struct array row:
-    * seeds = the `numCentroids` smallest vec_ids, one Lloyd floor-mean
-    * step on the quantized grid — the same chain [[ivfKmeansTopK]] and
-    * [[semanticDedup]] train inline, exposed for model-apply consumers
+    * seeds = the `numCentroids` smallest vec_ids, one [[lloyd]] floor-mean
+    * step on the quantized grid, exposed for model-apply consumers
     * (streaming ingest assignment, external index builds). K×dim numbers:
     * always broadcastable.
     */
   def kmeansCentroids(corpus: DataFrame, numCentroids: Int = 8,
-                      dim: Int = 64): DataFrame = {
-    val qc = corpus.select(col("vec_id"), vec.quantize(col("embedding")).as("qe"))
-    val seedArr = qc.filter(col("vec_id") < numCentroids)
-      .select(col("vec_id").cast("int").as("cid"), col("qe").as("ce"))
-      .agg(sort_array(collect_list(struct(col("cid"), col("ce")))).as("cents"))
-    val asg1 = coarseAssign(qc, seedArr)
-    val sums = (1 to dim).map(d => sum(element_at(col("qe"), d)).as(s"s$d"))
-    asg1.groupBy("cid")
-      .agg(count(lit(1)).as("n"), sums: _*)
-      .select(col("cid"), array((1 to dim).map(d =>
-        floor(col(s"s$d") / col("n")).cast("double")): _*).as("ce"))
-      .agg(sort_array(collect_list(struct(col("cid"), col("ce")))).as("cents"))
-  }
+                      dim: Int = 64): DataFrame =
+    model(lloyd(quantized(corpus), numCentroids, dim))
 
   /** Assign each row's `embedding` to its nearest centroid in the
     * broadcast one-row model (argmax cosine, ties to the smaller cid —
@@ -679,9 +664,7 @@ object Similarity {
                                dim: Int = 64): DataFrame = {
     val cents = kmeansCentroids(existing, numCentroids, dim).cache()
     def assigned(df: DataFrame): DataFrame =
-      coarseAssign(
-        df.select(col("vec_id"), vec.quantize(col("embedding")).as("qe")),
-        cents)
+      coarseAssign(quantized(df), cents)
     val ex = assigned(existing).select(col("cid"),
       col("vec_id").as("old_id"), col("qe").as("e_qe"))
     assigned(incoming).hint("shuffle_hash")
@@ -703,8 +686,8 @@ object Similarity {
     * within epsilon — members further than epsilon from each other are
     * not duplicates and may both survive.
     *
-    * Clustering is the same deterministic machinery as [[ivfKmeansTopK]]
-    * (quantized grid, seeded centroids, one Lloyd floor-mean step, argmax
+    * Clustering is the shared deterministic [[lloyd]] k-means
+    * (quantized grid, seeded centroids, one floor-mean step, argmax
     * cosine with the oracle's tie-break), so every assignment, score and
     * verdict is bit-identical to the SQL oracle.
     *
@@ -721,20 +704,9 @@ object Similarity {
     */
   def semanticDedup(corpus: DataFrame, threshold: Double = 0.4,
                     numCentroids: Int = 8, dim: Int = 64): DataFrame = {
-    val qc = corpus.select(col("vec_id"), vec.quantize(col("embedding")).as("qe"))
-    val seedArr = qc.filter(col("vec_id") < numCentroids)
-      .select(col("vec_id").cast("int").as("cid"), col("qe").as("ce"))
-      .agg(sort_array(collect_list(struct(col("cid"), col("ce")))).as("cents"))
-    val asg1 = coarseAssign(qc, seedArr)
-    val sums = (1 to dim).map(d => sum(element_at(col("qe"), d)).as(s"s$d"))
-    val centFlat = asg1.groupBy("cid")
-      .agg(count(lit(1)).as("n"), sums: _*)
-      .select(col("cid"), array((1 to dim).map(d =>
-        floor(col(s"s$d") / col("n")).cast("double")): _*).as("ce"))
-      .cache()
-    val centArr = centFlat
-      .agg(sort_array(collect_list(struct(col("cid"), col("ce")))).as("cents"))
-      .cache()
+    val qc = quantized(corpus)
+    val centFlat = lloyd(qc, numCentroids, dim).cache()
+    val centArr = model(centFlat).cache()
     // Per-vector cluster + centroid similarity; three consumers (both
     // sides of the pair join and the verdict's left leg) — lazy
     // localCheckpoint stops each from re-running the assignment pass,

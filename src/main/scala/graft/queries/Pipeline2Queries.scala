@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.QueryDef
 import graft.catalog.Tables
 import graft.operators.{Similarity, TextAnalysis}
+import Sql.{cosOf, duckKmeansCtes, duckQuant}
 
 /** Second LLM-pipeline wave (round 9): semantic dedup (SemDeDup),
   * repeated-passage scrubbing, and model-based quality scoring. Same
@@ -19,13 +20,6 @@ object Pipeline2Queries {
   private def embs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings")
 
-  private val duckQuant =
-    "list_transform(%s, x -> round(CAST(x AS DOUBLE) * 1048576))"
-  private val duckCos =
-    ("CASE WHEN list_dot_product(%3$s, %4$s) * list_dot_product(%5$s, %6$s) = 0 THEN 0.0 " +
-     "ELSE list_dot_product(%1$s, %2$s) / (sqrt(list_dot_product(%3$s, %4$s)) * sqrt(list_dot_product(%5$s, %6$s))) END")
-  private def cosOf(a: String, b: String) = duckCos.format(a, b, a, a, b, b)
-
   /** SemDeDup over the embeddings corpus: the oracle replays the exact
     * deterministic k-means (quantize → seed → assign → floor-mean Lloyd
     * step → re-assign, identical to the ann_ivf_kmeans chain), computes
@@ -37,19 +31,9 @@ object Pipeline2Queries {
     (s, dir) => Similarity.semanticDedup(embs(s, dir)),
     Some {
       val cosAS = cosOf("a.qe", "s.ce")
-      s"""WITH c AS (SELECT vec_id, ${duckQuant.format("embedding")} AS qe
+      s"""WITH c AS (SELECT vec_id, ${duckQuant("embedding")} AS qe
          |           FROM embeddings),
-         |seeds AS (SELECT CAST(vec_id AS INT) AS cid, qe AS ce FROM c
-         |          WHERE vec_id < 8),
-         |a1 AS (SELECT a.vec_id, a.qe, s.cid,
-         |         row_number() OVER (PARTITION BY a.vec_id
-         |                            ORDER BY $cosAS DESC, s.cid) AS rn
-         |       FROM c a CROSS JOIN seeds s),
-         |asg1 AS (SELECT vec_id, qe, cid FROM a1 WHERE rn = 1),
-         |cent AS (SELECT cid, list(fd ORDER BY d) AS ce FROM (
-         |           SELECT cid, d, FLOOR(SUM(qe[d]) / COUNT(*)) AS fd
-         |           FROM asg1, (SELECT unnest(generate_series(1, 64)) AS d) dims
-         |           GROUP BY cid, d) GROUP BY cid),
+         |${duckKmeansCtes("c", 8)},
          |a2 AS (SELECT a.vec_id, a.qe, s.cid, s.ce,
          |         row_number() OVER (PARTITION BY a.vec_id
          |                            ORDER BY $cosAS DESC, s.cid) AS rn
@@ -155,19 +139,9 @@ object Pipeline2Queries {
     (s, dir) => graft.streaming.Streams.ivfAssignAvailableNow(s, dir),
     Some {
       val cosAS = cosOf("a.qe", "s.ce")
-      s"""WITH c AS (SELECT vec_id, ${duckQuant.format("embedding")} AS qe
+      s"""WITH c AS (SELECT vec_id, ${duckQuant("embedding")} AS qe
          |           FROM embeddings),
-         |seeds AS (SELECT CAST(vec_id AS INT) AS cid, qe AS ce FROM c
-         |          WHERE vec_id < 8),
-         |a1 AS (SELECT a.vec_id, a.qe, s.cid,
-         |         row_number() OVER (PARTITION BY a.vec_id
-         |                            ORDER BY $cosAS DESC, s.cid) AS rn
-         |       FROM c a CROSS JOIN seeds s),
-         |asg1 AS (SELECT vec_id, qe, cid FROM a1 WHERE rn = 1),
-         |cent AS (SELECT cid, list(fd ORDER BY d) AS ce FROM (
-         |           SELECT cid, d, FLOOR(SUM(qe[d]) / COUNT(*)) AS fd
-         |           FROM asg1, (SELECT unnest(generate_series(1, 64)) AS d) dims
-         |           GROUP BY cid, d) GROUP BY cid),
+         |${duckKmeansCtes("c", 8)},
          |a2 AS (SELECT a.vec_id, s.cid, $cosAS AS cos_centroid,
          |         row_number() OVER (PARTITION BY a.vec_id
          |                            ORDER BY $cosAS DESC, s.cid) AS rn
@@ -188,20 +162,10 @@ object Pipeline2Queries {
     },
     Some {
       val cosAS = cosOf("a.qe", "s.ce")
-      s"""WITH c AS (SELECT vec_id, ${duckQuant.format("embedding")} AS qe
+      s"""WITH c AS (SELECT vec_id, ${duckQuant("embedding")} AS qe
          |           FROM embeddings),
          |ex0 AS (SELECT * FROM c WHERE vec_id % 5 <> 0),
-         |seeds AS (SELECT CAST(vec_id AS INT) AS cid, qe AS ce FROM ex0
-         |          WHERE vec_id < 8),
-         |a1 AS (SELECT a.vec_id, a.qe, s.cid,
-         |         row_number() OVER (PARTITION BY a.vec_id
-         |                            ORDER BY $cosAS DESC, s.cid) AS rn
-         |       FROM ex0 a CROSS JOIN seeds s),
-         |asg1 AS (SELECT vec_id, qe, cid FROM a1 WHERE rn = 1),
-         |cent AS (SELECT cid, list(fd ORDER BY d) AS ce FROM (
-         |           SELECT cid, d, FLOOR(SUM(qe[d]) / COUNT(*)) AS fd
-         |           FROM asg1, (SELECT unnest(generate_series(1, 64)) AS d) dims
-         |           GROUP BY cid, d) GROUP BY cid),
+         |${duckKmeansCtes("ex0", 8)},
          |a2 AS (SELECT a.vec_id, a.qe, s.cid,
          |         row_number() OVER (PARTITION BY a.vec_id
          |                            ORDER BY $cosAS DESC, s.cid) AS rn

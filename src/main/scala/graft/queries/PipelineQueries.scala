@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.QueryDef
 import graft.catalog.Tables
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
+import Sql.{cosOf, duckKmeansCtes, duckQuant}
 
 /** LLM-training-data pipeline corpus: deduplication (exact, MinHash-LSH,
   * SimHash, char-n-gram Jaccard, embedding near-dup), similarity search
@@ -241,26 +242,11 @@ object PipelineQueries {
          |    len(list_distinct(list_concat(a.s, b.s))) >= 0.8""".stripMargin
     })
 
-  /** DuckDB mirror of vec.quantize: integral 2^-20 grid as exact doubles.
-    * Dot products over quantized vectors are exact integer sums —
-    * order-independent and bit-identical to the Spark side's VecDot.
-    */
-  private val duckQuant =
-    "list_transform(%s, x -> round(CAST(x AS DOUBLE) * 1048576))"
-
-  // Zero-vector guard mirrors VecCosineQ: cosine against a vector that
-  // quantizes to all zeros is defined as 0.0 (DuckDB's 0/0 is NULL or NaN
-  // depending on ieee_floating_point_ops — either diverges from the gate).
-  private val duckCos =
-    ("CASE WHEN list_dot_product(%3$s, %4$s) * list_dot_product(%5$s, %6$s) = 0 THEN 0.0 " +
-     "ELSE list_dot_product(%1$s, %2$s) / (sqrt(list_dot_product(%3$s, %4$s)) * sqrt(list_dot_product(%5$s, %6$s))) END")
-
   val dedupEmbedding: QueryDef = QueryDef("dedup_embedding",
     (s, dir) => Similarity.signLshNearDup(embs(s, dir)),
     Some {
-      val cos = duckCos.format("a.qe", "b2.qe",
-        "a.qe", "a.qe", "b2.qe", "b2.qe")
-      s"""WITH b AS (SELECT vec_id, ${duckQuant.format("embedding")} AS qe
+      val cos = cosOf("a.qe", "b2.qe")
+      s"""WITH b AS (SELECT vec_id, ${duckQuant("embedding")} AS qe
          |  FROM embeddings),
          |bk AS (SELECT vec_id, qe,
          |  array_to_string(list_transform(generate_series(1, 8),
@@ -278,9 +264,8 @@ object PipelineQueries {
   val dedupEmbeddingBanded: QueryDef = QueryDef("dedup_embedding_banded",
     (s, dir) => Similarity.signLshBanded(embs(s, dir)),
     Some {
-      val cos = duckCos.format("qa.qe", "qb.qe",
-        "qa.qe", "qa.qe", "qb.qe", "qb.qe")
-      s"""WITH q AS (SELECT vec_id, ${duckQuant.format("embedding")} AS qe
+      val cos = cosOf("qa.qe", "qb.qe")
+      s"""WITH q AS (SELECT vec_id, ${duckQuant("embedding")} AS qe
          |           FROM embeddings),
          |bands AS (
          |  SELECT vec_id, bidx.b AS bidx,
@@ -308,11 +293,10 @@ object PipelineQueries {
   val annTopk: QueryDef = QueryDef("ann_brute_topk",
     (s, dir) => Similarity.bruteForceTopK(embs(s, dir), annQueries(s, dir), 5),
     Some {
-      val cos = duckCos.format("q_emb", "qe",
-        "q_emb", "q_emb", "qe", "qe")
-      s"""WITH q AS (SELECT vec_id AS q_id, ${duckQuant.format("embedding")} AS q_emb
+      val cos = cosOf("q_emb", "qe")
+      s"""WITH q AS (SELECT vec_id AS q_id, ${duckQuant("embedding")} AS q_emb
          |           FROM embeddings WHERE vec_id < 10),
-         |c AS (SELECT vec_id, ${duckQuant.format("embedding")} AS qe FROM embeddings),
+         |c AS (SELECT vec_id, ${duckQuant("embedding")} AS qe FROM embeddings),
          |scored AS (SELECT q_id, vec_id, $cos AS cos_sim
          |           FROM c, q WHERE vec_id <> q_id),
          |ranked AS (SELECT q_id, vec_id, cos_sim,
@@ -327,12 +311,11 @@ object PipelineQueries {
   val annIvf: QueryDef = QueryDef("ann_ivf_topk",
     (s, dir) => Similarity.ivfTopK(embs(s, dir), annQueries(s, dir), 3),
     Some {
-      val cos = duckCos.format("q_emb", "e.qe",
-        "q_emb", "q_emb", "e.qe", "e.qe")
-      s"""WITH q AS (SELECT vec_id AS q_id, ${duckQuant.format("embedding")} AS q_emb,
+      val cos = cosOf("q_emb", "e.qe")
+      s"""WITH q AS (SELECT vec_id AS q_id, ${duckQuant("embedding")} AS q_emb,
          |                  label AS q_label
          |           FROM embeddings WHERE vec_id < 10),
-         |e0 AS (SELECT vec_id, label, ${duckQuant.format("embedding")} AS qe
+         |e0 AS (SELECT vec_id, label, ${duckQuant("embedding")} AS qe
          |       FROM embeddings),
          |scored AS (SELECT q_id, e.vec_id, $cos AS cos_sim
          |           FROM e0 e JOIN q
@@ -448,20 +431,9 @@ object PipelineQueries {
     * and final rankings are bit-identical to the Spark side.
     */
   private def duckIvfCtes(kCent: Int, nprobe: Int): String = {
-    def cosOf(a: String, b: String) = duckCos.format(a, b, a, a, b, b)
     val cosAS = cosOf("a.qe", "s.ce")
-    s"""c AS (SELECT vec_id, ${duckQuant.format("embedding")} AS qe FROM embeddings),
-       |seeds AS (SELECT CAST(vec_id AS INT) AS cid, qe AS ce FROM c
-       |          WHERE vec_id < $kCent),
-       |a1 AS (SELECT a.vec_id, a.qe, s.cid,
-       |         row_number() OVER (PARTITION BY a.vec_id
-       |                            ORDER BY $cosAS DESC, s.cid) AS rn
-       |       FROM c a CROSS JOIN seeds s),
-       |asg1 AS (SELECT vec_id, qe, cid FROM a1 WHERE rn = 1),
-       |cent AS (SELECT cid, list(fd ORDER BY d) AS ce FROM (
-       |           SELECT cid, d, FLOOR(SUM(qe[d]) / COUNT(*)) AS fd
-       |           FROM asg1, (SELECT unnest(generate_series(1, 64)) AS d) dims
-       |           GROUP BY cid, d) GROUP BY cid),
+    s"""c AS (SELECT vec_id, ${duckQuant("embedding")} AS qe FROM embeddings),
+       |${duckKmeansCtes("c", kCent)},
        |a2 AS (SELECT a.vec_id, s.cid,
        |         row_number() OVER (PARTITION BY a.vec_id
        |                            ORDER BY $cosAS DESC, s.cid) AS rn
@@ -513,7 +485,7 @@ object PipelineQueries {
           (col("n_hit") / col("n_true")).cast("double").as("recall"))
     },
     Some {
-      val cos = duckCos.format("q_emb", "e.qe", "q_emb", "q_emb", "e.qe", "e.qe")
+      val cos = cosOf("q_emb", "e.qe")
       s"""WITH ${duckIvfCtes(8, 2)},
          |bq AS (SELECT vec_id AS q_id, qe AS q_emb FROM c WHERE vec_id < 10),
          |bscored AS (SELECT q_id, e.vec_id, $cos AS cos_sim
@@ -544,7 +516,7 @@ object PipelineQueries {
     * the slicing can never silently disagree with the subspace count.
     */
   private def duckPqHead(m: Int, subDim: Int): String =
-    s"""c AS (SELECT vec_id, ${duckQuant.format("embedding")} AS qe FROM embeddings),
+    s"""c AS (SELECT vec_id, ${duckQuant("embedding")} AS qe FROM embeddings),
        |sub AS (SELECT vec_id, j,
        |          qe[j * $subDim + 1 : j * $subDim + $subDim] AS sv
        |        FROM c, (SELECT unnest(generate_series(0, ${m - 1})) AS j) js)""".stripMargin
@@ -625,7 +597,6 @@ object PipelineQueries {
                             m: Int = 8, ks: Int = 16): String = {
     require(64 % m == 0, s"m=$m must divide the embedding dim 64")
     val subDim = 64 / m
-    def cosOf(a: String, b: String) = duckCos.format(a, b, a, a, b, b)
     s"""${duckPqHead(m, subDim)},
        |${duckPqSeeds("cb", ks)},
        |coarse AS (SELECT CAST(vec_id AS INT) AS ccid, qe AS ce FROM c
@@ -684,19 +655,9 @@ object PipelineQueries {
                                     m: Int = 8, ks: Int = 16): String = {
     require(64 % m == 0, s"m=$m must divide the embedding dim 64")
     val subDim = 64 / m
-    def cosOf(a: String, b: String) = duckCos.format(a, b, a, a, b, b)
     s"""${duckPqHead(m, subDim)},
-       |seeds AS (SELECT CAST(vec_id AS INT) AS ccid, qe AS ce FROM c
-       |          WHERE vec_id < $numCent),
-       |la1 AS (SELECT a.vec_id, a.qe, s.ccid,
-       |          row_number() OVER (PARTITION BY a.vec_id
-       |            ORDER BY ${cosOf("a.qe", "s.ce")} DESC, s.ccid) AS rn
-       |        FROM c a CROSS JOIN seeds s),
-       |lasg1 AS (SELECT vec_id, qe, ccid FROM la1 WHERE rn = 1),
-       |coarse AS (SELECT ccid, list(fd ORDER BY d) AS ce FROM (
-       |             SELECT ccid, d, FLOOR(SUM(qe[d]) / COUNT(*)) AS fd
-       |             FROM lasg1, (SELECT unnest(generate_series(1, 64)) AS d) dims
-       |             GROUP BY ccid, d) GROUP BY ccid),
+       |${duckKmeansCtes("c", numCent)},
+       |coarse AS (SELECT cid AS ccid, ce FROM cent),
        |lasgr AS (SELECT a.vec_id, s.ccid,
        |            row_number() OVER (PARTITION BY a.vec_id
        |              ORDER BY ${cosOf("a.qe", "s.ce")} DESC, s.ccid) AS rn
@@ -782,7 +743,7 @@ object PipelineQueries {
   val annPqRerank: QueryDef = QueryDef("ann_pq_rerank",
     (s, dir) => Similarity.pqRerankTopK(embs(s, dir), annQueries(s, dir), 3),
     Some {
-      val cos = duckCos.format("qq.qe", "e.qe", "qq.qe", "qq.qe", "e.qe", "e.qe")
+      val cos = cosOf("qq.qe", "e.qe")
       s"""WITH ${duckPqCtes()},
          |rr AS (SELECT p.q_id, p.vec_id, $cos AS cos_sim
          |       FROM pqranked p

@@ -71,4 +71,44 @@ object Sql {
     val f = math.pow(10, scale).toLong
     s"(CAST($expr AS DOUBLE) / $f)"
   }
+
+  /** DuckDB mirror of vec.quantize: integral 2^-20 grid as exact doubles.
+    * Dot products over quantized vectors are exact integer sums —
+    * order-independent and bit-identical to the Spark side's VecDot.
+    */
+  def duckQuant(list: String): String =
+    s"list_transform($list, x -> round(CAST(x AS DOUBLE) * 1048576))"
+
+  // Zero-vector guard mirrors VecCosineQ: cosine against a vector that
+  // quantizes to all zeros is defined as 0.0 (DuckDB's 0/0 is NULL or NaN
+  // depending on ieee_floating_point_ops — either diverges from the gate).
+  private val duckCos =
+    ("CASE WHEN list_dot_product(%3$s, %4$s) * list_dot_product(%5$s, %6$s) = 0 THEN 0.0 " +
+     "ELSE list_dot_product(%1$s, %2$s) / (sqrt(list_dot_product(%3$s, %4$s)) * sqrt(list_dot_product(%5$s, %6$s))) END")
+
+  /** Guarded cosine of two quantized DuckDB lists `a` and `b`. */
+  def cosOf(a: String, b: String): String = duckCos.format(a, b, a, a, b, b)
+
+  /** DuckDB mirror of Similarity's seeded k-means over the quantized
+    * `(vec_id, qe)` CTE named `src`: CTEs `seeds` (the `k` smallest
+    * vec_ids, cid = vec_id), `a1`/`asg1` (argmax cosine, ties to the
+    * smaller cid) and `cent` (one Lloyd step: floor of the per-dim mean
+    * back onto the integer grid). Every comparison runs over exact
+    * integral doubles, so assignments and centroids are bit-identical to
+    * the Spark side.
+    */
+  def duckKmeansCtes(src: String, k: Int): String = {
+    val cosAS = cosOf("a.qe", "s.ce")
+    s"""seeds AS (SELECT CAST(vec_id AS INT) AS cid, qe AS ce FROM $src
+       |          WHERE vec_id < $k),
+       |a1 AS (SELECT a.vec_id, a.qe, s.cid,
+       |         row_number() OVER (PARTITION BY a.vec_id
+       |                            ORDER BY $cosAS DESC, s.cid) AS rn
+       |       FROM $src a CROSS JOIN seeds s),
+       |asg1 AS (SELECT vec_id, qe, cid FROM a1 WHERE rn = 1),
+       |cent AS (SELECT cid, list(fd ORDER BY d) AS ce FROM (
+       |           SELECT cid, d, FLOOR(SUM(qe[d]) / COUNT(*)) AS fd
+       |           FROM asg1, (SELECT unnest(generate_series(1, 64)) AS d) dims
+       |           GROUP BY cid, d) GROUP BY cid)""".stripMargin
+  }
 }

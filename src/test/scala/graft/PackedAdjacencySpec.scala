@@ -52,7 +52,7 @@ class PackedAdjacencySpec extends AnyFunSuite {
   test("graph results are identical packed and unpacked (sf0.001 " +
     "co-occurrence graph), and the packed plan stays codegen'd") {
     val s = spark
-    val orders = s.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+    val orders = s.read.parquet(s"$sfDir/lineitem.parquet")
     val edges = graft.operators.Graph.coOccurrenceEdges(
       orders, "l_orderkey", "l_partkey")
     def run(): (Long, Seq[String]) = {

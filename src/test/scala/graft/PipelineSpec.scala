@@ -99,6 +99,11 @@ class PipelineSpec extends AnyFunSuite {
     val pq = Similarity.pqTopK(emb, q, 3, m = 2, ks = 4, dim = 4)
     val exact = Similarity.dotTopK(emb, q, 3)
     assert(key(pq) == key(exact))
+    // m must split dim into equal subspaces: 3 does not divide 4.
+    val bad = intercept[IllegalArgumentException] {
+      Similarity.pqTopK(emb, q, 3, m = 3, ks = 4, dim = 4)
+    }
+    assert(bad.getMessage.contains("must divide"))
   }
 
   test("PQ with a lossy codebook still ranks by nearest codeword") {

@@ -12,7 +12,9 @@ import sys, json, glob, math, os
 import duckdb
 
 sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-outdir = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/target/verify_out"
+outdir = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "target", "verify_out")
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
