@@ -83,8 +83,8 @@ object ClusterCheck {
       "stats_psi_drift")).distinct
 
   def main(args: Array[String]): Unit = {
-    val master = if (args.nonEmpty) args(0) else "local[8]"
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
+    require(args.length == 2, "usage: graft.ClusterCheck <master> <dir>")
+    val Array(master, sfDir) = args
     val b = SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", "8")

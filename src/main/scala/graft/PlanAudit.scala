@@ -9,13 +9,15 @@ package graft
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    require(args.length == 1, "usage: graft.PlanAudit <dir>")
+    val sfDir = args(0)
     val spark = GraftSession.local(8)
     println("# PLANS - executed physical-plan audit of the bench headliners")
     println()
     println(s"Generated by `graft.PlanAudit` on `$sfDir`; the executed " +
       "(post-AQE) plan of every `bench=true` query, reduced to the " +
-      "properties that matter at scale. `WSCG` = distinct " +
+      "properties that matter at scale, read from the plan tree " +
+      "(subqueries and cached plans included). `WSCG` = distinct " +
       "whole-stage-codegen stages. `peak op rows` = the largest " +
       "numOutputRows any operator reported post-execution (SQLMetrics - " +
       "the reference's `PhysicProfiling` row counters), i.e. the widest " +
@@ -48,22 +50,15 @@ object PlanAudit {
     def auditRow(d: QueryDef): Unit = {
       val df = d.build(spark, sfDir)
       df.collect()
-      val plan = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      def count(re: String): Int = re.r.findAllIn(plan).size
+      val shape =
+        graft.api.PlanIntrospection.shape(df.queryExecution.executedPlan)
       val joins = Seq(
-        "BroadcastHashJoin" -> count("BroadcastHashJoin"),
-        "SortMergeJoin" -> count("SortMergeJoin"),
-        "ShuffledHashJoin" -> count("ShuffledHashJoin"),
-        "BroadcastNestedLoop" -> count("BroadcastNestedLoopJoin"))
+        "BroadcastHashJoin" -> shape.bhj,
+        "SortMergeJoin" -> shape.smj,
+        "ShuffledHashJoin" -> shape.shj,
+        "BroadcastNestedLoop" -> shape.bnlj)
         .filter(_._2 > 0).map { case (n, c) => s"${c}x$n" }.mkString(", ")
-      val exchanges = count("Exchange hashpartitioning") +
-        count("Exchange rangepartitioning") +
-        count("Exchange RoundRobinPartitioning")
-      val pushed = count("PushedFilters: \\[(?!\\])")
-      val wscg = "\\*\\((\\d+)\\)".r.findAllMatchIn(plan)
-        .map(_.group(1).toInt).toSet.size
-      val cartesian = if (plan.contains("CartesianProduct")) "YES" else "no"
+      val cartesian = if (shape.cartesian > 0) "YES" else "no"
       val profile = graft.api.PlanIntrospection.estimateVsActual(df)
       val peak = profile
         .flatMap(p => p.actualRows.map(p.node -> _))
@@ -91,16 +86,17 @@ object PlanAudit {
           if (f >= 10) { misses += ((d.name, cell)); cell + " !!" } else cell
         }.getOrElse("-")
       println(s"| ${d.name} | ${if (joins.isEmpty) "-" else joins} | " +
-        s"$exchanges | $pushed | $wscg | $cartesian | $peak | $worst |")
+        s"${shape.exchanges} | ${shape.pushedScans} | " +
+        s"${shape.codegenStages} | $cartesian | $peak | $worst |")
     }
 
     Queries.all.filter(_.bench).foreach(auditRow)
     println()
     println("Every headliner runs without a cartesian product; dim joins " +
       "broadcast; scans carry pushed filters where the query is " +
-      "selective. Shuffle counts are the keyed exchanges the query " +
-      "semantics require (join/group-by keys), with AQE coalescing " +
-      "partition counts at runtime.")
+      "selective. Exchange counts are every shuffle the plan runs: " +
+      "keyed (join/group-by), range (sorts) and single-partition " +
+      "(global aggregates), reused ones once; AQE coalesces partitions.")
     println()
     println("## Operator showcases (non-bench)")
     println()

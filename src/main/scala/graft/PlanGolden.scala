@@ -23,37 +23,31 @@ package graft
   * Rows are the INITIAL physical plan (pre-AQE): deterministic given data
   * + stats, which is what a text-diff gate needs; AQE's runtime re-plans
   * are asserted behaviorally in the specs instead (SkewSpec,
-  * DistributionSpec).
+  * DistributionSpec). Counts are read from the plan tree by node class
+  * ([[graft.api.PlanIntrospection.shape]]), never from its printed form.
   */
 object PlanGolden {
 
   /** One structural line for a built (not executed) frame. */
   def structuralRow(name: String,
                     df: org.apache.spark.sql.DataFrame): String = {
-    val plan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    def count(re: String): Int = re.r.findAllIn(plan).size
+    val shape =
+      graft.api.PlanIntrospection.shape(df.queryExecution.executedPlan)
     val joins = Seq(
-      "bhj" -> count("BroadcastHashJoin"),
-      "smj" -> count("SortMergeJoin"),
-      "shj" -> count("ShuffledHashJoin"),
-      "bnlj" -> count("BroadcastNestedLoopJoin"),
-      "cart" -> count("CartesianProduct"))
+      "bhj" -> shape.bhj, "smj" -> shape.smj, "shj" -> shape.shj,
+      "bnlj" -> shape.bnlj, "cart" -> shape.cartesian)
       .filter(_._2 > 0).map { case (n, c) => s"$c$n" }.mkString("+")
-    val exchanges = count("Exchange hashpartitioning") +
-      count("Exchange rangepartitioning") +
-      count("Exchange RoundRobinPartitioning") +
-      count("Exchange SinglePartition")
     s"$name|joins=${if (joins.isEmpty) "-" else joins}" +
-      s"|exchanges=$exchanges" +
-      s"|cartesian=${if (plan.contains("CartesianProduct")) "YES" else "no"}" +
-      s"|generate=${count("Generate ")}" +
-      s"|sorts=${count("Sort \\[")}" +
-      s"|aggs=${count("HashAggregate") + count("SortAggregate") + count("ObjectHashAggregate")}"
+      s"|exchanges=${shape.exchanges}" +
+      s"|cartesian=${if (shape.cartesian > 0) "YES" else "no"}" +
+      s"|generate=${shape.generates}" +
+      s"|sorts=${shape.sorts}" +
+      s"|aggs=${shape.aggregates}"
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    require(args.length == 1, "usage: graft.PlanGolden <dir>")
+    val sfDir = args(0)
     val spark = GraftSession.local(8, Some(sfDir))
     // ASCII only: the forked JVM's default stdout encoding mangles
     // multi-byte punctuation, which would make the golden host-dependent.

@@ -18,11 +18,12 @@ import org.apache.spark.sql.execution.FormattedMode
   *     [--conf=key=value ...] [--plans=<outDir>]
   *
   * Per query: one untimed warm-up through [[execute]], whose final
-  * adaptive plan gives `skew_joins` ([[skewJoins]]); then `--reps`
-  * (default 1) timed passes through the `noop` sink, build plus write —
-  * Bench's timed region — reported as `sec` (the min) and `all`; then
-  * [[Bench.cleanup]]. One line streams per query, so a crash mid-soak
-  * keeps the partial results, then one JSON line follows.
+  * adaptive plan gives `skew_joins` ([[skewJoins]], read from the plan
+  * tree); then `--reps` (default 1) timed passes through the `noop`
+  * sink, build plus write — Bench's timed region — reported as `sec`
+  * (the min) and `all`; then [[Bench.cleanup]]. One line streams per
+  * query, so a crash mid-soak keeps the partial results, then one JSON
+  * line follows.
   *
   * `--plans=<outDir>` writes each query's `explain("formatted")` to
   * `<outDir>/<query>.txt`, so plan claims in round notes are checkable
@@ -131,7 +132,7 @@ object Run {
   /** Execute THIS QueryExecution and pull every row, discarding them
     * executor-side. A `write.save()` would plan a separate command
     * execution and leave df's own adaptive plan unfinalized — its
-    * toString would show the initial plan with no skew markers
+    * current plan would be the initial one, with no skew-split join,
     * regardless of what ran. And the partition iterator must be drained:
     * `foreachPartition(_ => ())` never pulls a row, so the final stage's
     * work (the join itself) would never run.
@@ -139,14 +140,14 @@ object Run {
   def execute(df: DataFrame): Unit =
     df.queryExecution.toRdd.foreachPartition(it => while (it.hasNext) it.next())
 
-  /** Join nodes AQE split for skew in `df`'s executed adaptive plan: a
-    * split join node carries `skew=true` (AQEShuffleRead reports the
-    * post-split partition count on its plan line). The pre-adaptive
-    * "Initial Plan" section is cut off.
+  /** Join nodes AQE split for skew in `df`'s executed adaptive plan: the
+    * shuffled joins of its final plan, subqueries and cached plans
+    * included, whose `isSkewJoin` flag is set. The pre-adaptive initial
+    * plan is not read.
     */
   def skewJoins(df: DataFrame): Int =
-    "skew=true".r.findAllIn(df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)).size
+    graft.api.PlanIntrospection.shape(df.queryExecution.executedPlan)
+      .skewJoins
 
   def usage: String = {
     val scenarios = Scenarios.all.map { s =>

@@ -1,8 +1,13 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.trees.TreeNode
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SortExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, ShuffledJoin, SortMergeJoinExec}
 
 /** Queryable optimizer introspection — the reference exposes its memo as
   * system tables (`sys_memo_expr` / `sys_memo_property`,
@@ -25,15 +30,13 @@ object PlanIntrospection {
     */
   def nodes(spark: SparkSession, df: DataFrame): DataFrame = {
     val qe = df.queryExecution
-    val rows = Seq(
-      "analyzed" -> treeRows(qe.analyzed),
-      "optimized" -> treeRows(qe.optimizedPlan),
-      "physical" -> treeRows(qe.sparkPlan)
-    ).flatMap { case (phase, ns) =>
-      ns.map { case (ord, depth, node) => (phase, ord, depth, node) }
-    }
+    def rows[T <: TreeNode[T]](phase: String, root: T) =
+      operators(root).zipWithIndex.map { case ((depth, n), ord) =>
+        (phase, ord, depth, n.nodeName)
+      }
     import spark.implicits._
-    rows.toDF("phase", "ord", "depth", "node")
+    (rows("analyzed", qe.analyzed) ++ rows("optimized", qe.optimizedPlan) ++
+      rows("physical", qe.sparkPlan)).toDF("phase", "ord", "depth", "node")
   }
 
   /** Required-vs-provided plan properties as rows — the Catalyst analog
@@ -62,37 +65,19 @@ object PlanIntrospection {
     import org.apache.spark.sql.catalyst.expressions.SortOrder
     def norm(s: String): String =
       s.replaceAll("#\\d+[L]?", "").replaceAll("@[0-9a-f]+", "")
-    def rows(phase: String, root: SparkPlan)
-        : Seq[(String, Int, Int, String, Int, String, String, Boolean,
-          String, String, Boolean)] = {
-      val buf = scala.collection.mutable.ArrayBuffer[(String, Int, Int,
-        String, Int, String, String, Boolean, String, String, Boolean)]()
-      var ord = -1
-      def go(n: SparkPlan, depth: Int): Unit = {
-        ord += 1
-        val myOrd = ord
-        val kids: Seq[SparkPlan] = n match {
-          case q: QueryStageExec => Seq(q.plan)
-          case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-          case _ => n.children
+    def rows(phase: String, root: SparkPlan) =
+      operators(root).zipWithIndex.flatMap { case ((depth, n), ord) =>
+        n.children.zipWithIndex.map { case (c, i) =>
+          val reqD = n.requiredChildDistribution(i)
+          val reqO = n.requiredChildOrdering(i)
+          (phase, ord, depth, n.nodeName, i,
+            norm(reqD.toString), norm(c.outputPartitioning.toString),
+            c.outputPartitioning.satisfies(reqD),
+            norm(reqO.map(_.sql).mkString(", ")),
+            norm(c.outputOrdering.map(_.sql).mkString(", ")),
+            SortOrder.orderingSatisfies(c.outputOrdering, reqO))
         }
-        if (n.children.nonEmpty) {
-          n.children.zipWithIndex.foreach { case (c, i) =>
-            val reqD = n.requiredChildDistribution(i)
-            val reqO = n.requiredChildOrdering(i)
-            buf += ((phase, myOrd, depth, n.nodeName, i,
-              norm(reqD.toString), norm(c.outputPartitioning.toString),
-              c.outputPartitioning.satisfies(reqD),
-              norm(reqO.map(_.sql).mkString(", ")),
-              norm(c.outputOrdering.map(_.sql).mkString(", ")),
-              SortOrder.orderingSatisfies(c.outputOrdering, reqO)))
-          }
-        }
-        kids.foreach(go(_, depth + 1))
       }
-      go(root, 0)
-      buf.toSeq
-    }
     val planned = rows("planned", df.queryExecution.sparkPlan)
     // force execution so the adaptive plan is final
     df.queryExecution.toRdd.foreachPartition(_ => ())
@@ -202,20 +187,17 @@ object PlanIntrospection {
     val wrappers = Seq("WholeStageCodegen", "InputAdapter", "ColumnarToRow",
       "AdaptiveSparkPlan", "ResultQueryStage", "Exchange", "AQEShuffleRead",
       "ShuffleQueryStage", "BroadcastQueryStage", "BroadcastExchange")
-    def go(n: SparkPlan): Option[BigInt] =
-      if (wrappers.exists(n.nodeName.startsWith)) n match {
-        case q: QueryStageExec => go(q.plan)
-        case a: AdaptiveSparkPlanExec => go(a.executedPlan)
-        case _ => n.children.headOption.flatMap(go)
-      }
-      else estimatedRows(spark, n) match {
+    // Every wrapper is unary, so the first non-wrapper node of the walk
+    // is the one reached by descending through wrappers alone.
+    operators(root).map(_._2)
+      .find(n => !wrappers.exists(n.nodeName.startsWith))
+      .flatMap(n => estimatedRows(spark, n) match {
         // EXACT estimates only (stats-fed CBO or the graft corrections)
         // — the size-derived quotient means "no row estimate here", and
         // grading it as the root estimate would compare noise.
         case (est, true) => est
         case _ => None
-      }
-    go(root)
+      })
   }
 
   private def estimatedRows(spark: SparkSession,
@@ -324,37 +306,78 @@ object PlanIntrospection {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
-    val buf = scala.collection.mutable.ArrayBuffer[OpProfile]()
-    def go(n: SparkPlan, depth: Int): Unit = {
+    operators(finalPlan).zipWithIndex.map { case ((depth, n), ord) =>
       val (est, exact) = estimatedRows(df.sparkSession, n)
-      buf += OpProfile(buf.size, depth, n.nodeName, est, exact,
+      OpProfile(ord, depth, n.nodeName, est, exact,
         n.metrics.get("numOutputRows").map(_.value))
-      // Query stages and nested adaptive plans hide their subtree behind
-      // a leaf node — descend into the materialized plan so the profile
-      // covers every executed operator.
-      n match {
-        case q: QueryStageExec => go(q.plan, depth + 1)
-        case a: AdaptiveSparkPlanExec => go(a.executedPlan, depth + 1)
-        case _ => n.children.foreach(go(_, depth + 1))
-      }
     }
-    go(finalPlan, 0)
+  }
+
+  /** Preorder (depth, node) walk of a plan tree that descends
+    * `AdaptiveSparkPlanExec` into its current plan (the final one once
+    * executed) and `QueryStageExec` into the stage's plan — both hide
+    * their subtree behind a leaf. Logical trees walk their children.
+    * Subqueries and cached plans are not children and are not visited;
+    * [[shape]] adds them.
+    */
+  def operators[T <: TreeNode[T]](root: T): Seq[(Int, T)] = {
+    val buf = scala.collection.mutable.ArrayBuffer[(Int, T)]()
+    def go(n: T, depth: Int): Unit = {
+      buf += ((depth, n))
+      val kids: Seq[TreeNode[_]] = n match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case _ => n.children
+      }
+      kids.foreach(k => go(k.asInstanceOf[T], depth + 1))
+    }
+    go(root, 0)
     buf.toSeq
   }
 
-  /** Preorder (ord, depth, nodeName) traversal of one plan tree. */
-  private def treeRows(
-      plan: org.apache.spark.sql.catalyst.trees.TreeNode[_])
-      : Seq[(Int, Int, String)] = {
-    val buf = scala.collection.mutable.ArrayBuffer[(Int, Int, String)]()
-    def go(n: org.apache.spark.sql.catalyst.trees.TreeNode[_],
-           depth: Int): Unit = {
-      buf += ((buf.size, depth, n.nodeName))
-      n.children.foreach(c =>
-        go(c.asInstanceOf[org.apache.spark.sql.catalyst.trees.TreeNode[_]],
-          depth + 1))
+  /** Operator counts of a physical plan, read from node classes. */
+  final case class Shape(bhj: Int, smj: Int, shj: Int, bnlj: Int,
+      cartesian: Int, exchanges: Int, generates: Int, sorts: Int,
+      aggregates: Int, skewJoins: Int, pushedScans: Int,
+      codegenStages: Int)
+
+  /** The [[Shape]] of every operator the printed plan shows: the
+    * [[operators]] walk plus, per visited node, its subqueries and a
+    * cached-relation scan's cached plan, walked the same way.
+    * `pushedScans` counts file scans with pushed filters,
+    * `codegenStages` distinct whole-stage-codegen ids and `skewJoins`
+    * shuffled joins AQE split for skew.
+    */
+  def shape(root: SparkPlan): Shape = {
+    def shown(p: SparkPlan): Seq[SparkPlan] = operators(p).flatMap {
+      case (_, n) =>
+        val cached = n match {
+          case s: InMemoryTableScanExec => Seq(s.relation.cachedPlan)
+          case _ => Nil
+        }
+        n +: (n.subqueries ++ cached).flatMap(shown)
     }
-    go(plan, 0)
-    buf.toSeq
+    val ns = shown(root)
+    def count(c: Class[_]): Int = ns.count(c.isInstance)
+    Shape(
+      bhj = count(classOf[BroadcastHashJoinExec]),
+      smj = count(classOf[SortMergeJoinExec]),
+      shj = count(classOf[ShuffledHashJoinExec]),
+      bnlj = count(classOf[BroadcastNestedLoopJoinExec]),
+      cartesian = count(classOf[CartesianProductExec]),
+      exchanges = count(classOf[ShuffleExchangeExec]),
+      generates = count(classOf[GenerateExec]),
+      sorts = count(classOf[SortExec]),
+      aggregates = count(classOf[HashAggregateExec]) +
+        count(classOf[SortAggregateExec]) +
+        count(classOf[ObjectHashAggregateExec]),
+      skewJoins = ns.collect { case j: ShuffledJoin if j.isSkewJoin => j }.size,
+      pushedScans = ns.collect {
+        case f: FileSourceScanExec
+            if f.metadata.get("PushedFilters").exists(_ != "[]") => f
+      }.size,
+      codegenStages = ns.collect {
+        case w: WholeStageCodegenExec => w.codegenStageId
+      }.distinct.size)
   }
 }

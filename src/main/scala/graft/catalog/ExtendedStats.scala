@@ -6,6 +6,8 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 
+import graft.api.PlanIntrospection.operators
+
 /** Extended statistics: COLUMN-GROUP NDV — the number of distinct
   * value TUPLES over a set of columns, the statistic that fixes
   * multi-key join estimation.
@@ -448,24 +450,6 @@ object ExtendedStats {
     None
   }
 
-  /** Collect nodes through AQE stage boundaries (QueryStageExec hides
-    * its subtree behind a leaf).
-    */
-  private def collectThroughStages[T](n: SparkPlan)(
-      pf: PartialFunction[SparkPlan, T]): Seq[T] = {
-    val buf = scala.collection.mutable.ArrayBuffer[T]()
-    def go(p: SparkPlan): Unit = {
-      if (pf.isDefinedAt(p)) buf += pf(p)
-      p match {
-        case q: QueryStageExec => go(q.plan)
-        case a: AdaptiveSparkPlanExec => go(a.executedPlan)
-        case _ => p.children.foreach(go)
-      }
-    }
-    go(n)
-    buf.toSeq
-  }
-
   /** Resolve a side's join-key attributes to (table properties,
     * columns) — defined only when every key column comes from the SAME
     * base-table scan (aliased/derived keys keep Spark's own estimate).
@@ -478,7 +462,8 @@ object ExtendedStats {
   private def keyOrigin(spark: SparkSession, side: SparkPlan,
                         keys: Seq[AttributeReference])
       : Option[(Map[String, String], Seq[String])] = {
-    val scans = collectThroughStages(side) { case s: FileSourceScanExec => s }
+    val scans =
+      operators(side).collect { case (_, s: FileSourceScanExec) => s }
     val home = scans.filter(s =>
       keys.forall(k => s.output.exists(_.exprId == k.exprId)))
     home match {
@@ -544,8 +529,8 @@ object ExtendedStats {
     */
   private def keyNdv(spark: SparkSession, side: SparkPlan,
                      key: AttributeReference): Option[BigInt] =
-    collectThroughStages(side) {
-      case s: FileSourceScanExec
+    operators(side).collect {
+      case (_, s: FileSourceScanExec)
           if s.output.exists(_.exprId == key.exprId) => s
     }.headOption.flatMap { s =>
       s.logicalLink.collect {
@@ -592,9 +577,8 @@ object ExtendedStats {
         containmentEstimate(spark, j)
           .orElse(j.logicalLink.flatMap(_.stats.rowCount))
       case p =>
-        val joinBeneath = collectThroughStages(p) {
-          case j if joinParts(j).isDefined => j
-        }.nonEmpty
+        val joinBeneath =
+          operators(p).exists { case (_, o) => joinParts(o).isDefined }
         val preservesRows = p match {
           case _: ProjectExec | _: SortExec | _: Exchange |
                _: AQEShuffleReadExec | _: WholeStageCodegenExec |
@@ -657,9 +641,7 @@ object ExtendedStats {
         .collect { case ar: AttributeReference => ar })
         .filter(ks => ks.nonEmpty &&
           ks.size == a.groupingExpressions.size)
-      join <- collectThroughStages(n) {
-        case j if joinParts(j).isDefined => j
-      }.headOption
+      join <- operators(n).map(_._2).find(joinParts(_).isDefined)
       joinEst <- sideCard(spark, join) // containment, CBO for semi/anti
       ndvs <- Option(keys.map(keyNdv(spark, n, _)))
         .filter(_.forall(_.isDefined))
@@ -721,8 +703,7 @@ object ExtendedStats {
               import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, FilterExec, InputAdapter, ProjectExec, WholeStageCodegenExec}
               import org.apache.spark.sql.execution.exchange.Exchange
               import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
-              val nodes = collectThroughStages(p) { case n => n }
-              nodes.forall {
+              operators(p).map(_._2).forall {
                 case _: FileSourceScanExec | _: FilterExec |
                      _: ProjectExec | _: Exchange | _: AQEShuffleReadExec |
                      _: WholeStageCodegenExec | _: InputAdapter |

@@ -163,6 +163,35 @@ class PlanIntrospectionSpec extends AnyFunSuite {
     assert(ex.filter("est_rows IS NOT NULL AND rows IS NOT NULL").count() > 0)
   }
 
+  test("golden rows count operators from the plan tree, subqueries and " +
+    "cached plans included") {
+    import org.apache.spark.sql.functions.{col, collect_set, sum}
+    def row(df: org.apache.spark.sql.DataFrame): String =
+      PlanGolden.structuralRow("q", df)
+    // ObjectHashAggregate is one aggregate operator per phase, not two.
+    val collected = spark.range(100).selectExpr("id % 3 AS k", "id AS v")
+      .groupBy("k").agg(collect_set("v"))
+    assert(row(collected) ==
+      "q|joins=-|exchanges=1|cartesian=no|generate=0|sorts=0|aggs=2")
+    // A scalar subquery's plan hangs off the filter, not its children.
+    val scalar = spark.range(10).toDF("id")
+      .where("id > (SELECT max(id) - 5 FROM range(100))")
+    assert(row(scalar) ==
+      "q|joins=-|exchanges=1|cartesian=no|generate=0|sorts=0|aggs=2")
+    // A materialized cache prints its final AQE plan, nested "Initial
+    // Plan" marker included, before the join's other side; that side's
+    // operators count as well.
+    val cached = spark.range(100).selectExpr("id % 5 AS k")
+      .groupBy("k").count().cache()
+    try {
+      cached.count()
+      val other = spark.range(50).selectExpr("id % 5 AS k2", "id AS v")
+        .groupBy("k2").agg(sum("v").as("s"))
+      assert(row(cached.join(other, col("k") === col("k2"))) ==
+        "q|joins=1bhj|exchanges=2|cartesian=no|generate=0|sorts=0|aggs=4")
+    } finally cached.unpersist()
+  }
+
   test("rule trace renders the optimizer derivation as queryable rows") {
     graft.catalog.Tables.registerAll(spark, sfDir)
     val probe = spark.sql(
