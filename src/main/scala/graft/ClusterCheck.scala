@@ -53,7 +53,7 @@ object ClusterCheck {
     */
   def checkNames(): Seq[String] =
     (Queries.all.filter(_.bench).map(_.name) ++ Seq(
-      "dedup_incremental", "dedup_clusters", "dedup_cluster_members",
+      "dedup_incremental", "dedup_cluster_members",
       "dedup_simhash_pairs", "dedup_ngram_jaccard", "dedup_hot_buckets",
       "dedup_embedding", "dedup_embedding_banded",
       "ann_pq_topk", "ann_ivf_pq", "ann_ivf_pq_residual",

@@ -102,19 +102,19 @@ object PlanAudit {
     println()
     println("The same audit for the pipeline operators whose PLAN, not " +
       "wall-clock, is the evidence: join-order stress (12 relations), " +
-      "pair-to-cluster collapse, decontamination, shard/pack windows. " +
-      "Both CC algorithms (dedup_clusters propagation, dedup_clusters_star " +
-      "contraction) localCheckpoint each round, so the audited final plan " +
-      "is ONE aggregate over the checkpointed fixed point; per-round " +
-      "cost (1 join + 1 min-agg for propagation; 2 grouped passes + the " +
-      "convergence diff for star) runs as separate bounded-size jobs, " +
-      "never folded into one exponential lineage (the r5 defect).")
+      "decontamination, shard/pack windows. The pair-to-cluster " +
+      "collapse (dedup_clusters_star, in the headliner table) " +
+      "localCheckpoints each star-contraction round, so its audited final " +
+      "plan is ONE aggregate over the checkpointed fixed point; per-round " +
+      "cost (2 grouped passes + the fused convergence diff) runs as " +
+      "separate bounded-size jobs, never folded into one exponential " +
+      "lineage (the r5 defect).")
     println()
     println("| query | joins | exchanges | pushed filters | WSCG stages | cartesian | peak op rows | worst est/act |")
     println("|---|---|---|---|---|---|---|---|")
-    Seq("jobench_j8_twelve_rel", "pipeline_decontaminate", "dedup_clusters",
-      "sample_shard", "sample_pack_contexts", "ann_ivf_recall",
-      "map_tf_explode", "event_sessionize",
+    Seq("jobench_j8_twelve_rel", "pipeline_decontaminate", "sample_shard",
+      "sample_pack_contexts", "ann_ivf_recall", "map_tf_explode",
+      "event_sessionize",
       "ann_pq_topk", "ann_pq_rerank", "dedup_incremental",
       "graph_degree_topk", "dedup_edit_distance", "text_vocab_coverage",
       "graph_clustering_coeff", "join_interval_overlap",

@@ -96,7 +96,7 @@ object ScaleInvariants {
       "see scaladoc)")
     pairs.unpersist()
 
-    // ——————————————————— 3. connected components (planted pairs, 2 algos)
+    // ————————————————————————— 3. connected components (planted pairs)
     val ppairs = Dedup.minHashPairs(planted).select("doc_a", "doc_b")
       .localCheckpoint(eager = true)
     // every planted pair {d, d+10000} is an IDENTICAL-text pair: its
@@ -107,18 +107,46 @@ object ScaleInvariants {
       .count()
     if (plantedFound < nPlanted)
       fail(s"cc: only $plantedFound of $nPlanted planted pairs surfaced")
-    val prop = Dedup.duplicateClusters(ppairs).cache()
-    val star = Dedup.duplicateClustersStar(ppairs).cache()
-    val diff = prop.exceptAll(star).count() + star.exceptAll(prop).count()
-    if (diff != 0) fail(s"cc: propagation vs star disagree on $diff rows")
-    val nClusters = prop.count()
-    val ccSurplus = prop.agg(sum("n_docs")).head().getLong(0) - nClusters
+    // Closed-form certificate of the membership frame: a labelling that
+    // covers exactly the pair endpoints once each, agrees across every
+    // pair and names each cluster by its minimum member is the min-label
+    // of a union of components; clusters never cross replicas.
+    val members = Dedup.duplicateClusterMembers(ppairs).cache()
+    val nMembers = members.count()
+    val ends = ppairs.select(col("doc_a").as("doc_id"))
+      .union(ppairs.select(col("doc_b").as("doc_id"))).distinct()
+    val endDiff = members.select("doc_id").exceptAll(ends).count() +
+      ends.exceptAll(members.select("doc_id")).count()
+    if (endDiff != 0)
+      fail(s"cc: members differ from one row per pair endpoint by $endDiff rows")
+    def label(side: String) =
+      members.select(col("doc_id").as(side), col("cluster_id").as(s"c_$side"))
+    val torn = ppairs.join(label("doc_a"), "doc_a").join(label("doc_b"), "doc_b")
+      .filter(col("c_doc_a") =!= col("c_doc_b")).count()
+    if (torn != 0) fail(s"cc: $torn pairs carry two cluster_ids")
+    val badRoots = members.groupBy("cluster_id").agg(min("doc_id").as("mn"))
+      .filter(col("mn") =!= col("cluster_id")).count()
+    if (badRoots != 0)
+      fail(s"cc: $badRoots cluster_ids are not their cluster's minimum member")
+    val crossRep = members
+      .filter((col("doc_id") / stride).cast("long") =!=
+        (col("cluster_id") / stride).cast("long")).count()
+    if (crossRep != 0) fail(s"cc: $crossRep members sit in another replica's cluster")
+    members.unpersist()
+    val clusters = Dedup.duplicateClusters(ppairs).cache()
+    val nClusters = clusters.count()
+    val sizeSum = clusters.agg(sum("n_docs")).head().getLong(0)
+    if (sizeSum != nMembers)
+      fail(s"cc: cluster sizes sum to $sizeSum, members $nMembers")
+    val ccSurplus = sizeSum - nClusters
     if (ccSurplus < nPlanted)
       fail(s"cc: surplus $ccSurplus < $nPlanted planted pairs")
-    println(s"[invariants] cc PASS: $nClusters clusters, propagation == " +
-      s"star exactly, $plantedFound/$nPlanted planted pairs found, " +
+    println(s"[invariants] cc PASS: $nClusters clusters over $nMembers " +
+      "pair endpoints, one label per endpoint, agreeing across every " +
+      "pair, each its cluster's minimum, 0 cross-replica; sizes sum to " +
+      s"the members; $plantedFound/$nPlanted planted pairs found, " +
       s"surplus $ccSurplus >= $nPlanted")
-    prop.unpersist(); star.unpersist()
+    clusters.unpersist()
 
     // ———————————————————————————————————— 4. ANN (IVF vs brute = truth)
     val embs = graft.catalog.Tables.load(spark, dir, "embeddings")

@@ -77,40 +77,30 @@ object Scenarios {
     }
   }
 
-  /** Connected-components soak: times both CC algorithms at a given SF over
-    * (a) the REAL MinHash pair graph (near-clique components — propagation's
-    * home turf) and (b) a chain-heavy fixture (long paths — the shape star
-    * contraction exists for: O(log n) rounds vs O(diameter)). Results are
-    * recorded in BASELINE.md per round.
+  /** Connected-components soak: times [[Dedup.duplicateClusters]] at a
+    * given SF over (a) the REAL MinHash pair graph (near-clique
+    * components) and (b) a chain-heavy fixture (long paths — the shape
+    * star contraction's O(log n) rounds exist for). Results are recorded
+    * in BASELINE.md per round.
     */
   private def connectedComponents(c: Ctx): Unit = {
     val (spark, dir) = (c.spark, c("dir"))
     import spark.implicits._
-    // (a) Real LSH pair graph via the gate queries themselves.
-    val prop = c.timed("minhash prop")(
-      c.noop(Queries.byName("dedup_clusters").build(spark, dir))).min
-    val star = c.timed("minhash star")(
+    // (a) Real LSH pair graph via the gate query itself.
+    val minhash = c.timed("minhash")(
       c.noop(Queries.byName("dedup_clusters_star").build(spark, dir))).min
 
     // (b) Chain-heavy fixture: 100 disjoint 64-node paths (diameter 63).
-    // Propagation needs ~63 label-hop rounds; star contraction ~O(log 64).
     val chains = spark.range(6400)
       .filter(col("id") % 64 =!= 63)
       .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-    val chainProp = c.timed("chain prop (6400 nodes)")(
-      c.noop(Dedup.duplicateClusters(chains, maxIters = 70))).min
-    val chainStar = c.timed("chain star (6400 nodes)")(
-      c.noop(Dedup.duplicateClustersStar(chains, maxIters = 12))).min
-    // Both must reach the exact fixed point: 100 components of 64 docs.
-    val gotProp = Dedup.duplicateClusters(chains, maxIters = 70)
+    val chain = c.timed("chain (6400 nodes)")(
+      c.noop(Dedup.duplicateClusters(chains, maxIters = 12))).min
+    // Must reach the exact fixed point: 100 components of 64 docs.
+    val got = Dedup.duplicateClusters(chains, maxIters = 12)
       .agg(count(lit(1)), sum("n_docs")).as[(Long, Long)].head()
-    val gotStar = Dedup.duplicateClustersStar(chains, maxIters = 12)
-      .agg(count(lit(1)), sum("n_docs")).as[(Long, Long)].head()
-    require(gotProp == ((100L, 6400L)), s"prop fixed point wrong: $gotProp")
-    require(gotStar == ((100L, 6400L)), s"star fixed point wrong: $gotStar")
-    c.say(s"summary sf=$dir minhash prop/star=${s3(prop)}/${s3(star)} s, " +
-      s"chain prop/star=${s3(chainProp)}/${s3(chainStar)} s " +
-      s"(star/prop ratio chain=${s3(chainStar / chainProp)})")
+    require(got == ((100L, 6400L)), s"fixed point wrong: $got")
+    c.say(s"summary sf=$dir minhash=${s3(minhash)} s, chain=${s3(chain)} s")
   }
 
   /** Scale measurement for trigram substring search: one-time index build

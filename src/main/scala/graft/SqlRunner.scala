@@ -47,8 +47,29 @@ object SqlRunner {
     * file format but handles those.)
     */
   def splitStatements(text: String): Seq[String] = {
+    val (done, tail, _) = scan(text)
+    done ++ Some(tail.trim).filter(_.nonEmpty)
+  }
+
+  /** Split `text` into the statements that are COMPLETE (terminated by
+    * an unquoted `;`) and the unfinished remainder, verbatim — the
+    * incremental variant of [[splitStatements]] the REPL needs to know
+    * when to keep reading lines vs execute.
+    */
+  def completeStatements(text: String): (Seq[String], String) = {
+    val (done, _, restFrom) = scan(text)
+    (done, text.substring(restFrom))
+  }
+
+  /** The one quote- and comment-aware pass behind both splitters: the
+    * `;`-terminated statements (comments stripped, blanks dropped), the
+    * comment-stripped text after the last unquoted `;`, and the offset
+    * in `text` where that text starts.
+    */
+  private def scan(text: String): (Seq[String], String, Int) = {
     val out = Seq.newBuilder[String]
     val cur = new StringBuilder
+    var restFrom = 0
     var i = 0
     var inQuote = false
     var inComment = false
@@ -67,40 +88,11 @@ object SqlRunner {
       } else if (c == '-' && i + 1 < text.length && text.charAt(i + 1) == '-') {
         inComment = true; i += 1
       } else if (c == ';') {
-        out += cur.result(); cur.clear()
+        out += cur.result(); cur.clear(); restFrom = i + 1
       } else cur.append(c)
       i += 1
     }
-    out += cur.result()
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** Split `text` into the statements that are COMPLETE (terminated by
-    * an unquoted `;`) and the unfinished remainder — the incremental
-    * variant of [[splitStatements]] the REPL needs to know when to keep
-    * reading lines vs execute.
-    */
-  def completeStatements(text: String): (Seq[String], String) = {
-    var lastSemi = -1
-    var inQuote = false
-    var inComment = false
-    var i = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (inComment) { if (c == '\n') inComment = false }
-      else if (inQuote) {
-        if (c == '\\') i += 1
-        else if (c == '\'') inQuote = false
-      }
-      else if (c == '\'') inQuote = true
-      else if (c == '-' && i + 1 < text.length && text.charAt(i + 1) == '-') {
-        inComment = true; i += 1
-      } else if (c == ';') lastSemi = i
-      i += 1
-    }
-    if (lastSemi < 0) (Seq.empty, text)
-    else (splitStatements(text.substring(0, lastSemi + 1)),
-      text.substring(lastSemi + 1))
+    (out.result().map(_.trim).filter(_.nonEmpty), cur.result(), restFrom)
   }
 
   /** Interactive loop — the reference's REPL entry point

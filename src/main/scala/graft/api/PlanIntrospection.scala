@@ -152,20 +152,6 @@ object PlanIntrospection {
       .toDF("rule", "invocations", "effective", "time_ns")
   }
 
-  /** Estimated rows the optimizer planned a physical operator from —
-    * the CBO's rowCount when the estimation chain produced one, else the
-    * size-based fallback sizeInBytes / sizePerRow, which is the same
-    * quantity Spark's own broadcast-vs-shuffle decisions reduce to. None
-    * for physical-only nodes with no logical counterpart (e.g. exchanges
-    * inserted by EnsureRequirements, AQE readers).
-    *
-    * The reference renders per-member cost ESTIMATES in its memo system
-    * tables (`/root/reference/qpmodel/optimizer.cs:1239-1328`) but never
-    * places them next to execution feedback; at 100 TB the estimate
-    * ERROR is what silently picks a catastrophic join strategy, so the
-    * pairing (est, actual) is the auditable artifact — see PlanAudit's
-    * worst-miss column.
-    */
   /** One executed operator's planned-vs-actual cardinality. `estExact`
     * distinguishes a real CBO rowCount (propagated from injected /
     * ANALYZE stats) from the size-derived fallback — the fallback
@@ -200,6 +186,20 @@ object PlanIntrospection {
       })
   }
 
+  /** Estimated rows the optimizer planned a physical operator from —
+    * the CBO's rowCount when the estimation chain produced one, else the
+    * size-based fallback sizeInBytes / sizePerRow, which is the same
+    * quantity Spark's own broadcast-vs-shuffle decisions reduce to. None
+    * for physical-only nodes with no logical counterpart (e.g. exchanges
+    * inserted by EnsureRequirements, AQE readers).
+    *
+    * The reference renders per-member cost ESTIMATES in its memo system
+    * tables (`/root/reference/qpmodel/optimizer.cs:1239-1328`) but never
+    * places them next to execution feedback; at 100 TB the estimate
+    * ERROR is what silently picks a catastrophic join strategy, so the
+    * pairing (est, actual) is the auditable artifact — see PlanAudit's
+    * worst-miss column.
+    */
   private def estimatedRows(spark: SparkSession,
                             n: SparkPlan): (Option[BigInt], Boolean) = {
     // Extended statistics refine what Spark's estimation chain gets
@@ -227,16 +227,6 @@ object PlanIntrospection {
     }
   }
 
-  /** Corrected estimate for a Filter whose condition carries top-level
-    * `col LIKE 'prefix%'` conjuncts over columns with a registered
-    * string histogram. Spark's FilterEstimation has no handler for
-    * StartsWith (selectivity 1.0 — its histograms cover numeric types
-    * only), so the correction multiplies Spark's own estimate for the
-    * REMAINING conjuncts by the histogram range selectivity of
-    * [prefix, succ(prefix)) per LIKE. Only positive top-level
-    * conjuncts are priced — a StartsWith under OR/NOT keeps Spark's
-    * estimate rather than guessing a polarity.
-    */
   /** Catalyst's own conjunct splitter (protected in PredicateHelper,
     * re-exposed through a private holder) — the same splitter
     * ColumnGroupCertifiedBroadcast uses, not a re-implementation.
@@ -248,6 +238,16 @@ object PlanIntrospection {
       splitConjunctivePredicates(e)
   }
 
+  /** Corrected estimate for a Filter whose condition carries top-level
+    * `col LIKE 'prefix%'` conjuncts over columns with a registered
+    * string histogram. Spark's FilterEstimation has no handler for
+    * StartsWith (selectivity 1.0 — its histograms cover numeric types
+    * only), so the correction multiplies Spark's own estimate for the
+    * REMAINING conjuncts by the histogram range selectivity of
+    * [prefix, succ(prefix)) per LIKE. Only positive top-level
+    * conjuncts are priced — a StartsWith under OR/NOT keeps Spark's
+    * estimate rather than guessing a polarity.
+    */
   private def likePrefixEstimate(n: SparkPlan): Option[BigInt] = {
     import org.apache.spark.sql.catalyst.expressions.{AttributeReference, IsNotNull, Literal, StartsWith}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Lineage-truncating materialization for the iterative CC loops.
+  /** Lineage-truncating materialization for the iterative CC loop.
     * `reliable = false` → localCheckpoint: blocks live on executors only —
     * fastest, but under executor loss / dynamic allocation the truncated
     * lineage cannot recompute them and the job fails. `reliable = true` →
@@ -286,41 +286,23 @@ object Dedup {
   }
 
   /** Collapse near-dup PAIRS into duplicate CLUSTERS — connected
-    * components over the pair graph by iterative min-label propagation
-    * (each node repeatedly takes the minimum label among itself and its
-    * neighbors until a fixed point; the component id is the smallest
-    * doc_id in the component — fully deterministic).
+    * components over the pair graph: (cluster_id, n_docs) for every
+    * component of 2+ documents, cluster_id = the smallest doc_id in the
+    * component (fully deterministic).
     *
     * This is the standard follow-on to any LSH pair sweep: pairs alone
     * over-remove (A~B, B~C should keep ONE of {A,B,C}, not two "losers").
-    *
-    * Distribution: each iteration is one shuffle-join (messages along
-    * edges) + one min-aggregate — the classic Pregel step expressed in
-    * DataFrames. The driver loop only counts changed labels per
-    * iteration (an O(1) scalar per step, not a data collect); iterations
-    * are bounded by the component diameter, which for near-dup clusters
-    * is tiny (dup groups are cliques or near-cliques from the band
-    * join). maxIters caps pathological chains; hitting the cap returns
-    * the partially-converged labels (documented, not silent: the result
-    * would still be a valid refinement, just not minimal).
-    *
-    * SCALE: propagation is the SMALL-GRAPH / BOUNDED-DIAMETER variant.
-    * Its round count tracks the component diameter and each round pays
-    * fixed job-scheduling + checkpoint overhead that compounds at scale:
-    * the 1000× soak (600M-row corpus, BASELINE.md) measured a 3-decade
-    * scaling exponent of 0.68 with the last decade at 12.2×, vs 0.61 for
-    * [[duplicateClustersStar]], whose star-contraction halves long chains
-    * each round (O(log d) rounds). Prefer `duplicateClustersStar` for
-    * full-corpus sweeps; the two are proven row-identical by
-    * `ScaleInvariants`. Propagation remains the simpler choice for
-    * per-batch graphs (LSH dup groups are near-cliques — diameter ≤ 2-3).
+    * The engine is [[starEdges]], whose O(log n) rounds do not grow with
+    * the component diameter: a long chain (a templated page series where
+    * copy i only band-matches copy i±1) does not cost one round per hop.
     */
-  def duplicateClusters(pairs: DataFrame, maxIters: Int = 20,
+  def duplicateClusters(pairs: DataFrame, maxIters: Int = 25,
                         reliable: Boolean = false): DataFrame =
-    propagateLabels(pairs, maxIters, reliable)
-      .groupBy("lbl").agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") > 1)
-      .select(col("lbl").as("cluster_id"), col("n_docs"))
+    // Fixed-point edges are (node, component-min) stars; the min node of
+    // each component appears only on the lo side, so size = lo-degree + 1.
+    starEdges(pairs, maxIters, reliable)
+      .groupBy("lo").agg((count(lit(1)) + 1).as("n_docs"))
+      .select(col("lo").as("cluster_id"), col("n_docs"))
 
   /** Per-document cluster MEMBERSHIP — (doc_id, cluster_id) for every
     * document that participates in a near-dup component. This is the
@@ -328,88 +310,34 @@ object Dedup {
     * (keep rows where doc_id = cluster_id or doc_id not in members);
     * [[duplicateClusters]] is its per-cluster aggregate. Every
     * edge-connected document is in a 2+ component by construction, so
-    * no singleton filter is needed.
+    * no singleton filter is needed: each star edge (hi, lo) is one
+    * member, and each root lo is its own member once.
     */
-  def duplicateClusterMembers(pairs: DataFrame, maxIters: Int = 20,
-                              reliable: Boolean = false): DataFrame =
-    propagateLabels(pairs, maxIters, reliable)
-      .select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
-
-  /** Min-label propagation to the fixed point: (id, lbl) per node of
-    * the pair graph, lbl = smallest doc_id in the node's component.
-    * Shared engine of [[duplicateClusters]] / [[duplicateClusterMembers]].
-    */
-  private def propagateLabels(pairs: DataFrame, maxIters: Int,
-                              reliable: Boolean): DataFrame = {
-    require(Seq("doc_a", "doc_b").forall(pairs.columns.contains(_)),
-      "duplicateClusters expects doc_a/doc_b pair columns")
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    // Materialize the (small) edge list: every iteration joins against
-    // it, and without the cache each round would re-run the upstream
-    // pair generation (e.g. the whole MinHash pipeline) — measured 4-5x
-    // the total runtime at sf0.1.
-    val sym = edges.unionByName(
-      edges.select(col("dst").as("src"), col("src").as("dst"))).cache()
-    // localCheckpoint per round (not cache): each round's plan references
-    // `labels` twice (union + join), so with bare cache() the ANALYZED
-    // plan doubles per round even though execution is truncated — Spark
-    // stringifies the plan per job (SQLExecution), so a high-diameter
-    // graph pays exponential driver cost before any data moves.
-    // Checkpointing truncates lineage to the materialized RDD, keeping
-    // per-round plan size O(1). Local (executor-block) checkpoints are
-    // the right trade on a static cluster; `reliable = true` uses a
-    // reliable checkpoint() instead (see [[materialize]]) for clusters
-    // with executor loss / dynamic allocation. Superseded generations
-    // are dropped by the ContextCleaner once unreferenced.
-    var labels = materialize(sym.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id")), reliable)
-    // Labels only ever decrease, so the label SUM is a strictly
-    // decreasing invariant until the fixed point: convergence detection
-    // is one scalar aggregate per round, no old-vs-new join.
-    var prevSum = labels.agg(sum("lbl")).head().getLong(0)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      val msgs = sym
-        .join(labels.select(col("id").as("dst"), col("lbl")), "dst")
-        .select(col("src").as("id"), col("lbl"))
-      val next = materialize(labels.select("id", "lbl").unionByName(msgs)
-        .groupBy("id").agg(min("lbl").as("lbl")), reliable)
-      val curSum = next.agg(sum("lbl")).head().getLong(0)
-      labels = next
-      iter += 1
-      converged = curSum == prevSum
-      prevSum = curSum
-    }
-    // The returned frame's lineage is just the final checkpoint, so the
-    // edge cache is no longer reachable from it — release it here rather
-    // than leaking one cached edge list per call.
-    sym.unpersist()
-    labels
+  def duplicateClusterMembers(pairs: DataFrame, maxIters: Int = 25,
+                              reliable: Boolean = false): DataFrame = {
+    val edges = starEdges(pairs, maxIters, reliable)
+    val roots = edges.select("lo").distinct()
+    edges.select(col("hi").as("doc_id"), col("lo").as("cluster_id"))
+      .unionByName(roots.select(col("lo").as("doc_id"), col("lo").as("cluster_id")))
   }
 
   /** Connected components by alternating large-star / small-star edge
     * rewrites (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14) — the O(log n)-round alternative to
-    * [[duplicateClusters]]'s min-label propagation, whose round count is
-    * the component DIAMETER. Near-dup clusters from an LSH band join are
-    * near-cliques (diameter ~2), so propagation is fine there; this
-    * variant is the right tool when the pair graph carries long chains —
-    * e.g. templated page series where copy i only band-matches copy i±1
-    * — which at 100 TB would drive propagation to dozens of shuffle
-    * rounds while star contraction stays at O(log n).
+    * Beyond", SoCC'14): the fixed-point star forest {(hi = node, lo =
+    * component-min)} over every non-root node of the pair graph. The
+    * round count is O(log n), not the component diameter.
     *
     * Each round is two grouped passes over the edge list:
     *  - large-star: for every node u, hook each strictly-larger neighbor
     *    v > u to m = min(N(u) ∪ {u}) — long chains halve;
     *  - small-star: orient each edge (hi, lo); for every hi, hook hi and
     *    all its smaller neighbors to their minimum — stars flatten.
-    * Both emit canonical (hi, lo) edges, so the fixed point is the star
-    * forest {(node, component-min)}. Convergence is detected by a
-    * collision-proof symmetric-difference count between consecutive edge
-    * sets (both sides are distinct, so one union + group-by job per
-    * round); the DuckDB recursive-closure oracle independently certifies
-    * the result.
+    * Both emit canonical (hi, lo) edges. Convergence is detected by a
+    * collision-proof comparison of consecutive edge sets, fused into the
+    * round's materialization; the DuckDB recursive-closure oracle
+    * independently certifies the result. A graph that has not reached
+    * its fixed point after `maxIters` rounds fails the call rather than
+    * return a partial forest, which would label one document twice.
     *
     * Each round's edge set is localCheckpoint'ed (NOT merely cached):
     * the round's plan references the previous edge set ~8-16 times
@@ -420,14 +348,11 @@ object Dedup {
     * the materialized RDD: per-round plan size stays O(1). Local
     * checkpoints suit a static cluster; pass `reliable = true` (with a
     * checkpoint dir set) under executor loss/dynamic allocation.
-    *
-    * Output schema matches [[duplicateClusters]]: (cluster_id, n_docs)
-    * for components of 2+ documents, cluster_id = smallest doc_id.
     */
-  def duplicateClustersStar(pairs: DataFrame, maxIters: Int = 25,
-                            reliable: Boolean = false): DataFrame = {
+  private def starEdges(pairs: DataFrame, maxIters: Int,
+                        reliable: Boolean): DataFrame = {
     require(Seq("doc_a", "doc_b").forall(pairs.columns.contains(_)),
-      "duplicateClustersStar expects doc_a/doc_b pair columns")
+      "duplicateClusters expects doc_a/doc_b pair columns")
     var edges = materialize(pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("hi"),
               least(col("doc_a"), col("doc_b")).as("lo"))
@@ -481,10 +406,9 @@ object Dedup {
       edges = cmpM.filter(col("__new") === 1).select("hi", "lo")
       iter += 1
     }
-    // Fixed-point edges are (node, component-min) stars; the min node of
-    // each component appears only on the lo side, so size = lo-degree + 1.
-    edges.groupBy("lo").agg((count(lit(1)) + 1).as("n_docs"))
-      .select(col("lo").as("cluster_id"), col("n_docs"))
+    require(converged,
+      s"connected components did not reach a fixed point in $maxIters rounds")
+    edges
   }
 
   /** Distinct md5'd word `n`-grams per document: (idAs, g). Native fused

@@ -187,11 +187,12 @@ object Sampling {
     * split as the group's (r10, ADVICE finding).
     *
     * Scale shape: the CC pass is [[Dedup.duplicateClusterMembers]]
-    * (checkpointed label propagation — see duplicateClustersStar for the
-    * huge-graph variant); the split itself is a left join (cluster
-    * frame is pair-bounded, broadcastable in practice) plus a narrow
-    * hash projection. Returns (doc_id, group_id, split) with buckets
-    * 0-7 train / 8 val / 9 test by default.
+    * (checkpointed star contraction, O(log n) rounds, so a long chain
+    * of near-dups lands in one group just as a clique does); the split
+    * itself is a left join (cluster frame is pair-bounded,
+    * broadcastable in practice) plus a narrow hash projection. Returns
+    * (doc_id, group_id, split) with buckets 0-7 train / 8 val / 9 test
+    * by default.
     */
   def leakageSafeSplit(docs: DataFrame, pairs: DataFrame,
                        trainBuckets: Int = 8, valBuckets: Int = 1)

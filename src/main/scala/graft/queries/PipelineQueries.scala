@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.QueryDef
 import graft.catalog.Tables
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
-import Sql.{cosOf, duckKmeansCtes, duckQuant}
+import Sql.{cosOf, duckKmeansCtes, duckProbeCtes, duckQuant, duckSeedsCte}
 
 /** LLM-training-data pipeline corpus: deduplication (exact, MinHash-LSH,
   * SimHash, char-n-gram Jaccard, embedding near-dup), similarity search
@@ -81,6 +81,38 @@ object PipelineQueries {
        |  FROM bands a JOIN bands b
        |    ON a.bidx = b.bidx AND a.bval = b.bval AND a.doc_id < b.doc_id)""".stripMargin
 
+  /** The Jaccard-verified `pairs(doc_a, doc_b, jaccard)` over the `sh`
+    * and `cand` CTEs — exactly the rows of [[Dedup.minHashPairs]] at its
+    * default 0.8 threshold.
+    */
+  private val duckPairs: String =
+    """pairs AS (
+      |  SELECT doc_a, doc_b,
+      |    len(list_intersect(a.s, b.s)) /
+      |      len(list_distinct(list_concat(a.s, b.s))) AS jaccard
+      |  FROM cand JOIN sh a ON a.doc_id = doc_a JOIN sh b ON b.doc_id = doc_b
+      |  WHERE len(list_intersect(a.s, b.s)) /
+      |    len(list_distinct(list_concat(a.s, b.s))) >= 0.8)""".stripMargin
+
+  /** `WITH RECURSIVE` head of the connected-components oracles: the
+    * planted corpus's verified `pairs`, their recursive transitive
+    * closure `tc`, and `lbl(id, lbl)` = the smallest doc_id of each
+    * paired document's component — certifying that the Spark side
+    * reached the exact fixed point, not just ran.
+    */
+  private val duckComponents: String =
+    s"""WITH RECURSIVE corpus AS ($plantedCorpusSql),
+       |${duckShingles("corpus")},
+       |$duckMinhashCand,
+       |$duckPairs,
+       |e AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
+       |      UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs),
+       |tc(a, b) AS (
+       |  SELECT src, dst FROM e
+       |  UNION
+       |  SELECT tc.a, e.dst FROM tc JOIN e ON tc.b = e.src),
+       |lbl AS (SELECT a AS id, LEAST(a, MIN(b)) AS lbl FROM tc GROUP BY a)""".stripMargin
+
   /** The hot-bucket audit behind the LSH cap: band buckets whose size
     * exceeds the threshold — exactly the rows [[Dedup.minHashPairs]] at
     * the same parameters would exclude from candidate generation. The
@@ -104,13 +136,9 @@ object PipelineQueries {
   val dedupMinhash: QueryDef = QueryDef("dedup_minhash",
     (s, dir) => Dedup.minHashPairs(docs(s, dir)),
     Some(s"""WITH ${duckShingles()},
-            |$duckMinhashCand
-            |SELECT doc_a, doc_b,
-            |  len(list_intersect(a.s, b.s)) /
-            |    len(list_distinct(list_concat(a.s, b.s))) AS jaccard
-            |FROM cand JOIN sh a ON a.doc_id = doc_a JOIN sh b ON b.doc_id = doc_b
-            |WHERE len(list_intersect(a.s, b.s)) /
-            |    len(list_distinct(list_concat(a.s, b.s))) >= 0.8""".stripMargin),
+            |$duckMinhashCand,
+            |$duckPairs
+            |SELECT doc_a, doc_b, jaccard FROM pairs""".stripMargin),
     bench = true)
 
   /** DuckDB mirror of the native SimHashFingerprint bit k: md5 digest
@@ -330,70 +358,31 @@ object PipelineQueries {
 
   /** Pairs → clusters: connected components over the MinHash pair graph
     * on the planted corpus (each planted copy links to its original, so
-    * there are real multi-doc components). The DuckDB oracle computes
-    * true components with a recursive transitive closure — verifying
-    * that the Spark side's iterative min-label propagation CONVERGED to
-    * the exact fixed point, not just ran.
+    * there are real multi-doc components), by star contraction. The
+    * DuckDB oracle computes true components with a recursive transitive
+    * closure.
     */
-  val dedupClusters: QueryDef = QueryDef("dedup_clusters",
+  val dedupClustersStar: QueryDef = QueryDef("dedup_clusters_star",
     (s, dir) => Dedup.duplicateClusters(Dedup.minHashPairs(plantedCorpus(s, dir))),
-    Some(s"""WITH RECURSIVE corpus AS ($plantedCorpusSql),
-            |${duckShingles("corpus")},
-            |$duckMinhashCand,
-            |pairs AS (
-            |  SELECT doc_a, doc_b
-            |  FROM cand JOIN sh a ON a.doc_id = doc_a
-            |            JOIN sh b ON b.doc_id = doc_b
-            |  WHERE len(list_intersect(a.s, b.s)) /
-            |    len(list_distinct(list_concat(a.s, b.s))) >= 0.8),
-            |e AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-            |      UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs),
-            |tc(a, b) AS (
-            |  SELECT src, dst FROM e
-            |  UNION
-            |  SELECT tc.a, e.dst FROM tc JOIN e ON tc.b = e.src),
-            |lbl AS (SELECT a AS id, LEAST(a, MIN(b)) AS lbl FROM tc GROUP BY a)
+    Some(s"""$duckComponents
             |SELECT lbl AS cluster_id, COUNT(*) AS n_docs
-            |FROM lbl GROUP BY lbl HAVING COUNT(*) > 1""".stripMargin))
+            |FROM lbl GROUP BY lbl HAVING COUNT(*) > 1""".stripMargin),
+    // Headliner: tracks the pairs→clusters wall-clock (MinHash sweep +
+    // O(log n) star-contraction rounds) so the CC path has a bench row.
+    bench = true)
 
   /** Per-document membership of the same components — the
     * (doc_id, cluster_id) frame a pipeline joins against to DROP
-    * near-dup losers (`dedup_clusters` is its per-cluster aggregate).
-    * Oracle: the identical recursive closure WITHOUT the final
-    * aggregation, so every document's label is individually certified.
+    * near-dup losers (`dedup_clusters_star` is its per-cluster
+    * aggregate). Oracle: the identical recursive closure WITHOUT the
+    * final aggregation, so every document's label is individually
+    * certified.
     */
   val dedupClusterMembers: QueryDef = QueryDef("dedup_cluster_members",
     (s, dir) =>
       Dedup.duplicateClusterMembers(Dedup.minHashPairs(plantedCorpus(s, dir))),
-    Some(s"""WITH RECURSIVE corpus AS ($plantedCorpusSql),
-            |${duckShingles("corpus")},
-            |$duckMinhashCand,
-            |pairs AS (
-            |  SELECT doc_a, doc_b
-            |  FROM cand JOIN sh a ON a.doc_id = doc_a
-            |            JOIN sh b ON b.doc_id = doc_b
-            |  WHERE len(list_intersect(a.s, b.s)) /
-            |    len(list_distinct(list_concat(a.s, b.s))) >= 0.8),
-            |e AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-            |      UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs),
-            |tc(a, b) AS (
-            |  SELECT src, dst FROM e
-            |  UNION
-            |  SELECT tc.a, e.dst FROM tc JOIN e ON tc.b = e.src),
-            |lbl AS (SELECT a AS id, LEAST(a, MIN(b)) AS lbl FROM tc GROUP BY a)
+    Some(s"""$duckComponents
             |SELECT id AS doc_id, lbl AS cluster_id FROM lbl""".stripMargin))
-
-  /** Same components, computed by large-star/small-star contraction
-    * (O(log n) rounds vs propagation's O(diameter)) — certified against
-    * the SAME recursive-transitive-closure oracle as `dedup_clusters`,
-    * so both algorithms are proven to reach the identical fixed point.
-    */
-  val dedupClustersStar: QueryDef = QueryDef("dedup_clusters_star",
-    (s, dir) => Dedup.duplicateClustersStar(Dedup.minHashPairs(plantedCorpus(s, dir))),
-    dedupClusters.oracle,
-    // Headliner: tracks the pairs→clusters wall-clock (MinHash sweep +
-    // O(log n) star-contraction rounds) so the CC path has a bench row.
-    bench = true)
 
   /** Decontamination sweep: holdout = every 5th document, train = the
     * rest; which training docs share any (non-boilerplate) word 8-gram
@@ -440,12 +429,7 @@ object PipelineQueries {
        |       FROM c a CROSS JOIN cent s),
        |asg2 AS (SELECT vec_id, cid FROM a2 WHERE rn = 1),
        |pq AS (SELECT vec_id AS q_id, qe FROM c WHERE vec_id < 10),
-       |pr AS (SELECT a.q_id, a.qe AS q_emb, s.cid,
-       |         row_number() OVER (PARTITION BY a.q_id
-       |                            ORDER BY ${cosOf("a.qe", "s.ce")} DESC,
-       |                                     s.cid) AS rn
-       |       FROM pq a CROSS JOIN cent s),
-       |probes AS (SELECT q_id, q_emb, cid FROM pr WHERE rn <= $nprobe),
+       |${duckProbeCtes("pq", "cent", nprobe)},
        |iscored AS (SELECT p.q_id, e.vec_id,
        |              ${cosOf("p.q_emb", "e2.qe")} AS cos_sim
        |            FROM asg2 e JOIN c e2 ON e2.vec_id = e.vec_id
@@ -599,19 +583,14 @@ object PipelineQueries {
     val subDim = 64 / m
     s"""${duckPqHead(m, subDim)},
        |${duckPqSeeds("cb", ks)},
-       |coarse AS (SELECT CAST(vec_id AS INT) AS ccid, qe AS ce FROM c
-       |           WHERE vec_id < $numCent),
-       |lasgr AS (SELECT a.vec_id, s.ccid,
+       |${duckSeedsCte("c", numCent)},
+       |lasgr AS (SELECT a.vec_id, s.cid AS ccid,
        |            row_number() OVER (PARTITION BY a.vec_id
-       |              ORDER BY ${cosOf("a.qe", "s.ce")} DESC, s.ccid) AS rn
-       |          FROM c a CROSS JOIN coarse s),
+       |              ORDER BY ${cosOf("a.qe", "s.ce")} DESC, s.cid) AS rn
+       |          FROM c a CROSS JOIN seeds s),
        |lists AS (SELECT vec_id, ccid FROM lasgr WHERE rn = 1),
        |qq AS (SELECT vec_id AS q_id, qe FROM c WHERE vec_id < 10),
-       |cpr AS (SELECT q.q_id, s.ccid,
-       |          row_number() OVER (PARTITION BY q.q_id
-       |            ORDER BY ${cosOf("q.qe", "s.ce")} DESC, s.ccid) AS rn
-       |        FROM qq q CROSS JOIN coarse s),
-       |probes AS (SELECT q_id, ccid FROM cpr WHERE rn <= $nprobe),
+       |${duckProbeCtes("qq", "seeds", nprobe)},
        |encr AS (SELECT s.vec_id, s.j, cb.cid,
        |           row_number() OVER (PARTITION BY s.vec_id, s.j
        |             ORDER BY list_sum(list_transform(generate_series(1, $subDim),
@@ -625,7 +604,7 @@ object PipelineQueries {
        |            i -> q.sv[i] * cb.cw[i]))) AS adc_dot
        |        FROM enc e JOIN cb ON e.j = cb.j AND e.cid = cb.cid
        |        JOIN lists l ON l.vec_id = e.vec_id
-       |        JOIN probes p ON p.ccid = l.ccid
+       |        JOIN probes p ON p.cid = l.ccid
        |        JOIN qsub q ON q.j = e.j AND q.q_id = p.q_id
        |        WHERE e.vec_id <> p.q_id
        |        GROUP BY q.q_id, e.vec_id),
@@ -657,17 +636,16 @@ object PipelineQueries {
     val subDim = 64 / m
     s"""${duckPqHead(m, subDim)},
        |${duckKmeansCtes("c", numCent)},
-       |coarse AS (SELECT cid AS ccid, ce FROM cent),
-       |lasgr AS (SELECT a.vec_id, s.ccid,
+       |lasgr AS (SELECT a.vec_id, s.cid AS ccid,
        |            row_number() OVER (PARTITION BY a.vec_id
-       |              ORDER BY ${cosOf("a.qe", "s.ce")} DESC, s.ccid) AS rn
-       |          FROM c a CROSS JOIN coarse s),
+       |              ORDER BY ${cosOf("a.qe", "s.ce")} DESC, s.cid) AS rn
+       |          FROM c a CROSS JOIN cent s),
        |lists AS (SELECT vec_id, ccid FROM lasgr WHERE rn = 1),
        |rc AS (SELECT c.vec_id, l.ccid,
        |         list_transform(generate_series(1, 64),
        |           i -> c.qe[i] - co.ce[i]) AS qe
        |       FROM c JOIN lists l ON l.vec_id = c.vec_id
-       |       JOIN coarse co ON co.ccid = l.ccid),
+       |       JOIN cent co ON co.cid = l.ccid),
        |rsub AS (SELECT vec_id, j,
        |           qe[j * $subDim + 1 : j * $subDim + $subDim] AS sv
        |         FROM rc, (SELECT unnest(generate_series(0, ${m - 1})) AS j) js),
@@ -684,18 +662,13 @@ object PipelineQueries {
        |enc AS (SELECT vec_id, j, cid FROM encr WHERE rn = 1),
        |qq AS (SELECT vec_id AS q_id, qe FROM c WHERE vec_id < 10),
        |qsub AS (SELECT vec_id AS q_id, j, sv FROM sub WHERE vec_id < 10),
-       |cpr AS (SELECT q.q_id, s.ccid,
-       |          list_dot_product(q.qe, s.ce) AS qdot,
-       |          row_number() OVER (PARTITION BY q.q_id
-       |            ORDER BY ${cosOf("q.qe", "s.ce")} DESC, s.ccid) AS rn
-       |        FROM qq q CROSS JOIN coarse s),
-       |probes AS (SELECT q_id, ccid, qdot FROM cpr WHERE rn <= $nprobe),
+       |${duckProbeCtes("qq", "cent", nprobe)},
        |adc AS (SELECT q.q_id, e.vec_id,
        |          p.qdot + SUM(list_sum(list_transform(generate_series(1, $subDim),
        |            i -> q.sv[i] * cb.cw[i]))) AS adc_dot
        |        FROM enc e JOIN cb ON e.j = cb.j AND e.cid = cb.cid
        |        JOIN lists l ON l.vec_id = e.vec_id
-       |        JOIN probes p ON p.ccid = l.ccid
+       |        JOIN probes p ON p.cid = l.ccid
        |        JOIN qsub q ON q.j = e.j AND q.q_id = p.q_id
        |        WHERE e.vec_id <> p.q_id
        |        GROUP BY q.q_id, e.vec_id, p.qdot),
@@ -1194,22 +1167,7 @@ object PipelineQueries {
   val leakageSplit: QueryDef = QueryDef("sample_leakage_split",
     (s, dir) => graft.operators.Sampling.leakageSafeSplit(
       plantedCorpus(s, dir), Dedup.minHashPairs(plantedCorpus(s, dir))),
-    Some(s"""WITH RECURSIVE corpus AS ($plantedCorpusSql),
-            |${duckShingles("corpus")},
-            |$duckMinhashCand,
-            |pairs AS (
-            |  SELECT doc_a, doc_b
-            |  FROM cand JOIN sh a ON a.doc_id = doc_a
-            |            JOIN sh b ON b.doc_id = doc_b
-            |  WHERE len(list_intersect(a.s, b.s)) /
-            |    len(list_distinct(list_concat(a.s, b.s))) >= 0.8),
-            |e AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-            |      UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs),
-            |tc(a, b) AS (
-            |  SELECT src, dst FROM e
-            |  UNION
-            |  SELECT tc.a, e.dst FROM tc JOIN e ON tc.b = e.src),
-            |lbl AS (SELECT a AS id, LEAST(a, MIN(b)) AS lbl FROM tc GROUP BY a),
+    Some(s"""$duckComponents,
             |g AS (
             |  SELECT d.doc_id, COALESCE(l.lbl, d.doc_id) AS group_id
             |  FROM corpus d LEFT JOIN lbl l ON d.doc_id = l.id),
@@ -1233,7 +1191,7 @@ object PipelineQueries {
     sampleStratified,
     sampleWeighted, sampleTemperature, sampleShard, samplePack,
     leakageSplit, streamIngestPrep,
-    decontaminate, dedupClusters, dedupClusterMembers, dedupClustersStar,
+    decontaminate, dedupClusterMembers, dedupClustersStar,
     textStats, textLangid, textTokens, textQualityFilter, textRepetition,
     textFingerprint, piiRedact,
     multimodal, multimodalPixels, multimodalPixelsPng, corpusPrep)

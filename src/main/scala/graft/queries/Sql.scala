@@ -89,18 +89,23 @@ object Sql {
   /** Guarded cosine of two quantized DuckDB lists `a` and `b`. */
   def cosOf(a: String, b: String): String = duckCos.format(a, b, a, a, b, b)
 
+  /** The k-means seed rule over the quantized `(vec_id, qe)` CTE named
+    * `src`: CTE `seeds(cid, ce)`, the `k` smallest vec_ids, cid = vec_id.
+    */
+  def duckSeedsCte(src: String, k: Int): String =
+    s"""seeds AS (SELECT CAST(vec_id AS INT) AS cid, qe AS ce FROM $src
+       |          WHERE vec_id < $k)""".stripMargin
+
   /** DuckDB mirror of Similarity's seeded k-means over the quantized
-    * `(vec_id, qe)` CTE named `src`: CTEs `seeds` (the `k` smallest
-    * vec_ids, cid = vec_id), `a1`/`asg1` (argmax cosine, ties to the
-    * smaller cid) and `cent` (one Lloyd step: floor of the per-dim mean
-    * back onto the integer grid). Every comparison runs over exact
-    * integral doubles, so assignments and centroids are bit-identical to
-    * the Spark side.
+    * `(vec_id, qe)` CTE named `src`: CTEs `seeds` ([[duckSeedsCte]]),
+    * `a1`/`asg1` (argmax cosine, ties to the smaller cid) and `cent`
+    * (one Lloyd step: floor of the per-dim mean back onto the integer
+    * grid). Every comparison runs over exact integral doubles, so
+    * assignments and centroids are bit-identical to the Spark side.
     */
   def duckKmeansCtes(src: String, k: Int): String = {
     val cosAS = cosOf("a.qe", "s.ce")
-    s"""seeds AS (SELECT CAST(vec_id AS INT) AS cid, qe AS ce FROM $src
-       |          WHERE vec_id < $k),
+    s"""${duckSeedsCte(src, k)},
        |a1 AS (SELECT a.vec_id, a.qe, s.cid,
        |         row_number() OVER (PARTITION BY a.vec_id
        |                            ORDER BY $cosAS DESC, s.cid) AS rn
@@ -111,4 +116,19 @@ object Sql {
        |           FROM asg1, (SELECT unnest(generate_series(1, 64)) AS d) dims
        |           GROUP BY cid, d) GROUP BY cid)""".stripMargin
   }
+
+  /** The IVF probe rule: every query of the `(q_id, qe)` CTE named
+    * `queries` probes the `nprobe` centroids of the `(cid, ce)` CTE
+    * named `cents` nearest by cosine, ties to the smaller cid. CTE
+    * `probes(q_id, q_emb, cid, qdot)`, qdot = dot(query, centroid) —
+    * the offset a residual index adds back into its score.
+    */
+  def duckProbeCtes(queries: String, cents: String, nprobe: Int): String =
+    s"""pr AS (SELECT q.q_id, q.qe AS q_emb, s.cid,
+       |         list_dot_product(q.qe, s.ce) AS qdot,
+       |         row_number() OVER (PARTITION BY q.q_id
+       |                            ORDER BY ${cosOf("q.qe", "s.ce")} DESC,
+       |                                     s.cid) AS rn
+       |       FROM $queries q CROSS JOIN $cents s),
+       |probes AS (SELECT q_id, q_emb, cid, qdot FROM pr WHERE rn <= $nprobe)""".stripMargin
 }

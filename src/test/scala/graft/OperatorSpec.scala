@@ -143,9 +143,9 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("duplicateClusters converges on a chain (multi-hop propagation)") {
-    // A path 1-2-3-4-5 needs label hops, not one round (the corpus
-    // fixtures are near-cliques, which would converge in one step and
-    // prove nothing about the iteration); plus a disjoint pair 10-11.
+    // A path 1-2-3-4-5 needs several contraction rounds, not one (the
+    // corpus fixtures are near-cliques, which would converge in one step
+    // and prove nothing about the iteration); plus a disjoint pair 10-11.
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
       .toDF("doc_a", "doc_b")
@@ -177,7 +177,7 @@ class OperatorSpec extends AnyFunSuite {
     if (spark.sparkContext.getCheckpointDir.isEmpty) {
       val pairs = Seq((1L, 2L)).toDF("doc_a", "doc_b")
       intercept[IllegalArgumentException] {
-        operators.Dedup.duplicateClusters(pairs, 20, true)
+        operators.Dedup.duplicateClusters(pairs, 25, true)
       }
     }
   }
@@ -194,13 +194,10 @@ class OperatorSpec extends AnyFunSuite {
     try {
       val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
         .toDF("doc_a", "doc_b")
-      for (f <- Seq(
-          operators.Dedup.duplicateClusters(pairs, 20, true),
-          operators.Dedup.duplicateClustersStar(pairs, 25, true))) {
-        val got = f.orderBy("cluster_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq
-        assert(got == Seq((1L, 4L), (10L, 2L)))
-      }
+      val got = operators.Dedup.duplicateClusters(pairs, 25, true)
+        .orderBy("cluster_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(got == Seq((1L, 4L), (10L, 2L)))
       // the reliable path actually wrote checkpoint data
       assert(new java.io.File(dir).listFiles() != null &&
         new java.io.File(dir).listFiles().nonEmpty)
@@ -210,20 +207,25 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
-  test("duplicateClustersStar contracts a long chain in O(log n) rounds") {
+  test("duplicateClusters contracts a long chain in O(log n) rounds") {
     // A 16-node path is the adversarial case for label propagation
     // (diameter 15) and the motivating case for star contraction
-    // (~log2(16) rounds). Same output contract as duplicateClusters.
+    // (~log2(16) rounds).
     import spark.implicits._
     val chain = (1L until 16L).map(i => (i, i + 1))
     val pairs = (chain :+ (100L, 101L)).toDF("doc_a", "doc_b")
-    val got = operators.Dedup.duplicateClustersStar(pairs, maxIters = 8)
+    val got = operators.Dedup.duplicateClusters(pairs, maxIters = 8)
       .orderBy("cluster_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == Seq((1L, 16L), (100L, 2L)))
+    // A round cap the chain outlasts fails loudly: a partial star forest
+    // would give one document two cluster_ids.
+    intercept[IllegalArgumentException] {
+      operators.Dedup.duplicateClusterMembers(pairs, maxIters = 1)
+    }
   }
 
-  test("duplicateClustersStar stays plan-bounded on a 64-node path (r5 OOM regression)") {
+  test("duplicateClusters stays plan-bounded on a 64-node path (r5 OOM regression)") {
     // Pre-fix, each round's analyzed plan embedded ~8-16 copies of the
     // previous round's, so 5+ rounds OOM'd an 8 GB JVM during plan
     // stringification on a 17-EDGE input. With per-round localCheckpoint
@@ -232,7 +234,7 @@ class OperatorSpec extends AnyFunSuite {
     // a handful of nodes over the checkpointed edge set.
     import spark.implicits._
     val pairs = (1L until 64L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val res = operators.Dedup.duplicateClustersStar(pairs, maxIters = 12)
+    val res = operators.Dedup.duplicateClusters(pairs, maxIters = 12)
     val planNodes = res.queryExecution.analyzed.collectLeaves().size +
       res.queryExecution.analyzed.map(_ => 1).sum
     assert(planNodes < 40, s"analyzed plan unexpectedly large: $planNodes nodes")
@@ -298,26 +300,5 @@ class OperatorSpec extends AnyFunSuite {
     // NULL group must participate rather than being join-dropped.
     assert(kept.filter("dom IS NULL").count() > 0,
       "NULL-domain rows were dropped by the rates join")
-  }
-
-  test("duplicateClusters stays plan-bounded over many rounds (64-node path)") {
-    // Label propagation needs diameter rounds to reach the minimum, so a
-    // 12-iteration cap on a 63-edge path exercises many loop rounds
-    // without waiting for full convergence. Pre-fix the analyzed plan
-    // doubled per round (~2^12 copies here); post-fix it is O(1). The
-    // capped result is a documented valid refinement: labels only ever
-    // decrease, every node keeps exactly one label.
-    import spark.implicits._
-    val pairs = (1L until 64L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val res = operators.Dedup.duplicateClusters(pairs, maxIters = 12)
-    val planNodes = res.queryExecution.analyzed.map(_ => 1).sum
-    assert(planNodes < 40, s"analyzed plan unexpectedly large: $planNodes nodes")
-    val clusters = res.collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(clusters.map(_._2).sum <= 64L)
-    assert(clusters.forall(_._1 >= 1L))
-    // Full convergence on the same path with an ample cap stays exact.
-    val exact = operators.Dedup.duplicateClusters(pairs, maxIters = 70)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(exact == Seq((1L, 64L)))
   }
 }

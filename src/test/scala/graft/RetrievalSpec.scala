@@ -207,19 +207,25 @@ class RetrievalSpec extends AnyFunSuite {
   test("leakageSafeSplit: connected docs share a split; every doc assigned once") {
     val s = spark
     import s.implicits._
-    val docs = (1L to 10L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
-    // chain 1-2-3 is one group; 7-8 another; rest singletons
-    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("doc_a", "doc_b")
+    val path = 101L to 164L
+    val ids = (1L to 10L) ++ path
+    val docs = ids.map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    // chain 1-2-3 is one group; 7-8 another; 101-...-164 a 64-node path
+    // (diameter 63, past any fixed label-hop budget); rest singletons
+    val pairs = (Seq((1L, 2L), (2L, 3L), (7L, 8L)) ++
+      path.init.map(i => (i, i + 1))).toDF("doc_a", "doc_b")
     val got = Sampling.leakageSafeSplit(docs, pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    assert(got.length == 10)
-    assert(got.map(_._1).toSet == (1L to 10L).toSet)
+    assert(got.length == ids.size)
+    assert(got.map(_._1).toSet == ids.toSet)
     val byDoc = got.map(r => r._1 -> r).toMap
     // one group id and one split for the whole component
     assert(Set(byDoc(1L), byDoc(2L), byDoc(3L)).map(_._2) == Set(1L))
     assert(Set(byDoc(1L), byDoc(2L), byDoc(3L)).map(_._3).size == 1)
     assert(Set(byDoc(7L), byDoc(8L)).map(_._2) == Set(7L))
     assert(Set(byDoc(7L), byDoc(8L)).map(_._3).size == 1)
+    assert(path.map(byDoc(_)._2).toSet == Set(101L))
+    assert(path.map(byDoc(_)._3).toSet.size == 1)
     // singletons group under their own id
     assert(byDoc(5L)._2 == 5L)
     assert(got.forall(r => Set("train", "val", "test")(r._3)))

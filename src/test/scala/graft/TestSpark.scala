@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** One shared engine session for all suites (session startup is ~5s;
   * per-suite sessions would dominate test wall-clock).
@@ -58,12 +59,15 @@ object TestSpark {
       org.scalacheck.rng.Seed(i.toLong)))
 
   /** The executed physical plan string (forces execution so AQE has
-    * finalized its plan before inspection). AQE's toString includes the
-    * pre-adaptive "Initial Plan" section — strip it so assertions see
-    * only what actually ran.
+    * finalized its plan before inspection). Under AQE this is the final
+    * adaptive plan alone — not the wrapper's print, whose pre-adaptive
+    * "Initial Plan" section would show operators that never ran.
     */
   def finalPlan(df: DataFrame): String = {
     df.collect()
-    df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
+      case p => p.toString
+    }
   }
 }
