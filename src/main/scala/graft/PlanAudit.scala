@@ -3,9 +3,18 @@ package graft
 /** Plan auditor: executes every bench headliner and reports the physical
   * plan properties that matter at 100 TB — join strategies, exchange
   * (shuffle) counts, parquet pushdown, codegen coverage. Output is
-  * markdown (redirected into PLANS.md).
+  * markdown. PLANS.md is rebuilt, byte for byte, by
   *
-  *   sbt "runMain graft.PlanAudit /root/testdata/sf0.01" > PLANS.md
+  *   sbt --batch -Dsbt.log.noformat=true \
+  *       "runMain graft.PlanAudit <sf0.01 dir>" 2>/dev/null \
+  *     | sed -n '/^\[info\] # PLANS/,$p' \
+  *     | grep -v -e '^\[error\]' -e '^\[success\]' \
+  *     | sed -E 's/^\[info\] ?//' > PLANS.md
+  *
+  * with `<sf0.01 dir>` the corpus PLANS.md's header names. sbt prints
+  * the forked JVM's stdout as `[info]` lines and its stderr (the Spark
+  * log) as `[error]` lines on its own stdout, so `2>/dev/null` alone
+  * keeps both; the filter keeps the report from its title line on.
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {

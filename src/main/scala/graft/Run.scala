@@ -32,7 +32,7 @@ import org.apache.spark.sql.execution.FormattedMode
   * broadcast decisions are size-based.
   *
   * `--conf` sets runtime SQL confs on the session before any planning
-  * (e.g. `spark.graft.graph.packedAdjacency=false` for an A/B probe, or
+  * (e.g. `spark.sql.autoBroadcastJoinThreshold=-1` for an A/B probe, or
   * `spark.sql.shuffle.partitions=N` to override the input-size-derived
   * default). The skew recipe on a ScaleGen `zipf` corpus is five of them:
   * `spark.sql.shuffle.partitions=<cores>`,

@@ -63,16 +63,37 @@ object Dedup {
     * that are near-identical to `maxBucket`+ others — exactly the
     * cluster a cheaper exact-dedup / cluster-collapse pass should own —
     * and keeps the join's per-bucket cost bounded. Capped buckets are
-    * inspectable via [[hotBuckets]].
+    * inspectable via [[hotBuckets]]. The one cap of the banded-LSH
+    * family: [[minHashPairs]], [[incrementalNearDups]],
+    * [[simHashNearPairs]] and `Similarity.signLshBanded` all call it.
     */
-  private def capBuckets(bands: DataFrame, maxBucket: Int,
-                         idxCol: String = "bidx",
-                         valCol: String = "bval"): DataFrame =
+  private[operators] def capBuckets(bands: DataFrame,
+                                    maxBucket: Int): DataFrame =
     bands
       .withColumn("__bn",
-        count(lit(1)).over(Window.partitionBy(idxCol, valCol)))
+        count(lit(1)).over(Window.partitionBy("bidx", "bval")))
       .filter(col("__bn") <= maxBucket)
       .drop("__bn")
+
+  /** Exact set Jaccard of each candidate pair: joins `cand` to the
+    * `(key, set)` frames `setsA` and `setsB` on their key columns and
+    * adds size(A ∩ B) / size(A ∪ B) as `as`. Both joins are hint-pinned
+    * shuffle_hash: the set frames are CORPUS-sized (and their exploded
+    * arrays are 10-20× the compressed-parquet estimate Spark sizes them
+    * by, so in the 10-100 MB-file window the planner would pick one as
+    * a broadcast build — measured in the 10× soak). SHJ builds
+    * per-partition maps from the bounded pairs side and streams the
+    * sets; neither side is ever broadcast.
+    */
+  private def withJaccard(cand: DataFrame, setsA: DataFrame,
+                          setsB: DataFrame, as: String): DataFrame = {
+    val Array(ka, sa) = setsA.columns
+    val Array(kb, sb) = setsB.columns
+    cand.hint("shuffle_hash").join(setsA, ka)
+      .hint("shuffle_hash").join(setsB, kb)
+      .withColumn(as, size(array_intersect(col(sa), col(sb))) /
+        size(array_union(col(sa), col(sb))))
+  }
 
   /** Band buckets (with sizes) that [[minHashPairs]] at the same
     * parameters would DROP — the recall audit for the hot-bucket cap.
@@ -142,19 +163,9 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    // shuffle_hash on the pairs side: the shingle frame is CORPUS-sized
-    // (and its exploded arrays are 10-20× the compressed-parquet estimate
-    // Spark sizes it by, so in the 10-100 MB-file window the planner
-    // would pick it as a broadcast build — measured in the 10× soak).
-    // SHJ builds per-partition maps from the bounded pairs side and
-    // streams the shingles; neither side is ever broadcast.
-    cand.hint("shuffle_hash")
-      .join(sh.select(col("doc_id").as("doc_a"), col("s").as("sa")), "doc_a")
-      .hint("shuffle_hash")
-      .join(sh.select(col("doc_id").as("doc_b"), col("s").as("sb")), "doc_b")
-      .withColumn("jaccard",
-        size(array_intersect(col("sa"), col("sb"))) /
-          size(array_union(col("sa"), col("sb"))))
+    withJaccard(cand,
+        sh.select(col("doc_id").as("doc_a"), col("s").as("sa")),
+        sh.select(col("doc_id").as("doc_b"), col("s").as("sb")), "jaccard")
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
   }
@@ -202,15 +213,9 @@ object Dedup {
         col("n.bidx") === col("e.bidx") && col("n.bval") === col("e.bval"))
       .select(col("n.doc_id").as("new_id"), col("e.doc_id").as("old_id"))
       .distinct()
-    // Same shuffle_hash rationale as minHashPairs: shE is corpus-sized
-    // and must stream, never build a broadcast.
-    cand.hint("shuffle_hash")
-      .join(shN.select(col("doc_id").as("new_id"), col("s").as("sn")), "new_id")
-      .hint("shuffle_hash")
-      .join(shE.select(col("doc_id").as("old_id"), col("s").as("so")), "old_id")
-      .withColumn("jaccard",
-        size(array_intersect(col("sn"), col("so"))) /
-          size(array_union(col("sn"), col("so"))))
+    withJaccard(cand,
+        shN.select(col("doc_id").as("new_id"), col("s").as("sn")),
+        shE.select(col("doc_id").as("old_id"), col("s").as("so")), "jaccard")
       .filter(col("jaccard") >= threshold)
       .select("new_id", "old_id", "jaccard")
   }
@@ -221,14 +226,18 @@ object Dedup {
     * Bit k is the sign of the sum over words of ±1 by digest bit k
     * (native fused SimHashFingerprint: one md5 per word, one pass).
     */
-  def simHashClusters(docs: DataFrame, bits: Int = 16): DataFrame = {
-    Par.spread(docs).select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .select(col("doc_id"),
-        graft.functions.SimHashFingerprint(col("ws"), bits).as("fingerprint"))
+  def simHashClusters(docs: DataFrame, bits: Int = 16): DataFrame =
+    fingerprints(docs, bits, "fingerprint")
       .groupBy("fingerprint")
       .agg(min("doc_id").as("keep_id"), count("*").as("n_docs"))
       .filter(col("n_docs") > 1)
-  }
+
+  /** `(doc_id, fpCol)`: each document's `bits`-bit SimHash fingerprint. */
+  private def fingerprints(docs: DataFrame, bits: Int,
+                           fpCol: String): DataFrame =
+    Par.spread(docs).select(col("doc_id"), split(col("text"), " ").as("ws"))
+      .select(col("doc_id"),
+        graft.functions.SimHashFingerprint(col("ws"), bits).as(fpCol))
 
   /** SimHash near-pair search with Hamming tolerance: split the `bits`-bit
     * fingerprint into `chunks` equal slices — any pair within Hamming
@@ -258,21 +267,20 @@ object Dedup {
   def simHashNearPairs(docs: DataFrame, bits: Int = 32, chunks: Int = 2,
                        maxHamming: Int = 1, maxBucket: Int = 2000): DataFrame = {
     require(maxHamming < chunks, "pigeonhole needs maxHamming < chunks")
-    val fps = Par.spread(docs).select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .select(col("doc_id"),
-        graft.functions.SimHashFingerprint(col("ws"), bits).as("fp"))
+    val fps = fingerprints(docs, bits, "fp")
       .localCheckpoint(eager = false) // lazy for the same reason as minHashPairs
 
     val w = bits / chunks
+    // Chunks are the bands: (bidx, bval) = (slice idx, slice value).
     val chunked = capBuckets(
       fps.select(col("doc_id"), col("fp"),
           posexplode(expr(
             s"transform(sequence(0, ${chunks - 1}), c -> substring(fp, c * $w + 1, $w))")))
-        .toDF("doc_id", "fp", "cidx", "cval"),
-      maxBucket, "cidx", "cval")
+        .toDF("doc_id", "fp", "bidx", "bval"),
+      maxBucket)
     chunked.as("a")
       .join(chunked.as("b"),
-        col("a.cidx") === col("b.cidx") && col("a.cval") === col("b.cval") &&
+        col("a.bidx") === col("b.bidx") && col("a.bval") === col("b.bval") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         // native HammingDiff (optimization r16): the per-candidate
@@ -527,14 +535,11 @@ object Dedup {
     // on the corpus — see the kernel's scaladoc).
     val grams = docs.select(col("doc_id"),
       graft.functions.CharNgrams(col("text"), n).as("g"))
-    // Same shuffle_hash rationale as minHashPairs' verification join.
-    cand.hint("shuffle_hash")
-      .join(grams.select(col("doc_id").as("doc_a"), col("g").as("ga")), "doc_a")
-      .hint("shuffle_hash")
-      .join(grams.select(col("doc_id").as("doc_b"), col("g").as("gb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        (size(array_intersect(col("ga"), col("gb"))) /
-          size(array_union(col("ga"), col("gb")))).as("char_jaccard"))
+    withJaccard(cand,
+        grams.select(col("doc_id").as("doc_a"), col("g").as("ga")),
+        grams.select(col("doc_id").as("doc_b"), col("g").as("gb")),
+        "char_jaccard")
+      .select("doc_a", "doc_b", "char_jaccard")
   }
 
   /** Corpus-overlap estimation by bottom-k sketch: how much of corpus A's

@@ -125,16 +125,11 @@ object Graph {
     // neighbor; sorted ids delta-varint to 1–3 B, so the packed BINARY
     // form (graft.functions.PackedAdjacency, native codegen'd pack /
     // merge-walk intersect) carries the same wedges in a fraction of
-    // the bytes. Conf-switchable for A/B; default = packed (measured at
-    // the 100× soak — see BASELINE.md).
-    val packed = edges.sparkSession.conf
-      .get("spark.graft.graph.packedAdjacency", "true").toBoolean
-    val adjRaw = oriented.groupBy("u").agg(collect_list("v").as("nbrs"))
-    val adj = if (packed)
-      adjRaw.select(col("u"),
+    // the bytes (measured at the 100× soak — see BASELINE.md).
+    val adj = oriented.groupBy("u").agg(collect_list("v").as("nbrs"))
+      .select(col("u"),
         graft.functions.PackedAdjacencyColumns.packVarint(col("nbrs"))
           .as("nbrs"))
-    else adjRaw
     // Inner joins are exact: adj(u) exists by construction (u sources
     // this edge); a missing adj(v) means N+(v) = ∅, contribution 0 —
     // dropping the row counts the same. shuffle_hash builds the
@@ -147,10 +142,8 @@ object Graph {
         .withColumnRenamed("u", "__kv").withColumnRenamed("nbrs", "nv"),
         col("v") === col("__kv"))
       .select(col("u"), col("v"),
-        (if (packed)
-          graft.functions.PackedAdjacencyColumns
-            .packedIntersect(col("nu"), col("nv"))
-        else array_intersect(col("nu"), col("nv"))).as("tri_nbrs"))
+        graft.functions.PackedAdjacencyColumns
+          .packedIntersect(col("nu"), col("nv")).as("tri_nbrs"))
   }
 
   /** Per-node triangle participation: how many triangles each node sits

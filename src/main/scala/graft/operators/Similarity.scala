@@ -565,15 +565,21 @@ object Similarity {
   def signLshNearDup(corpus: DataFrame, signBits: Int = 8,
                      threshold: Double = 0.4): DataFrame = {
     val b = corpus.selectExpr("vec_id", "embedding",
-      s"""concat_ws('', transform(slice(embedding, 1, $signBits),
-         |  x -> CASE WHEN ROUND(CAST(x AS DOUBLE) * 1048576) >= 0
-         |       THEN '1' ELSE '0' END)) AS bucket""".stripMargin)
+      s"${signKey("1", signBits)} AS bucket")
     b.as("a").join(b.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
         cosine(col("a.embedding"), col("b.embedding")).as("cos_sim"))
       .filter(col("cos_sim") > threshold)
   }
+
+  /** SQL for the sign-LSH bucket key: the '1'/'0' string of the quantized
+    * signs of `len` dims of `embedding` from 1-based position `start`.
+    */
+  private def signKey(start: String, len: Int): String =
+    s"""concat_ws('', transform(slice(embedding, $start, $len),
+       |  x -> CASE WHEN ROUND(CAST(x AS DOUBLE) * 1048576) >= 0
+       |       THEN '1' ELSE '0' END))""".stripMargin
 
   /** Multi-band sign-LSH: `bands` independent sign buckets over disjoint
     * dimension slices; a pair is a candidate if ANY band matches
@@ -584,26 +590,16 @@ object Similarity {
     */
   def signLshBanded(corpus: DataFrame, bands: Int = 4, bandBits: Int = 8,
                     threshold: Double = 0.4, maxBucket: Int = 500): DataFrame = {
-    val raw = corpus
+    // Hot-bucket cap (Dedup.capBuckets): the bucket join is quadratic
+    // within a bucket, and an embedding cluster (boilerplate pages,
+    // near-identical templates) can concentrate one. Note sign-LSH
+    // buckets also grow linearly with corpus size at FIXED bandBits
+    // (2^bandBits patterns): at much larger corpora, raise bandBits
+    // (more hyperplanes) rather than the cap.
+    val banded = Dedup.capBuckets(corpus
       .select(col("vec_id"), col("embedding"), posexplode(expr(
-        s"""transform(sequence(0, ${bands - 1}), b ->
-           |  concat_ws('', transform(slice(embedding, b * $bandBits + 1, $bandBits),
-           |    x -> CASE WHEN ROUND(CAST(x AS DOUBLE) * 1048576) >= 0
-           |         THEN '1' ELSE '0' END)))""".stripMargin)))
-      .toDF("vec_id", "embedding", "bidx", "bval")
-    // Hot-bucket cap, same rationale as Dedup.capBuckets: the bucket join
-    // is quadratic within a bucket, and an embedding cluster (boilerplate
-    // pages, near-identical templates) can concentrate one. One window
-    // count on the join's own (bidx, bval) key — no extra shuffle. Note
-    // sign-LSH buckets also grow linearly with corpus size at FIXED
-    // bandBits (2^bandBits patterns): at much larger corpora, raise
-    // bandBits (more hyperplanes) rather than the cap.
-    val banded = raw
-      .withColumn("__bn",
-        count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("bidx", "bval")))
-      .filter(col("__bn") <= maxBucket)
-      .drop("__bn")
+        s"transform(sequence(0, ${bands - 1}), b -> ${signKey(s"b * $bandBits + 1", bandBits)})")))
+      .toDF("vec_id", "embedding", "bidx", "bval"), maxBucket)
     banded.as("a").join(banded.as("b"),
         col("a.bidx") === col("b.bidx") && col("a.bval") === col("b.bval") &&
           col("a.vec_id") < col("b.vec_id"))

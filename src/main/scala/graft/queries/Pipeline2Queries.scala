@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.QueryDef
 import graft.catalog.Tables
 import graft.operators.{Similarity, TextAnalysis}
-import Sql.{cosOf, duckKmeansCtes, duckQuant}
+import Sql.{cosOf, duckKmeansCtes, duckQuant, duckRankedCentroids}
 
 /** Second LLM-pipeline wave (round 9): semantic dedup (SemDeDup),
   * repeated-passage scrubbing, and model-based quality scoring. Same
@@ -30,14 +30,10 @@ object Pipeline2Queries {
   val semanticDedup: QueryDef = QueryDef("dedup_semantic",
     (s, dir) => Similarity.semanticDedup(embs(s, dir)),
     Some {
-      val cosAS = cosOf("a.qe", "s.ce")
       s"""WITH c AS (SELECT vec_id, ${duckQuant("embedding")} AS qe
          |           FROM embeddings),
          |${duckKmeansCtes("c", 8)},
-         |a2 AS (SELECT a.vec_id, a.qe, s.cid, s.ce,
-         |         row_number() OVER (PARTITION BY a.vec_id
-         |                            ORDER BY $cosAS DESC, s.cid) AS rn
-         |       FROM c a CROSS JOIN cent s),
+         |${duckRankedCentroids("a2", "a.vec_id, a.qe, s.cid, s.ce", "c", "cent")},
          |cc AS (SELECT vec_id, qe, cid,
          |         ${cosOf("qe", "ce")} AS cos_centroid
          |       FROM a2 WHERE rn = 1),
@@ -138,14 +134,11 @@ object Pipeline2Queries {
   val streamAnnAssign: QueryDef = QueryDef("stream_ann_assign",
     (s, dir) => graft.streaming.Streams.ivfAssignAvailableNow(s, dir),
     Some {
-      val cosAS = cosOf("a.qe", "s.ce")
+      val cols = s"a.vec_id, s.cid, ${cosOf("a.qe", "s.ce")} AS cos_centroid"
       s"""WITH c AS (SELECT vec_id, ${duckQuant("embedding")} AS qe
          |           FROM embeddings),
          |${duckKmeansCtes("c", 8)},
-         |a2 AS (SELECT a.vec_id, s.cid, $cosAS AS cos_centroid,
-         |         row_number() OVER (PARTITION BY a.vec_id
-         |                            ORDER BY $cosAS DESC, s.cid) AS rn
-         |       FROM c a CROSS JOIN cent s)
+         |${duckRankedCentroids("a2", cols, "c", "cent")}
          |SELECT vec_id, cid, cos_centroid FROM a2 WHERE rn = 1""".stripMargin
     })
 
@@ -161,15 +154,11 @@ object Pipeline2Queries {
         e.filter("vec_id % 5 != 0"), e.filter("vec_id % 5 = 0"))
     },
     Some {
-      val cosAS = cosOf("a.qe", "s.ce")
       s"""WITH c AS (SELECT vec_id, ${duckQuant("embedding")} AS qe
          |           FROM embeddings),
          |ex0 AS (SELECT * FROM c WHERE vec_id % 5 <> 0),
          |${duckKmeansCtes("ex0", 8)},
-         |a2 AS (SELECT a.vec_id, a.qe, s.cid,
-         |         row_number() OVER (PARTITION BY a.vec_id
-         |                            ORDER BY $cosAS DESC, s.cid) AS rn
-         |       FROM c a CROSS JOIN cent s),
+         |${duckRankedCentroids("a2", "a.vec_id, a.qe, s.cid", "c", "cent")},
          |asg2 AS (SELECT vec_id, qe, cid FROM a2 WHERE rn = 1),
          |i AS (SELECT * FROM asg2 WHERE vec_id % 5 = 0),
          |e AS (SELECT * FROM asg2 WHERE vec_id % 5 <> 0)

@@ -5,7 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.QueryDef
 import graft.catalog.Tables
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
-import Sql.{cosOf, duckKmeansCtes, duckProbeCtes, duckQuant, duckSeedsCte}
+import Sql.{cosOf, duckKmeansCtes, duckProbeCtes, duckQuant,
+  duckRankedCentroids, duckSeedsCte}
 
 /** LLM-training-data pipeline corpus: deduplication (exact, MinHash-LSH,
   * SimHash, char-n-gram Jaccard, embedding near-dup), similarity search
@@ -44,55 +45,70 @@ object PipelineQueries {
             |FROM corpus GROUP BY md5(text)""".stripMargin),
     bench = true)
 
-  /** DuckDB mirror of Dedup.minHashPairs' shingle + signature pipeline. */
-  private def duckShingles(from: String = "documents"): String =
-    s"""words AS (SELECT doc_id, string_split(text, ' ') AS ws FROM $from),
-      |sh AS (SELECT doc_id,
+  /** DuckDB mirror of Dedup's word 3-gram shingle sets: CTEs `words`
+    * and `sh(keyCols, s)` over the `(keyCols, text)` relation `from`.
+    */
+  private def duckShingles(from: String = "documents",
+                           keyCols: String = "doc_id"): String =
+    s"""words AS (SELECT $keyCols, string_split(text, ' ') AS ws FROM $from),
+      |sh AS (SELECT $keyCols,
       |  list_distinct(list_transform(generate_series(1, len(ws) - 2),
       |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
       |  FROM words WHERE len(ws) >= 3)""".stripMargin
 
-  /** The 8 minhash slices (4 hex chars each) of the per-shingle md5 —
-    * the single source of the signature scheme shared by every minhash
-    * oracle (pair sweep, n-gram refine, clusters, incremental).
+  /** CTEs `md`, `mh` and `bands(keyCols, bidx, bval)` over `sh`: the 8
+    * minhash slices (4 hex chars each) of the per-shingle md5 and their
+    * 4 two-slice band rows per document, with `keyCols` carried through
+    * (e.g. "doc_id" or "side, doc_id") — the single source of the
+    * signature scheme shared by every minhash oracle.
     */
-  private val duckMinhashSlices: String = (0 until 8).map(i =>
-    s"  list_min(list_transform(hs, h -> substr(h, ${4 * i + 1}, 4))) AS h$i")
-    .mkString(",\n")
-
-  /** The 4 two-slice band rows per doc, with `keyCols` carried through
-    * (e.g. "doc_id" or "side, doc_id").
-    */
-  private def duckBandSelects(keyCols: String): String = (0 until 4).map(b =>
-    s"SELECT $keyCols, $b AS bidx, h${2 * b} || h${2 * b + 1} AS bval FROM mh")
-    .mkString("\n  UNION ALL ")
-
-  private def duckMinhashCand: String =
-    s"""md AS (SELECT doc_id, list_transform(s, w -> md5(w)) AS hs FROM sh),
-       |mh AS (SELECT doc_id,
-       |$duckMinhashSlices
+  private def duckMinhashBands(keyCols: String): String = {
+    val slices = (0 until 8).map(i =>
+      s"  list_min(list_transform(hs, h -> substr(h, ${4 * i + 1}, 4))) AS h$i")
+    val bandRows = (0 until 4).map(b =>
+      s"SELECT $keyCols, $b AS bidx, h${2 * b} || h${2 * b + 1} AS bval FROM mh")
+    s"""md AS (SELECT $keyCols, list_transform(s, w -> md5(w)) AS hs FROM sh),
+       |mh AS (SELECT $keyCols,
+       |${slices.mkString(",\n")}
        |FROM md),
-       |bands0 AS (
-       |  ${duckBandSelects("doc_id")}),
-       |bands AS (SELECT * FROM bands0
-       |  QUALIFY count(*) OVER (PARTITION BY bidx, bval) <= 500),
+       |bands AS (
+       |  ${bandRows.mkString("\n  UNION ALL ")})""".stripMargin
+  }
+
+  /** Dedup.capBuckets at the operators' default cap of 500, as a
+    * QUALIFY clause over a `(…, bidx, bval)` relation.
+    */
+  private val duckBucketCap =
+    "QUALIFY count(*) OVER (PARTITION BY bidx, bval) <= 500"
+
+  /** `cand(doc_a, doc_b)`: the capped band self join of
+    * [[Dedup.minHashPairs]] over the doc_id-keyed minhash bands of `sh`.
+    */
+  private def duckMinhashCand: String =
+    s"""${duckMinhashBands("doc_id")},
+       |capped AS (SELECT * FROM bands $duckBucketCap),
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
+       |  FROM capped a JOIN capped b
        |    ON a.bidx = b.bidx AND a.bval = b.bval AND a.doc_id < b.doc_id)""".stripMargin
+
+  /** Exact Jaccard of the DuckDB lists `a` and `b` — Dedup's
+    * size(array_intersect) / size(array_union).
+    */
+  private def duckJaccard(a: String, b: String): String =
+    s"len(list_intersect($a, $b)) / len(list_distinct(list_concat($a, $b)))"
 
   /** The Jaccard-verified `pairs(doc_a, doc_b, jaccard)` over the `sh`
     * and `cand` CTEs — exactly the rows of [[Dedup.minHashPairs]] at its
     * default 0.8 threshold.
     */
-  private val duckPairs: String =
-    """pairs AS (
-      |  SELECT doc_a, doc_b,
-      |    len(list_intersect(a.s, b.s)) /
-      |      len(list_distinct(list_concat(a.s, b.s))) AS jaccard
-      |  FROM cand JOIN sh a ON a.doc_id = doc_a JOIN sh b ON b.doc_id = doc_b
-      |  WHERE len(list_intersect(a.s, b.s)) /
-      |    len(list_distinct(list_concat(a.s, b.s))) >= 0.8)""".stripMargin
+  private val duckPairs: String = {
+    val j = duckJaccard("a.s", "b.s")
+    s"""pairs AS (
+       |  SELECT doc_a, doc_b, $j AS jaccard
+       |  FROM cand JOIN sh a ON a.doc_id = doc_a JOIN sh b ON b.doc_id = doc_b
+       |  WHERE $j >= 0.8)""".stripMargin
+  }
 
   /** `WITH RECURSIVE` head of the connected-components oracles: the
     * planted corpus's verified `pairs`, their recursive transitive
@@ -124,12 +140,7 @@ object PipelineQueries {
   val dedupHotBuckets: QueryDef = QueryDef("dedup_hot_buckets",
     (s, dir) => Dedup.hotBuckets(docs(s, dir), maxBucket = 1),
     Some(s"""WITH ${duckShingles()},
-            |md AS (SELECT doc_id, list_transform(s, w -> md5(w)) AS hs FROM sh),
-            |mh AS (SELECT doc_id,
-            |$duckMinhashSlices
-            |FROM md),
-            |bands AS (
-            |  ${duckBandSelects("doc_id")})
+            |${duckMinhashBands("doc_id")}
             |SELECT bidx, bval, count(*) AS bucket_size
             |FROM bands GROUP BY bidx, bval HAVING count(*) > 1""".stripMargin))
 
@@ -212,9 +223,7 @@ object PipelineQueries {
             |  list_distinct(list_transform(generate_series(1, length(text) - 3),
             |    i -> substr(text, i, 4))) AS g
             |  FROM documents)
-            |SELECT doc_a, doc_b,
-            |  len(list_intersect(ga.g, gb.g)) /
-            |    len(list_distinct(list_concat(ga.g, gb.g))) AS char_jaccard
+            |SELECT doc_a, doc_b, ${duckJaccard("ga.g", "gb.g")} AS char_jaccard
             |FROM cand JOIN grams ga ON ga.doc_id = doc_a
             |          JOIN grams gb ON gb.doc_id = doc_b""".stripMargin))
 
@@ -237,37 +246,26 @@ object PipelineQueries {
           .selectExpr("doc_id + 1000000000 AS doc_id", "text"))
     },
     Some {
-      s"""WITH allw AS (
-         |  SELECT 'e' AS side, doc_id, string_split(text, ' ') AS ws FROM documents
+      val j = duckJaccard("a.s", "b.s")
+      s"""WITH alld AS (
+         |  SELECT 'e' AS side, doc_id, text FROM documents
          |  UNION ALL
-         |  SELECT 'n' AS side, doc_id + 1000000000 AS doc_id,
-         |         string_split(text, ' ') AS ws
+         |  SELECT 'n' AS side, doc_id + 1000000000 AS doc_id, text
          |  FROM documents WHERE doc_id % 7 = 0),
-         |sh AS (SELECT side, doc_id,
-         |  list_distinct(list_transform(generate_series(1, len(ws) - 2),
-         |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
-         |  FROM allw WHERE len(ws) >= 3),
-         |md AS (SELECT side, doc_id, list_transform(s, w -> md5(w)) AS hs FROM sh),
-         |mh AS (SELECT side, doc_id,
-         |$duckMinhashSlices
-         |FROM md),
-         |bands AS (
-         |  ${duckBandSelects("side, doc_id")}),
+         |${duckShingles("alld", "side, doc_id")},
+         |${duckMinhashBands("side, doc_id")},
          |ebands AS (SELECT doc_id, bidx, bval FROM bands WHERE side = 'e'
-         |  QUALIFY count(*) OVER (PARTITION BY bidx, bval) <= 500),
+         |  $duckBucketCap),
          |nbands AS (SELECT doc_id, bidx, bval FROM bands WHERE side = 'n'),
          |cand AS (
          |  SELECT DISTINCT n.doc_id AS new_id, e.doc_id AS old_id
          |  FROM nbands n JOIN ebands e
          |    ON n.bidx = e.bidx AND n.bval = e.bval)
-         |SELECT new_id, old_id,
-         |  len(list_intersect(a.s, b.s)) /
-         |    len(list_distinct(list_concat(a.s, b.s))) AS jaccard
+         |SELECT new_id, old_id, $j AS jaccard
          |FROM cand
          |JOIN sh a ON a.side = 'n' AND a.doc_id = new_id
          |JOIN sh b ON b.side = 'e' AND b.doc_id = old_id
-         |WHERE len(list_intersect(a.s, b.s)) /
-         |    len(list_distinct(list_concat(a.s, b.s))) >= 0.8""".stripMargin
+         |WHERE $j >= 0.8""".stripMargin
     })
 
   val dedupEmbedding: QueryDef = QueryDef("dedup_embedding",
@@ -419,14 +417,10 @@ object PipelineQueries {
     * comparison runs over exact integral doubles, so assignments, probes
     * and final rankings are bit-identical to the Spark side.
     */
-  private def duckIvfCtes(kCent: Int, nprobe: Int): String = {
-    val cosAS = cosOf("a.qe", "s.ce")
+  private def duckIvfCtes(kCent: Int, nprobe: Int): String =
     s"""c AS (SELECT vec_id, ${duckQuant("embedding")} AS qe FROM embeddings),
        |${duckKmeansCtes("c", kCent)},
-       |a2 AS (SELECT a.vec_id, s.cid,
-       |         row_number() OVER (PARTITION BY a.vec_id
-       |                            ORDER BY $cosAS DESC, s.cid) AS rn
-       |       FROM c a CROSS JOIN cent s),
+       |${duckRankedCentroids("a2", "a.vec_id, s.cid", "c", "cent")},
        |asg2 AS (SELECT vec_id, cid FROM a2 WHERE rn = 1),
        |pq AS (SELECT vec_id AS q_id, qe FROM c WHERE vec_id < 10),
        |${duckProbeCtes("pq", "cent", nprobe)},
@@ -438,7 +432,6 @@ object PipelineQueries {
        |              row_number() OVER (PARTITION BY q_id
        |                                 ORDER BY cos_sim DESC, vec_id) AS rnk
        |            FROM iscored)""".stripMargin
-  }
 
   val annIvfKmeans: QueryDef = QueryDef("ann_ivf_kmeans",
     (s, dir) => Similarity.ivfKmeansTopK(embs(s, dir), annQueries(s, dir), 3),
@@ -584,10 +577,7 @@ object PipelineQueries {
     s"""${duckPqHead(m, subDim)},
        |${duckPqSeeds("cb", ks)},
        |${duckSeedsCte("c", numCent)},
-       |lasgr AS (SELECT a.vec_id, s.cid AS ccid,
-       |            row_number() OVER (PARTITION BY a.vec_id
-       |              ORDER BY ${cosOf("a.qe", "s.ce")} DESC, s.cid) AS rn
-       |          FROM c a CROSS JOIN seeds s),
+       |${duckRankedCentroids("lasgr", "a.vec_id, s.cid AS ccid", "c", "seeds")},
        |lists AS (SELECT vec_id, ccid FROM lasgr WHERE rn = 1),
        |qq AS (SELECT vec_id AS q_id, qe FROM c WHERE vec_id < 10),
        |${duckProbeCtes("qq", "seeds", nprobe)},
@@ -636,10 +626,7 @@ object PipelineQueries {
     val subDim = 64 / m
     s"""${duckPqHead(m, subDim)},
        |${duckKmeansCtes("c", numCent)},
-       |lasgr AS (SELECT a.vec_id, s.cid AS ccid,
-       |            row_number() OVER (PARTITION BY a.vec_id
-       |              ORDER BY ${cosOf("a.qe", "s.ce")} DESC, s.cid) AS rn
-       |          FROM c a CROSS JOIN cent s),
+       |${duckRankedCentroids("lasgr", "a.vec_id, s.cid AS ccid", "c", "cent")},
        |lists AS (SELECT vec_id, ccid FROM lasgr WHERE rn = 1),
        |rc AS (SELECT c.vec_id, l.ccid,
        |         list_transform(generate_series(1, 64),

@@ -96,6 +96,20 @@ object Sql {
     s"""seeds AS (SELECT CAST(vec_id AS INT) AS cid, qe AS ce FROM $src
        |          WHERE vec_id < $k)""".stripMargin
 
+  /** The centroid ranking of every k-means / IVF oracle: CTE `name`
+    * crosses each row `a` of the quantized `(id, qe)` CTE `src` with
+    * each centroid `s` of the `(cid, ce)` CTE `cents`, keeps the
+    * `cols` selected over those aliases, and adds `rn`, the centroid's
+    * rank for that row by cosine, ties to the smaller cid. `rn = 1` is
+    * the assignment (argmax cosine); `rn <= nprobe` are the probes.
+    */
+  def duckRankedCentroids(name: String, cols: String, src: String,
+                          cents: String, id: String = "vec_id"): String =
+    s"""$name AS (SELECT $cols,
+       |         row_number() OVER (PARTITION BY a.$id
+       |           ORDER BY ${cosOf("a.qe", "s.ce")} DESC, s.cid) AS rn
+       |       FROM $src a CROSS JOIN $cents s)""".stripMargin
+
   /** DuckDB mirror of Similarity's seeded k-means over the quantized
     * `(vec_id, qe)` CTE named `src`: CTEs `seeds` ([[duckSeedsCte]]),
     * `a1`/`asg1` (argmax cosine, ties to the smaller cid) and `cent`
@@ -103,19 +117,14 @@ object Sql {
     * grid). Every comparison runs over exact integral doubles, so
     * assignments and centroids are bit-identical to the Spark side.
     */
-  def duckKmeansCtes(src: String, k: Int): String = {
-    val cosAS = cosOf("a.qe", "s.ce")
+  def duckKmeansCtes(src: String, k: Int): String =
     s"""${duckSeedsCte(src, k)},
-       |a1 AS (SELECT a.vec_id, a.qe, s.cid,
-       |         row_number() OVER (PARTITION BY a.vec_id
-       |                            ORDER BY $cosAS DESC, s.cid) AS rn
-       |       FROM $src a CROSS JOIN seeds s),
+       |${duckRankedCentroids("a1", "a.vec_id, a.qe, s.cid", src, "seeds")},
        |asg1 AS (SELECT vec_id, qe, cid FROM a1 WHERE rn = 1),
        |cent AS (SELECT cid, list(fd ORDER BY d) AS ce FROM (
        |           SELECT cid, d, FLOOR(SUM(qe[d]) / COUNT(*)) AS fd
        |           FROM asg1, (SELECT unnest(generate_series(1, 64)) AS d) dims
        |           GROUP BY cid, d) GROUP BY cid)""".stripMargin
-  }
 
   /** The IVF probe rule: every query of the `(q_id, qe)` CTE named
     * `queries` probes the `nprobe` centroids of the `(cid, ce)` CTE
@@ -124,11 +133,8 @@ object Sql {
     * the offset a residual index adds back into its score.
     */
   def duckProbeCtes(queries: String, cents: String, nprobe: Int): String =
-    s"""pr AS (SELECT q.q_id, q.qe AS q_emb, s.cid,
-       |         list_dot_product(q.qe, s.ce) AS qdot,
-       |         row_number() OVER (PARTITION BY q.q_id
-       |                            ORDER BY ${cosOf("q.qe", "s.ce")} DESC,
-       |                                     s.cid) AS rn
-       |       FROM $queries q CROSS JOIN $cents s),
+    s"""${duckRankedCentroids("pr",
+         "a.q_id, a.qe AS q_emb, s.cid, list_dot_product(a.qe, s.ce) AS qdot",
+         queries, cents, id = "q_id")},
        |probes AS (SELECT q_id, q_emb, cid, qdot FROM pr WHERE rn <= $nprobe)""".stripMargin
 }

@@ -71,6 +71,59 @@ class HotBucketSpec extends AnyFunSuite {
     assert(got.toSet.subsetOf(baseline.toSet))
   }
 
+  test("simHashNearPairs: planted identical-fingerprint cluster is capped") {
+    val s = spark
+    import s.implicits._
+    // 200 copies of one text share one fingerprint, so both of its
+    // chunk buckets hold 200 docs — over a cap of 100.
+    val boiler = (1 to 200)
+      .map(i => (100000L + i, "cookie banner accept all cookies to continue browsing this site"))
+      .toDF("doc_id", "text")
+    val corpus = docs.unionByName(boiler)
+    def inCluster(r: Seq[Any]): Boolean =
+      r.take(2).forall(_.asInstanceOf[Long] > 100000L)
+
+    val baseline = rows(Dedup.simHashNearPairs(docs, maxBucket = 100)
+      .select("doc_a", "doc_b"))
+    val got = rows(Dedup.simHashNearPairs(corpus, maxBucket = 100)
+      .select("doc_a", "doc_b"))
+    assert(!got.exists(inCluster), "cluster pairs leaked through the cap")
+    assert(got.toSet.subsetOf(baseline.toSet))
+    // Above the cluster size the cap does not engage: all 200·199/2
+    // in-cluster pairs come back.
+    val uncapped = rows(Dedup.simHashNearPairs(corpus, maxBucket = 1000)
+      .select("doc_a", "doc_b"))
+    assert(uncapped.count(inCluster) == 200 * 199 / 2)
+  }
+
+  test("incrementalNearDups: a new member of a capped existing cluster is admitted") {
+    val s = spark
+    import s.implicits._
+    val text = "the quick brown fox jumps over the lazy dog again and again"
+    // Existing side: the corpus plus a 200-doc boilerplate cluster, whose
+    // band buckets exceed a cap of 100.
+    val existing = docs.unionByName((1 to 200)
+      .map(i => (100000L + i, text)).toDF("doc_id", "text"))
+    // Incoming: one more cluster member and re-arrivals of every 7th doc.
+    val reArrivals = docs.filter("doc_id % 7 = 0")
+      .selectExpr("doc_id + 1000000000 AS doc_id", "text")
+    val incoming = reArrivals.unionByName(Seq((500000L, text))
+      .toDF("doc_id", "text"))
+
+    val got = rows(Dedup.incrementalNearDups(existing, incoming,
+      maxBucket = 100).select("new_id", "old_id"))
+    // The new member generates no candidates, so no pair names it...
+    assert(!got.exists(_.head == 500000L), "capped cluster member matched")
+    // ...while every re-arrival still meets its source.
+    val sources = reArrivals.select("doc_id").as[Long].collect().toSet
+    assert(sources.nonEmpty &&
+      sources.forall(n => got.contains(Seq(n, n - 1000000000L))))
+    // Uncapped, the new member matches all 200 copies.
+    val uncapped = rows(Dedup.incrementalNearDups(existing, incoming,
+      maxBucket = 1000).select("new_id", "old_id"))
+    assert(uncapped.count(_.head == 500000L) == 200)
+  }
+
   test("contamination: boilerplate grams above maxDf are excluded") {
     val s = spark
     import s.implicits._
